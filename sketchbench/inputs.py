@@ -1,4 +1,4 @@
-"""Seeded in-memory inputs for the three workloads.
+"""Seeded in-memory inputs for the workloads.
 
 Every table is a Spark SQL expression over ``spark.range`` (no Python per
 row, no files): the benchmark caches the result in executor memory during
@@ -20,14 +20,6 @@ from pyspark.sql import functions as F
 
 EXTS = ["py", "java", "rs", "go", "md"]
 LANGS = ["python", "java", "rust", "go", "markdown"]
-
-
-def sha_key(tag: str, seed: int, *parts) -> F.Column:
-    """64-hex content-sha key: sha2(tag || seed || ':' || parts...)."""
-    cols = [F.lit(f"{tag}{seed}")]
-    for p in parts:
-        cols += [F.lit(":"), p.cast("string")]
-    return F.sha2(F.concat(*cols), 256)
 
 
 def _code_columns(i: F.Column, seed: int, repo: F.Column, content: F.Column):
@@ -137,56 +129,6 @@ def tenant_skew_probe(spark: SparkSession, seed: int, keys_per_tenant: int,
     return spark.range(0, 2 * n, 1, parts).select(
         tenant_name(t).alias("repo"), key.alias("key"),
         true.cast("long").alias("true_count"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# window_churn: sliding window of batches
-# ---------------------------------------------------------------------------
-#
-# Batch b holds row r in [0, 3S) with id u = b*S + (r mod 2S): ids in
-# [bS, bS+S) appear twice, ids in [bS+S, bS+2S) once.  So id u with
-# a = floor(u / S) has count 2 in batch a and 1 in batch a-1, and its
-# true count in a window of live batches [lo, hi] is
-# 2*[lo <= a <= hi] + 1*[lo <= a-1 <= hi].
-
-WINDOW_TENANTS = 64
-
-
-def window_key(seed: int, u: F.Column) -> F.Column:
-    return sha_key("win", seed, u)
-
-
-def window_batch(spark: SparkSession, seed: int, b: int, step_ids: int,
-                 parts: int) -> DataFrame:
-    r = F.col("id")
-    u = F.lit(b * step_ids) + r % (2 * step_ids)
-    return spark.range(0, 3 * step_ids, 1, parts).select(
-        window_key(seed, u).alias("key"),
-        F.concat(F.lit("t"), (u % WINDOW_TENANTS).cast("string")).alias("tenant"),
-    )
-
-
-def window_probe(spark: SparkSession, seed: int, lo: int, hi: int, step_ids: int,
-                 parts: int) -> DataFrame:
-    """Probe rows for live batches [lo, hi]: every id of batches lo-1..hi
-    (the ids of batch lo-1 alone have expired) plus ``step_ids``
-    never-seen keys, each with its true count."""
-    first, last = (lo - 1) * step_ids, (hi + 2) * step_ids
-    span = last - first
-    i = F.col("id")
-    seen = i < span
-    u = F.lit(first) + i
-    a = F.floor(u / step_ids)
-
-    def live(b):
-        return ((b >= lo) & (b <= hi)).cast("long")
-
-    true = F.when(seen, 2 * live(a) + live(a - 1)).otherwise(F.lit(0))
-    key = F.when(seen, window_key(seed, u)).otherwise(sha_key("win-absent", seed, i))
-    return spark.range(0, span + step_ids, 1, parts).select(
-        key.alias("key"), true.cast("long").alias("true_count"),
-        seen.alias("seen"),
     )
 
 

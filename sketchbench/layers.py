@@ -11,8 +11,6 @@ from __future__ import annotations
 
 import statistics
 
-import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -20,7 +18,7 @@ import bloomspark as bs
 from bloomspark.build import merge_partial_rows
 from bloomspark.hashing import Keys
 
-from .workloads import P_TARGET, checkpoint
+from .workloads import P_TARGET, checkpoint, noop_udf
 
 #: Keys hashed and tested by the driver-side kernels.
 DRIVER_KEYS = 1_000_000
@@ -51,16 +49,6 @@ UNITS = {
 def noop_sink(df: DataFrame) -> None:
     """Run ``df`` to completion and discard the rows (no disk I/O)."""
     df.write.format("noop").mode("overwrite").save()
-
-
-def _noop_udf():
-    from pyspark.sql.functions import arrow_udf
-
-    @arrow_udf("boolean")
-    def noop(keys: pa.Array) -> pa.Array:
-        return pa.array(np.zeros(len(keys), dtype=bool))
-
-    return noop
 
 
 def _max_over_median(values) -> float:
@@ -105,7 +93,7 @@ def layer_suite(spark, li, ops) -> dict:
     _, out["probe.membership_s"] = call(
         "probe.with_membership_noop", "probe",
         lambda: noop_sink(bs.with_membership(li.probe, "key", bf)))
-    noop = _noop_udf()
+    noop = noop_udf()
     _, out["probe.arrow_noop_s"] = call(
         "probe.arrow_noop", "probe",
         lambda: noop_sink(li.probe.withColumn("member", noop(F.col("key")))))

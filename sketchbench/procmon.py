@@ -1,10 +1,13 @@
 """Peak-RSS sampler over a process tree, and the host steal counter.
 
 The sampler polls ``/proc`` from a daemon thread and keeps, per pid, the
-largest ``VmHWM`` (peak resident set) it saw.  Python processes (the
-driver and PySpark's daemon and workers) add up into ``python_mb``; the
-JVM goes to ``jvm_mb`` separately because its peak follows GC timing and
-varies far more between identical runs.
+largest ``VmHWM`` (peak resident set) it saw.  ``run.py`` runs it over
+the worker process, so the measured process carries no sampler thread;
+``VmHWM`` is the kernel's own high-water mark, so a slow poll loses
+nothing for processes that live until the last sample.  Python processes
+(the driver and PySpark's daemon and workers) add up into ``python_mb``;
+the JVM goes to ``jvm_mb`` separately because its peak follows GC timing
+and varies far more between identical runs.
 """
 
 from __future__ import annotations
@@ -50,7 +53,7 @@ def _status(pid: int):
 
 
 class RssSampler:
-    def __init__(self, root_pid: int, interval_s: float = 0.1):
+    def __init__(self, root_pid: int, interval_s: float = 0.25):
         self.root_pid = root_pid
         self.interval_s = interval_s
         self.peak_kb = {}  # pid -> (name, max VmHWM kB)
@@ -80,6 +83,7 @@ class RssSampler:
             self.sample()
 
     def stop(self) -> dict:
+        """Take a last sample (call it while the tree is still alive)."""
         self._stop.set()
         self._thread.join(timeout=5)
         self.sample()

@@ -2,16 +2,20 @@
 
 Usage, from the repository root::
 
-    python3 sketchbench/run.py --workload repo_index --seed 1 --seconds 10 --trace 0
+    python3 sketchbench/run.py --workload repo_index --seed 1 --seconds 15 --trace 0
 
 The run starts one fresh worker process (its own Spark session on
 ``local[4]``), which sets up, warms every call kind and then times steps
-for ``--seconds``.  ``build_s`` and ``probe_s`` add up each call's median
+for ``--seconds``.  Before every step it times a reference job with no
+bloomspark code; the end-to-end times are wall times scaled by it, so a
+host that runs slower for a while (steal, neighbours on shared caches)
+moves them less.  ``build_s`` and ``probe_s`` add up each call's median
 over the timed steps.  With ``--trace 1`` the process also runs the layer
 suite and the run reports the per-layer metrics.  The last line of
 standard output is the result as JSON; a line on standard error starting
 with ``sketchbench: covariates`` carries the host steal time, the JVM peak
-memory and every call's timed samples.  See sketchbench/README.md.
+memory, the unscaled wall times and every call's timed samples.  See
+sketchbench/README.md.
 """
 
 from __future__ import annotations
@@ -24,14 +28,21 @@ import signal
 import statistics
 import subprocess
 import sys
+import threading
 import time
+
+from procmon import RssSampler, steal_jiffies
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(ROOT, ".sketchbench_work")
 #: Traced runs leave their spans here, one JSON file per run.
 SPANS = os.path.join(ROOT, ".sketchbench_spans")
-WORKLOADS = ("repo_index", "tenant_skew", "window_churn")
+WORKLOADS = ("repo_index", "tenant_skew")
+#: The end-to-end times are reported in seconds at the speed where the
+#: reference job (``Workload.reference``) takes this long, which is about
+#: what it takes on a quiet 4-core host.
+REFERENCE_S = 0.5
 #: Hard limit for the worker process, so that a run ends within 180 s.
 PROC_TIMEOUT_S = 170.0
 
@@ -91,8 +102,10 @@ def run_worker(args) -> dict:
     if args.trace:
         os.makedirs(SPANS, exist_ok=True)
         cmd += ["--spans-out", os.path.join(SPANS, f"{args.workload}-seed{args.seed}.json")]
+    steal0 = steal_jiffies()
     proc = subprocess.Popen(cmd, cwd=ROOT, env=env, stdout=subprocess.PIPE,
                             start_new_session=True, text=True)
+    sampler = RssSampler(proc.pid).start()
 
     def on_term(signum, frame):
         stop_group(proc.pid)
@@ -100,32 +113,48 @@ def run_worker(args) -> dict:
 
     signal.signal(signal.SIGTERM, on_term)
     signal.signal(signal.SIGINT, on_term)
+    watchdog = threading.Timer(PROC_TIMEOUT_S, stop_group, (proc.pid,))
+    watchdog.start()
+    line = ""
     try:
-        out, _ = proc.communicate(timeout=PROC_TIMEOUT_S)
-    except subprocess.TimeoutExpired:
-        stop_group(proc.pid)
-        proc.communicate()
-        raise RuntimeError("the worker timed out")
+        for line in proc.stdout:
+            if line.startswith("{"):
+                break
+        # the worker has printed its result and its tree is still alive
+        rss = sampler.stop()
+        steal = steal_jiffies() - steal0
     finally:
+        watchdog.cancel()
         stop_group(proc.pid)
+        proc.stdout.close()
+        proc.wait()
         shutil.rmtree(work_dir, ignore_errors=True)
-    lines = [ln for ln in out.splitlines() if ln.startswith("{")]
-    if proc.returncode != 0 or not lines:
-        raise RuntimeError(f"the worker exited with {proc.returncode}")
-    result = json.loads(lines[-1])
+    if not line.startswith("{"):
+        raise RuntimeError(f"the worker exited with {proc.returncode} and no result")
+    result = json.loads(line)
+    result["rss"] = rss
+    result["steal_jiffies"] = steal
     result["wall_s"] = time.monotonic() - t0
     return result
 
 
+def reference_units(r, seconds: float) -> float:
+    """``seconds`` over the run's median reference job, in seconds at the
+    reference speed."""
+    return REFERENCE_S * seconds / statistics.median(s["reference"] for s in r["steps"])
+
+
 def phase_seconds(r, phase: str) -> float:
-    """Sum over the phase's calls of each call's median over the steps."""
+    """Sum over the phase's calls of each call's median over the steps, in
+    seconds at the reference speed."""
     names = r["steps"][0][phase]
-    return sum(statistics.median(s[phase][n] for s in r["steps"]) for n in names)
+    return reference_units(r, sum(statistics.median(s[phase][n] for s in r["steps"])
+                                  for n in names))
 
 
 def combine_untraced(r) -> dict:
     values = {
-        "setup_s": r["setup_s"],
+        "setup_s": reference_units(r, r["setup_s"]),
         "build_s": phase_seconds(r, "build"),
         "probe_s": phase_seconds(r, "probe"),
         "fpp_ratio": r["fpp_ratio"],
@@ -181,8 +210,10 @@ def main(argv=None) -> int:
     covariates = {
         "steal_jiffies": r["steal_jiffies"],
         "jvm_peak_rss_mb": r["rss"]["jvm_mb"],
-        "setup_s": r["setup_s"],
+        "setup_wall_s": r["setup_s"],
+        "setup_marks": r["setup_marks"],
         "wall_s": r["wall_s"],
+        "reference": [s["reference"] for s in r["steps"]],
         "calls": {n: [s[phase][n] for s in r["steps"]]
                   for phase in ("build", "probe") for n in r["steps"][0][phase]},
     }

@@ -13,7 +13,6 @@ import statistics
 import sys
 import time
 
-from .procmon import RssSampler, steal_jiffies
 from .tracing import Tracer
 
 #: local[4] is this benchmark's fixed parallelism: spread between fresh
@@ -25,6 +24,14 @@ MIN_STEPS = 2
 
 def step_seconds(step: dict) -> float:
     return sum(step["build"].values()) + sum(step["probe"].values())
+
+
+def step(wl, ops) -> dict:
+    """The reference job, then one step of the workload."""
+    _, ref = ops.call("bench.reference", "bench", wl.reference)
+    s = wl.step()
+    s["reference"] = ref
+    return s
 
 
 def make_session(work_dir: str):
@@ -63,10 +70,9 @@ def main(argv=None) -> int:
 
     from .workloads import WORKLOADS, Failed, Ops
 
-    sampler = RssSampler(os.getpid()).start()
-    steal0 = steal_jiffies()
     spark = make_session(args.work_dir)
     spark.sparkContext.setLogLevel("ERROR")
+    marks = {"session": time.monotonic() - args.t0}
     cls = WORKLOADS[args.workload]
     run_id = f"{args.workload}-{args.seed}"
     tracer = Tracer(False, args.workload, run_id)
@@ -75,11 +81,13 @@ def main(argv=None) -> int:
     try:
         wl = cls(spark, args.seed, ops)
         wl.setup()
+        marks["inputs"] = time.monotonic() - args.t0
         # untimed steps run every timed call kind: the first call of a kind
         # in a process pays for Python worker start-up and code generation
         for _ in range(wl.WARM_STEPS):
-            wl.step()
+            step(wl, ops)
         result["setup_s"] = time.monotonic() - args.t0
+        result["setup_marks"] = marks
 
         steps = []
         spent = 0.0
@@ -89,7 +97,7 @@ def main(argv=None) -> int:
             # tracing overhead
             tracer.enabled = bool(args.trace) and len(steps) % 2 == 1
             with tracer.span("step", "bench"):
-                s = wl.step()
+                s = step(wl, ops)
             s["traced"] = tracer.enabled
             steps.append(s)
             spent += step_seconds(s)
@@ -114,10 +122,9 @@ def main(argv=None) -> int:
         result["attempted"] = ops.attempted
         result["failed"] = ops.failed
         result["failures"] = ops.failures
-        result["rss"] = sampler.stop()
-        result["steal_jiffies"] = steal_jiffies() - steal0
-    # no spark.stop(): run.py kills the process group (JVM and Python
-    # workers) once this line is read, which is faster than a clean stop
+    # no spark.stop(): run.py takes its last memory sample and kills the
+    # process group (JVM and Python workers) once this line is read, which
+    # is faster than a clean stop
     print(json.dumps(result), flush=True)
     return 0
 
