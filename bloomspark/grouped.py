@@ -1,29 +1,29 @@
-"""Per-group Bloom filters with map-side partials + per-group merge.
+"""Per-group Bloom and counting filters: map-side partials + per-group merge.
 
 Builds one filter per group (e.g. one per ``repo``) as a DataFrame of
-``(group, rows, ones, bitset)``.  The build is two-phase, with the
-partial aggregation on the MAP side (guide shape: aggregate before you
-shuffle):
+``(group, rows, ones, bitset)`` or ``(group, rows, nonzero, counters)``.
+Both builds share one two-phase plan (aggregate before you shuffle):
 
-stage 1: ``mapInArrow`` over the INPUT partitions — one hybrid
-         sparse/dense partial per (input partition, group), so the only
-         thing that ever shuffles is partial payloads, never keyed rows
-         (round-7: the previous (group, salt) row exchange was the
-         build's largest shuffle — 64-byte keys per row at the sharded
-         tier — and is gone entirely);
-stage 2: ``groupBy(group)`` OR-merge of the (at most P, typically far
-         sparser) partials per group.
+stage 1: ``mapInArrow`` over the INPUT partitions, one generator for
+         both builds, parametrized by accumulator.  Each Arrow batch is
+         hashed once and split by group with ONE sort (O(rows log
+         rows), not O(groups x rows)); each group's share feeds its own
+         accumulator, and the task emits one hybrid sparse/dense
+         partial per (input partition, group) — keyed rows never
+         shuffle, only partial payloads;
+stage 2: ``groupBy(group).applyInArrow`` over ``pa.Table``: each
+         group's (at most P) partials merge through
+         ``build._merge_partial_arrays`` or ``build.add_counting_payload``.
 
-Skew: a hot group no longer overloads any reducer because NO reducer
-ever processes rows — stage 1's work follows the input partitioning
-regardless of group values, and stage 2 merges at most
-P x num_bytes per group.  Inputs that plan as too few partitions
-(single-row-group parquet) are spread once on (group, key-salt) —
-``salt_partitions`` bounds the partials per group on that path and is
-otherwise unused.  Memory per task is bounded by
-``_STAGE1_FLUSH_BYTES``: when the live accumulators exceed it, the
-partials flush early and accumulation restarts — stage 2 merges any
-number of partials per group.
+Skew: NO reducer ever processes rows — stage 1's work follows the input
+partitioning regardless of group values, and stage 2 merges at most P
+partials per group.  Inputs that plan as too few partitions
+(single-row-group parquet) are spread once on (group, key-salt);
+``salt_partitions`` bounds the partials per group on that path only.
+Memory per task is bounded by ``_STAGE1_FLUSH_BYTES``: past it the
+partials flush early and accumulation restarts.
+
+The broadcast probes split each batch by group with the same one sort.
 """
 
 from __future__ import annotations
@@ -37,28 +37,44 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .build import _series_to_keys, key_column
-from .counting import add_saturating, counter_dtype, counter_max
-from .filter import BloomFilter, popcount
-from .hashing import get_hash_fn
+from .build import (
+    _CounterAccumulator,
+    _PositionAccumulator,
+    _merge_partial_arrays,
+    _series_to_keys,
+    add_counting_payload,
+    key_column,
+)
+from .counting import counter_dtype
+from .filter import BloomFilter, popcount, test_positions
+from .hashing import Keys, get_hash_fn
 from .params import FilterConfig
 
-GROUPED_SCHEMA = "group string, rows bigint, ones bigint, bitset binary"
-GROUPED_COUNTING_SCHEMA = "group string, rows bigint, nonzero bigint, counters binary"
+
+def _factorize_groups(groups):
+    """(codes, uniques) over a possibly-null Arrow string array.
+
+    A null group gets its own code (dictionary-encoded with
+    ``null_encoding='encode'``), so it builds/probes its own filter
+    like any other value; its unique is the Python ``None``."""
+    if isinstance(groups, pa.ChunkedArray):
+        groups = groups.combine_chunks()
+    enc = groups.dictionary_encode(null_encoding="encode")
+    codes = enc.indices.to_numpy(zero_copy_only=False)
+    return codes, enc.dictionary.to_numpy(zero_copy_only=False).tolist()
 
 
-def _factorize_groups(groups: np.ndarray):
-    """(codes, uniques) over a possibly-null object array of group values.
+def _split_groups(groups):
+    """Split one batch's rows by group: ``(uniques, order, bounds)``.
 
-    ``np.unique`` cannot sort None next to str (TypeError); pandas
-    factorize with ``use_na_sentinel=False`` gives nulls their own code,
-    so a null group builds/probes its own filter like any other value
-    (the round-1 ``groupBy().applyInPandas`` behavior).  Uniques are
-    normalized so null is always the Python ``None`` (dict-key stable)."""
-    codes, uniques = pd.factorize(groups, use_na_sentinel=False)
-    normed = [None if (u is None or (isinstance(u, float) and np.isnan(u))) else u
-              for u in uniques]
-    return codes, normed
+    ``order[bounds[i]:bounds[i + 1]]`` are the rows of ``uniques[i]``,
+    in batch order — one stable argsort and one bincount per batch,
+    instead of one ``codes == gi`` mask per group."""
+    codes, uniq = _factorize_groups(groups)
+    order = np.argsort(codes, kind="stable")
+    bounds = np.zeros(len(uniq) + 1, dtype=np.int64)
+    np.cumsum(np.bincount(codes, minlength=len(uniq)), out=bounds[1:])
+    return uniq, order, bounds.tolist()
 
 
 def _group_sort_key(item):
@@ -68,10 +84,9 @@ def _group_sort_key(item):
 
 #: Per-task budget for live stage-1 accumulator payloads; past it the
 #: accumulated partials flush as an early record batch and accumulation
-#: restarts (stage 2 merges any number of partials per group).
+#: restarts (stage 2 merges any number of partials per group).  Read on
+#: the driver when a stage-1 generator is built.
 _STAGE1_FLUSH_BYTES = 128 << 20
-
-GROUPED_PARTIAL_SCHEMA = "group string, rows bigint, kind string, bitset binary"
 
 
 def _spread_keyed(
@@ -102,37 +117,70 @@ def _spread_keyed(
     )
 
 
-def _grouped_stage1_gen(config: FilterConfig):
+def _split_positions(groups, pos: np.ndarray, m: int):
+    """Bloom batch split: ``(group, rows, (positions,))`` per group of one
+    batch — one stable sort of the rows by group (:func:`_split_groups`)."""
+    uniq, order, bounds = _split_groups(groups)
+    pos = pos[order]
+    return [
+        (g, hi - lo, (pos[lo:hi],)) for g, lo, hi in zip(uniq, bounds, bounds[1:])
+    ]
+
+
+def _split_position_counts(groups, pos: np.ndarray, m: int):
+    """Counting batch split: ``(group, rows, (positions, counts))`` per
+    group of one batch.  ONE ``np.unique`` over the batch's
+    (group code, position) cells pre-aggregates every group at once —
+    the same pairs ``_CounterAccumulator.add`` derives, without its
+    per-group ``np.unique`` call."""
+    codes, uniq = _factorize_groups(groups)
+    if len(uniq) * m >= 1 << 63:  # cells would overflow int64
+        return [
+            (g, n, np.unique(p, return_counts=True))
+            for g, n, (p,) in _split_positions(groups, pos, m)
+        ]
+    cells, counts = np.unique(
+        codes.astype(np.int64)[:, None] * m + pos.astype(np.int64),
+        return_counts=True,
+    )
+    bounds = np.searchsorted(cells, np.arange(len(uniq) + 1) * m).tolist()
+    rows = np.bincount(codes, minlength=len(uniq)).tolist()
+    return [
+        (g, n, ((cells[lo:hi] - gi * m).astype(pos.dtype), counts[lo:hi]))
+        for gi, (g, n, lo, hi) in enumerate(zip(uniq, rows, bounds, bounds[1:]))
+    ]
+
+
+def _grouped_stage1_gen(
+    config: FilterConfig, new_acc, add, split, payload_col: str, pos_bytes: int
+):
     """mapInArrow generator over (__group, __key) batches of the RAW
-    input partitioning: streams batches through one hybrid Bloom
-    accumulator per group and emits ONE sparse/dense partial per
-    (partition, group) — the map-side combine.  No keyed row ever
-    shuffles; peak memory = one Arrow batch + the live accumulators,
-    bounded by the flush budget."""
-    import pyarrow as pa
-
-    from .build import _PositionAccumulator, _encode_dense
-
-    m, k = config.m, config.k
-    method = config.hash_method
-    num_bytes = config.num_bytes
+    input partitioning: hashes each batch once, splits it by group
+    (``split``) and feeds each group's share to that group's
+    ``new_acc()`` accumulator (``add(acc, *share)``); emits ONE partial
+    per (partition, group) — the map-side combine.  ``acc.finish()``
+    returns ``(kind, ..., payload)``.  No keyed row ever shuffles; peak
+    memory = one Arrow batch + the live accumulators, bounded by the
+    flush budget (``pos_bytes`` per hashed position)."""
+    m, k, method = config.m, config.k, config.hash_method
+    flush_bytes = _STAGE1_FLUSH_BYTES
     schema = pa.schema(
         [
             ("group", pa.string()),
             ("rows", pa.int64()),
             ("kind", pa.string()),
-            ("bitset", pa.binary()),
+            (payload_col, pa.binary()),
         ]
     )
 
     def flush(accs):
-        cols = {"group": [], "rows": [], "kind": [], "bitset": []}
+        cols = {"group": [], "rows": [], "kind": [], payload_col: []}
         for g, (acc, rows) in sorted(accs.items(), key=_group_sort_key):
-            kind, _ones, payload = acc.finish()
+            finished = acc.finish()
             cols["group"].append(g)
             cols["rows"].append(rows)
-            cols["kind"].append(kind)
-            cols["bitset"].append(payload)
+            cols["kind"].append(finished[0])
+            cols[payload_col].append(finished[-1])
         return pa.RecordBatch.from_pydict(cols, schema=schema)
 
     def gen(batches):
@@ -140,27 +188,56 @@ def _grouped_stage1_gen(config: FilterConfig):
         pending = 0
         hash_fn = get_hash_fn(method)
         for batch in batches:
-            from .hashing import Keys
-
             keys = Keys.from_arrow(batch.column(1))
             if len(keys) == 0:
                 continue
-            groups = batch.column(0).to_numpy(zero_copy_only=False)
             pos = hash_fn(keys, m, k)
-            codes, uniq = _factorize_groups(groups)
-            for gi, g in enumerate(uniq):
-                mask = codes == gi
-                st = accs.setdefault(g, [_PositionAccumulator(m, num_bytes), 0])
-                st[0].add(pos[mask])
-                st[1] += int(mask.sum())
-            pending += pos.size * 4
-            if pending > _STAGE1_FLUSH_BYTES:
+            for g, rows, share in split(batch.column(0), pos, m):
+                st = accs.get(g)
+                if st is None:
+                    st = accs[g] = [new_acc(), 0]
+                add(st[0], *share)
+                st[1] += rows
+            pending += pos.size * pos_bytes
+            if pending > flush_bytes:
                 yield flush(accs)
                 accs, pending = {}, 0
         if accs:
             yield flush(accs)
 
     return gen
+
+
+def _build_per_group(
+    df, group_col, key_col, salt_partitions, stage1, merge, stat_col, payload_col
+) -> DataFrame:
+    """Plan both stages -> (group, rows, <stat_col>, <payload_col>).
+    Stage 2 is ``groupBy(group).applyInArrow``: one group's partials ->
+    one row, with ``merge(kinds, payloads)`` -> ``(stat, payload_bytes)``."""
+
+    def stage2(tbl: pa.Table) -> pa.Table:
+        stat, payload = merge(
+            tbl.column("kind").to_pylist(), tbl.column(payload_col).to_pylist()
+        )
+        return pa.table({
+            "group": tbl.column("group").slice(0, 1),
+            "rows": pa.array([sum(tbl.column("rows").to_pylist())], pa.int64()),
+            stat_col: pa.array([stat], pa.int64()),
+            payload_col: pa.array([payload], pa.binary()),
+        })
+
+    keyed = df.select(
+        F.col(group_col).cast("string").alias("__group"),
+        key_column(key_col).alias("__key"),
+    )
+    partials = _spread_keyed(keyed, df, salt_partitions).mapInArrow(
+        stage1,
+        schema=f"group string, rows bigint, kind string, {payload_col} binary",
+    )
+    return partials.groupBy("group").applyInArrow(
+        stage2,
+        schema=f"group string, rows bigint, {stat_col} bigint, {payload_col} binary",
+    )
 
 
 def build_bloom_per_group(
@@ -176,27 +253,19 @@ def build_bloom_per_group(
     ``salt_partitions`` only matters when the input needs an explicit
     spread (see :func:`_spread_keyed`); pre-partitioned inputs build
     map-side with zero row shuffle."""
-    from .build import _merge_partial_arrays
+    m, num_bytes = config.m, config.num_bytes
 
-    def stage2(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = _merge_partial_arrays(pdf["kind"], pdf["bitset"], config)
-        return pd.DataFrame(
-            {
-                "group": [pdf["group"].iloc[0]],
-                "rows": [int(pdf["rows"].sum())],
-                "ones": [popcount(acc)],
-                "bitset": [acc.tobytes()],
-            }
-        )
+    def merge(kinds, payloads):
+        acc = _merge_partial_arrays(kinds, payloads, config)
+        return popcount(acc), acc.tobytes()
 
-    keyed = df.select(
-        F.col(group_col).cast("string").alias("__group"),
-        key_column(key_col).alias("__key"),
+    stage1 = _grouped_stage1_gen(
+        config, lambda: _PositionAccumulator(m, num_bytes),
+        _PositionAccumulator.add, _split_positions, "bitset", 4,
     )
-    partials = _spread_keyed(keyed, df, salt_partitions).mapInArrow(
-        _grouped_stage1_gen(config), schema=GROUPED_PARTIAL_SCHEMA
+    return _build_per_group(
+        df, group_col, key_col, salt_partitions, stage1, merge, "ones", "bitset"
     )
-    return partials.groupBy("group").applyInPandas(stage2, schema=GROUPED_SCHEMA)
 
 
 def build_counting_per_group(
@@ -214,80 +283,25 @@ def build_counting_per_group(
     to saturation (final counter = min(true sum, max) under ANY partial
     grouping), so the map-side partials merge to the identical counter
     arrays the row-shuffled build produced."""
-    from .build import _CounterAccumulator, add_counting_payload
+    from .build import _COUNTING_DENSE_ALLOC_LIMIT
 
-    m, k = config.m, config.k
-    method = config.hash_method
+    dense_limit = _COUNTING_DENSE_ALLOC_LIMIT  # freeze policy driver-side
     dt = counter_dtype(config.counting_bits)
-    mx = counter_max(config.counting_bits)
 
-    def stage1_gen(batches):
-        # streaming per-group hybrid counter accumulation — the map-side
-        # combine; emits csparse/cdense partials, never keyed rows
-        import pyarrow as pa
-
-        from .hashing import Keys
-
-        pa_schema = pa.schema(
-            [("group", pa.string()), ("rows", pa.int64()),
-             ("kind", pa.string()), ("counters", pa.binary())]
-        )
-
-        def flush(states):
-            cols = {"group": [], "rows": [], "kind": [], "counters": []}
-            for g, (acc, rows) in sorted(states.items(), key=_group_sort_key):
-                kind, _nonzero, _over, payload = acc.finish()
-                cols["group"].append(g)
-                cols["rows"].append(rows)
-                cols["kind"].append(kind)
-                cols["counters"].append(payload)
-            return pa.RecordBatch.from_pydict(cols, schema=pa_schema)
-
-        states = {}
-        pending = 0
-        hash_fn = get_hash_fn(method)
-        for batch in batches:
-            keys = Keys.from_arrow(batch.column(1))
-            if len(keys) == 0:
-                continue
-            groups = batch.column(0).to_numpy(zero_copy_only=False)
-            pos = hash_fn(keys, m, k)
-            codes, uniq = _factorize_groups(groups)
-            for gi, g in enumerate(uniq):
-                mask = codes == gi
-                st = states.setdefault(g, [_CounterAccumulator(config), 0])
-                st[0].add(pos[mask])
-                st[1] += int(mask.sum())
-            pending += pos.size * 8
-            if pending > _STAGE1_FLUSH_BYTES:
-                yield flush(states)
-                states, pending = {}, 0
-        if states:
-            yield flush(states)
-
-    def stage2(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = np.zeros(m, dtype=dt)
+    def merge(kinds, payloads):
+        acc = np.zeros(config.m, dtype=dt)
         noop_overflow = lambda n: None  # noqa: E731 — clamp count not surfaced
-        for kind, b in zip(pdf["kind"], pdf["counters"]):
+        for kind, b in zip(kinds, payloads):
             add_counting_payload(acc, kind, b, config, noop_overflow)
-        return pd.DataFrame(
-            {
-                "group": [pdf["group"].iloc[0]],
-                "rows": [int(pdf["rows"].sum())],
-                "nonzero": [int(np.count_nonzero(acc))],
-                "counters": [acc.tobytes()],
-            }
-        )
+        return int(np.count_nonzero(acc)), acc.tobytes()
 
-    keyed = df.select(
-        F.col(group_col).cast("string").alias("__group"),
-        key_column(key_col).alias("__key"),
+    stage1 = _grouped_stage1_gen(
+        config, lambda: _CounterAccumulator(config, dense_limit),
+        _CounterAccumulator.add_pairs, _split_position_counts, "counters", 8,
     )
-    partials = _spread_keyed(keyed, df, salt_partitions).mapInArrow(
-        stage1_gen, schema="group string, rows bigint, kind string, counters binary"
-    )
-    return partials.groupBy("group").applyInPandas(
-        stage2, schema=GROUPED_COUNTING_SCHEMA
+    return _build_per_group(
+        df, group_col, key_col, salt_partitions, stage1, merge,
+        "nonzero", "counters",
     )
 
 
@@ -300,17 +314,6 @@ def collect_group_filters(grouped: DataFrame, config: FilterConfig) -> dict:
     return {
         g: BloomFilter.from_bytes(config, bytes(b))
         for g, b in zip(pdf["group"], pdf["bitset"])
-    }
-
-
-def collect_group_counting_filters(grouped: DataFrame, config: FilterConfig) -> dict:
-    """Collect a per-group counting build into {group: CountingBloomFilter}."""
-    from .counting import CountingBloomFilter
-
-    pdf = grouped.select("group", "counters").toPandas()
-    return {
-        g: CountingBloomFilter.from_bytes(config, bytes(b))
-        for g, b in zip(pdf["group"], pdf["counters"])
     }
 
 
@@ -392,6 +395,75 @@ def _cogroup_probe(
     )
 
 
+def _group_probe(
+    strategy: str,
+    df: DataFrame,
+    group_col: str,
+    key_col: str,
+    grouped_state: DataFrame,
+    state_col: str,
+    dtype,
+    config: FilterConfig,
+    out_col: str,
+    out_type,
+    lookup,
+) -> DataFrame:
+    """Shared body of the grouped probes: hash each row's key and read
+    its own group's state (a ``dtype`` array) with
+    ``lookup(state, pos)``; rows whose group has no state read 0 / False.
+
+    'broadcast' collects the state once (Arrow ``toPandas``) as a
+    {group: bytes} dict and splits each batch by group with one sort
+    (:func:`_split_groups`); 'cogroup' hands each group's single state
+    row to :func:`_cogroup_probe`."""
+    from pyspark.sql.functions import arrow_udf
+    from pyspark.sql.types import BooleanType
+
+    m, k, method = config.m, config.k, config.hash_method
+    out_dtype = bool if isinstance(out_type, BooleanType) else np.int64
+
+    if strategy == "cogroup":
+
+        def probe_fn(keys: pd.Series, raw):
+            out = np.zeros(len(keys), dtype=out_dtype)
+            if raw is not None:
+                pos = get_hash_fn(method)(_series_to_keys(keys), m, k)
+                out[:] = lookup(np.frombuffer(raw, dtype), pos)
+            return out
+
+        return _cogroup_probe(
+            df, group_col, key_col, grouped_state, state_col,
+            out_col, out_type, probe_fn,
+        )
+    pdf = grouped_state.select("group", state_col).toPandas()
+    bc = df.sparkSession.sparkContext.broadcast(
+        {g: bytes(b) for g, b in zip(pdf["group"], pdf[state_col])}
+    )
+
+    @arrow_udf(out_type)
+    def probe(groups: pa.Array, keys: pa.Array) -> pa.Array:
+        table = bc.value
+        kb = Keys.from_arrow(
+            keys.combine_chunks() if isinstance(keys, pa.ChunkedArray) else keys
+        )
+        uniq, order, bounds = _split_groups(groups)
+        pos = get_hash_fn(method)(kb, m, k)[order]
+        out = np.zeros(len(kb), dtype=out_dtype)
+        for g, lo, hi in zip(uniq, bounds, bounds[1:]):
+            raw = table.get(g)
+            if raw is not None:
+                out[order[lo:hi]] = lookup(np.frombuffer(raw, dtype), pos[lo:hi])
+        return pa.array(out)
+
+    return df.withColumn(
+        out_col, probe(F.col(group_col).cast("string"), key_column(key_col))
+    )
+
+
+def _min_count(counters: np.ndarray, pos: np.ndarray) -> np.ndarray:
+    return counters[pos].min(axis=1)
+
+
 def with_group_estimated_count(
     df: DataFrame,
     group_col: str,
@@ -414,60 +486,16 @@ def with_group_estimated_count(
     ``max_broadcast_bytes`` (or ``strategy='cogroup'``), routes to the
     never-collected cogroup plan instead (see
     :func:`with_group_membership` for the trade-off)."""
+    from pyspark.sql.types import LongType
 
-    from .counting import counter_dtype
-    from .hashing import get_hash_fn
-
-    m, k, method = config.m, config.k, config.hash_method
     dt = counter_dtype(config.counting_bits)
     chosen = _resolve_probe_strategy(
-        strategy, grouped_counters, m * dt.itemsize, max_broadcast_bytes,
+        strategy, grouped_counters, config.m * dt.itemsize, max_broadcast_bytes,
         n_groups,
     )
-    if chosen == "cogroup":
-        from pyspark.sql.types import LongType
-
-        def est(keys: pd.Series, raw):
-            if raw is None:
-                return np.zeros(len(keys), dtype=np.int64)
-            counters = np.frombuffer(raw, dtype=dt)
-            pos = get_hash_fn(method)(_series_to_keys(keys), m, k)
-            return counters[pos].min(axis=1).astype(np.int64)
-
-        return _cogroup_probe(
-            df, group_col, key_col, grouped_counters, "counters",
-            out_col, LongType(), est,
-        )
-    fdf = grouped_counters.select("group", "counters").toPandas()
-    table = {g: bytes(b) for g, b in zip(fdf["group"], fdf["counters"])}
-    bc = df.sparkSession.sparkContext.broadcast(table)
-
-    from pyspark.sql.functions import arrow_udf
-
-    @arrow_udf("long")
-    def probe(groups: pa.Array, keys: pa.Array) -> pa.Array:
-        from .hashing import Keys
-
-        counters_by_group = bc.value
-        kb = Keys.from_arrow(
-            keys.combine_chunks() if isinstance(keys, pa.ChunkedArray) else keys
-        )
-        pos = get_hash_fn(method)(kb, m, k)
-        out = np.zeros(len(kb), dtype=np.int64)
-        codes, uniques = _factorize_groups(
-            groups.to_numpy(zero_copy_only=False)
-        )
-        for ui, g in enumerate(uniques):
-            raw = counters_by_group.get(g)
-            if raw is None:
-                continue
-            idx = np.nonzero(codes == ui)[0]
-            counters = np.frombuffer(raw, dtype=dt)
-            out[idx] = counters[pos[idx]].min(axis=1).astype(np.int64)
-        return pa.array(out)
-
-    return df.withColumn(
-        out_col, probe(F.col(group_col).cast("string"), key_column(key_col))
+    return _group_probe(
+        chosen, df, group_col, key_col, grouped_counters, "counters", dt,
+        config, out_col, LongType(), _min_count,
     )
 
 
@@ -491,8 +519,8 @@ def with_group_membership(
     - ``'broadcast'`` (the default when the state fits): the filters
       table is collected once on the driver (Arrow ``toPandas``) and
       broadcast to the executors as a ``{group: bitset}`` dict —
-      exactly like the single-filter probe (probe.py:29-43).  The probe
-      UDF receives ONLY the (group, key) columns; the multi-MB bitsets
+      exactly like the single-filter probe (probe.py:29-43); each batch
+      is split by group with one sort.  The probe UDF receives ONLY the (group, key) columns; the multi-MB bitsets
       never appear as a per-row column, so Arrow batch volume is
       O(rows × key_bytes), not O(rows × m/8).  (Round-1 shipped the
       bitset per probe row through a broadcast join — petabytes of
@@ -514,58 +542,13 @@ def with_group_membership(
     shape of the reference's pipelined bulk contains
     (redis/BloomFilterRedis.java:75-97) at per-tenant granularity.
     """
+    from pyspark.sql.types import BooleanType
 
-    from .filter import test_positions
-    from .hashing import get_hash_fn
-
-    m, k, method = config.m, config.k, config.hash_method
     chosen = _resolve_probe_strategy(
         strategy, grouped_filters, config.num_bytes, max_broadcast_bytes,
         n_groups,
     )
-    if chosen == "cogroup":
-        from pyspark.sql.types import BooleanType
-
-        def member(keys: pd.Series, raw):
-            if raw is None:
-                return np.zeros(len(keys), dtype=bool)
-            bits = np.frombuffer(raw, dtype=np.uint8)
-            pos = get_hash_fn(method)(_series_to_keys(keys), m, k)
-            return test_positions(bits, pos)
-
-        return _cogroup_probe(
-            df, group_col, key_col, grouped_filters, "bitset",
-            out_col, BooleanType(), member,
-        )
-    fdf = grouped_filters.select("group", "bitset").toPandas()
-    filters = {g: bytes(b) for g, b in zip(fdf["group"], fdf["bitset"])}
-    bc = df.sparkSession.sparkContext.broadcast(filters)
-
-    from pyspark.sql.functions import arrow_udf
-
-    @arrow_udf("boolean")
-    def probe(groups: pa.Array, keys: pa.Array) -> pa.Array:
-        from .hashing import Keys
-
-        table = bc.value
-        kb = Keys.from_arrow(
-            keys.combine_chunks() if isinstance(keys, pa.ChunkedArray) else keys
-        )
-        pos = get_hash_fn(method)(kb, m, k)
-        out = np.zeros(len(kb), dtype=bool)
-        # factorize by group: one vectorized bit-test per distinct filter
-        codes, uniques = _factorize_groups(
-            groups.to_numpy(zero_copy_only=False)
-        )
-        for ui, g in enumerate(uniques):
-            raw = table.get(g)
-            if raw is None:
-                continue
-            idx = np.nonzero(codes == ui)[0]
-            bits = np.frombuffer(raw, dtype=np.uint8)
-            out[idx] = test_positions(bits, pos[idx])
-        return pa.array(out)
-
-    return df.withColumn(
-        out_col, probe(F.col(group_col).cast("string"), key_column(key_col))
+    return _group_probe(
+        chosen, df, group_col, key_col, grouped_filters, "bitset", np.uint8,
+        config, out_col, BooleanType(), test_positions,
     )

@@ -198,24 +198,22 @@ def build_sketch_per_group(
         ).alias("__salt"),
     )
 
-    from ..grouped import _factorize_groups, _group_sort_key
+    from ..grouped import _group_sort_key, _split_groups
 
     def stage1(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         states: dict = {}
         for batch in batches:
-            groups = batch.column(0).to_numpy(zero_copy_only=False)
-            vals_all = batch.column(1)
-            if len(groups) == 0:
+            if batch.num_rows == 0:
                 continue
-            # null-safe factorization (np.unique cannot sort None next
-            # to str, and str(None) would corrupt the null group)
-            codes, uniq = _factorize_groups(groups)
-            for gi, g in enumerate(uniq):
-                mask = codes == gi
-                vals = _decode(vals_all.filter(pa.array(mask)), numeric)
+            # one null-safe sort split per batch (a null group is a
+            # group of its own); slices keep each group's batch order
+            uniq, order, bounds = _split_groups(batch.column(0))
+            vals_all = batch.column(1).take(order)
+            for g, lo, hi in zip(uniq, bounds, bounds[1:]):
+                vals = _decode(vals_all.slice(lo, hi - lo), numeric)
                 st = states.setdefault(g, [sketch.new_state(), 0])
                 sketch.update(st[0], vals)
-                st[1] += int(mask.sum())
+                st[1] += hi - lo
         if not states:
             return
         cols = {"group": [], "rows": [], "payload": []}
@@ -340,20 +338,21 @@ def build_sketch_checkpointed(
         if len(missing) < num_buckets:
             keyed = keyed.where(F.col("__bucket").isin(missing))
 
+        from ..grouped import _split_groups
+
         def gen(batches):
             t0 = time.time()
             states = {}
             for batch in batches:
-                vals_all = batch.column(0)
-                buckets = np.asarray(batch.column(1))
-                if len(buckets) == 0:
+                if batch.num_rows == 0:
                     continue
-                for b in np.unique(buckets):
-                    mask = buckets == b
-                    vals = _decode(vals_all.filter(pa.array(mask)), numeric)
+                uniq, order, bounds = _split_groups(batch.column(1))
+                vals_all = batch.column(0).take(order)
+                for b, lo, hi in zip(uniq, bounds, bounds[1:]):
+                    vals = _decode(vals_all.slice(lo, hi - lo), numeric)
                     st = states.setdefault(int(b), [sketch.new_state(), 0])
                     sketch.update(st[0], vals)
-                    st[1] += int(mask.sum())
+                    st[1] += hi - lo
             if not states:
                 return
             cols = {k: [] for k in ("part_id", "rows", "t_ms", "payload")}

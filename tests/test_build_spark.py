@@ -167,6 +167,70 @@ def test_grouped_counting_build(spark, code_table):
     }
     for repo, cnt in exact.items():
         assert rows[repo]["rows"] == cnt
+    # each group's counters equal a driver-side counting filter over
+    # that group's keys (every row, duplicates included)
+    keys_by_repo = {}
+    for r in code_table.select("repo", "sha").collect():
+        keys_by_repo.setdefault(r["repo"], []).append(r["sha"])
+    for repo, keys in keys_by_repo.items():
+        expected = CountingBloomFilter(cfg)
+        expected.add_batch(keys)
+        assert bytes(rows[repo]["counters"]) == expected.to_bytes(), repo
+        assert rows[repo]["nonzero"] == int(np.count_nonzero(expected.counters))
+
+
+def test_grouped_builds_identical_across_stage1_flushes(spark, monkeypatch):
+    """One hot tenant holds almost every row; a stage-1 budget below one
+    Arrow batch makes every task flush after each batch, so stage 2
+    merges several partials per (task, group).  Both grouped builds
+    must still equal the driver-side filters byte for byte."""
+    import pyarrow as pa
+
+    from bloomspark import grouped
+    from bloomspark.build import _CounterAccumulator, _PositionAccumulator
+
+    cfg = FilterConfig.complete(n=2_000, p=0.01, counting_bits=16)
+    df = spark.range(0, 4_000, 1, 2).select(
+        F.when(F.col("id") % 100 == 7, F.lit("cold"))
+        .when(F.col("id") % 100 == 9, F.lit(None))
+        .otherwise(F.lit("hot"))
+        .alias("g"),
+        (F.col("id") % 1_500).cast("string").alias("k"),
+    )
+    keys_by_group = {}
+    for r in df.collect():
+        keys_by_group.setdefault(r["g"], []).append(r["k"])
+    assert len(keys_by_group["hot"]) > 0.9 * 4_000
+
+    budget = 1 << 10  # far below one 500-row batch of hashed positions
+    monkeypatch.setattr(grouped, "_STAGE1_FLUSH_BYTES", budget)
+    # the budget is read when the generator is built: every batch flushes
+    batches = pa.Table.from_pydict(
+        {"__group": [g for g in keys_by_group for _ in keys_by_group[g]],
+         "__key": [k for g in keys_by_group for k in keys_by_group[g]]}
+    ).to_batches(max_chunksize=500)
+    for new_acc, add, split, col, pos_bytes in (
+        (lambda: _PositionAccumulator(cfg.m, cfg.num_bytes),
+         _PositionAccumulator.add, grouped._split_positions, "bitset", 4),
+        (lambda: _CounterAccumulator(cfg), _CounterAccumulator.add_pairs,
+         grouped._split_position_counts, "counters", 8),
+    ):
+        stage1 = grouped._grouped_stage1_gen(cfg, new_acc, add, split, col, pos_bytes)
+        assert len(list(stage1(iter(batches)))) == len(batches) >= 8
+
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "500")
+    try:
+        gf = {r["group"]: r for r in build_bloom_per_group(df, "g", "k", cfg).collect()}
+        gc = {r["group"]: r for r in build_counting_per_group(df, "g", "k", cfg).collect()}
+    finally:
+        spark.conf.unset("spark.sql.execution.arrow.maxRecordsPerBatch")
+    assert set(gf) == set(gc) == set(keys_by_group)
+    for g, keys in keys_by_group.items():
+        assert gf[g]["rows"] == gc[g]["rows"] == len(keys)
+        assert bytes(gf[g]["bitset"]) == local_filter(cfg, keys).to_bytes(), g
+        expected = CountingBloomFilter(cfg)
+        expected.add_batch(keys)
+        assert bytes(gc[g]["counters"]) == expected.to_bytes(), g
 
 
 def test_datagen_sha_invariant(spark, code_table):
@@ -273,6 +337,52 @@ def test_group_probe_strategy_routing(spark, customer):
         with_group_membership(
             customer, "c_mktsegment", "c_custkey", gf, cfg, strategy="nope"
         )
+
+
+def test_group_probes_match_driver_filters(spark):
+    """Both grouped probes, on batches that interleave every group and
+    mix present keys (counts 1-3) with absent ones, equal a driver-side
+    probe of each row's own group filter, row by row."""
+    from bloomspark.grouped import (
+        with_group_estimated_count,
+        with_group_membership,
+    )
+
+    cfg = FilterConfig.complete(n=300, p=0.2, counting_bits=16)
+    adds = spark.range(0, 1_200, 1, 2).select(
+        (F.col("id") % 7).cast("string").alias("g"),
+        (F.col("id") % 400).cast("string").alias("k"),
+    )
+    probes = spark.range(0, 2_000, 1, 2).select(
+        (F.col("id") % 8).cast("string").alias("g"),  # group "7" has no filter
+        (F.col("id") % 800).cast("string").alias("k"),
+    )
+    gf = build_bloom_per_group(adds, "g", "k", cfg)
+    gc = build_counting_per_group(adds, "g", "k", cfg)
+    keys_by_group = {}
+    for r in adds.collect():
+        keys_by_group.setdefault(r["g"], []).append(r["k"])
+    blooms, counters = {}, {}
+    for g, keys in keys_by_group.items():
+        blooms[g] = local_filter(cfg, keys)
+        counters[g] = CountingBloomFilter(cfg)
+        counters[g].add_batch(keys)
+    got = (
+        with_group_estimated_count(
+            with_group_membership(probes, "g", "k", gf, cfg, strategy="broadcast"),
+            "g", "k", gc, cfg, strategy="broadcast",
+        )
+        .collect()
+    )
+    member = [r["member"] for r in got]
+    assert 0 < sum(member) < len(member)  # a mix of hits and misses
+    for r in got:
+        want = r["g"] in blooms and blooms[r["g"]].contains(r["k"])
+        assert r["member"] == want, (r["g"], r["k"])
+        want_count = (
+            counters[r["g"]].get_estimated_count(r["k"]) if r["g"] in counters else 0
+        )
+        assert r["est_count"] == want_count, (r["g"], r["k"])
 
 
 def test_grouped_build_and_probe_with_null_groups(spark):

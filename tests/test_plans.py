@@ -75,6 +75,27 @@ def test_grouped_probe_plan_carries_no_bitsets(spark, lineitem):
     assert "binary" not in p.lower()
 
 
+def test_grouped_build_plans_are_arrow_two_phase(spark):
+    """Both grouped builds plan as MapInArrow (stage 1, map side) ->
+    ONE Exchange of partials -> FlatMapGroupsInArrow (stage 2): no
+    pandas node, and on an input with a healthy partition count no
+    Exchange below the MapInArrow (keyed rows never shuffle)."""
+    from bloomspark import build_counting_per_group
+
+    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    df = spark.range(0, 1_000, 1, shuffle_parts).select(
+        (F.col("id") % 7).cast("string").alias("g"),
+        F.col("id").cast("string").alias("k"),
+    )
+    for build in (build_bloom_per_group, build_counting_per_group):
+        p = plan(build(df, "g", "k", CFG), "simple")
+        assert "FlatMapGroupsInPandas" not in p
+        assert "MapInArrow" in p and "FlatMapGroupsInArrow" in p
+        above, below = p.split("MapInArrow", 1)
+        assert above.count("Exchange") == 1
+        assert "Exchange" not in below
+
+
 def test_sketch_build_plan_matches_bloom_shape(lineitem):
     """Sketch partials share the build shape: pruned scan -> one
     MapInArrow, no shuffle."""
@@ -246,7 +267,7 @@ def test_knn_join_lsh_plan_never_cartesian(spark):
 
 def test_file_index_prune_plan_shapes(spark, tmp_path_factory):
     """Data-skipping plans (round 6): the index build is the grouped
-    two-phase shape (MapInArrow + FlatMapGroupsInPandas, no cartesian);
+    two-phase shape (MapInArrow + FlatMapGroupsInArrow, no cartesian);
     the bloom prune pass is ONE MapInArrow over the index with no join;
     zone-map range pruning is pure Catalyst (no Python eval at all)."""
     from bloomspark.sources import (
@@ -264,7 +285,7 @@ def test_file_index_prune_plan_shapes(spark, tmp_path_factory):
 
     index = build_file_index(lake, "doc_id", cfg, zone_map=True)
     p = plan(index)
-    assert "MapInArrow" in p and "FlatMapGroupsInPandas" in p
+    assert "MapInArrow" in p and "FlatMapGroupsInArrow" in p
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
 
     pruned = prune_files(index.select("file", "rows", "ones", "bitset"), cfg, [1, 2])
