@@ -4,9 +4,9 @@ A from-scratch re-expression of Baqend/Orestes-Bloomfilter's
 capabilities (standard + counting Bloom filters, optimal sizing math,
 the full 15-method HashProvider suite) on Spark's execution model:
 per-partition bitsets built with Arrow-batched vectorized numpy hashing
-inside ``mapInPandas``/``applyInPandas``, OR-merged associatively, with
-broadcast probe columns, salted two-phase skew handling, and
-checkpoint-resumable lineage.
+inside ``mapInArrow``, merged associatively through one ``applyInArrow``
+routine (partials.py), with broadcast probe columns, map-side grouped
+builds, and checkpoint-resumable lineage.
 """
 
 from .params import (

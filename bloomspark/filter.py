@@ -56,13 +56,6 @@ def popcount(bits: np.ndarray) -> int:
     return total
 
 
-def pack_positions(positions: np.ndarray, num_bytes: int) -> np.ndarray:
-    """Scatter an int64 array of bit positions into a fresh uint8 bitset."""
-    bits = np.zeros(num_bytes, dtype=np.uint8)
-    set_positions(bits, positions)
-    return bits
-
-
 def set_positions(bits: np.ndarray, positions: np.ndarray) -> None:
     """OR the given bit positions into ``bits`` in place (duplicate-safe)."""
     flat = positions.ravel()

@@ -11,17 +11,17 @@ stage 1: ``mapInArrow`` over the INPUT partitions, one generator for
          accumulator, and the task emits one hybrid sparse/dense
          partial per (input partition, group) — keyed rows never
          shuffle, only partial payloads;
-stage 2: ``groupBy(group).applyInArrow`` over ``pa.Table``: each
-         group's (at most P) partials merge through
-         ``build._merge_partial_arrays`` or ``build.add_counting_payload``.
+stage 2: ``partials.merge_groups`` keyed on the group: each group's (at
+         most P) partials merge through the bloom or counting kernel.
 
 Skew: NO reducer ever processes rows — stage 1's work follows the input
 partitioning regardless of group values, and stage 2 merges at most P
 partials per group.  Inputs that plan as too few partitions
-(single-row-group parquet) are spread once on (group, key-salt);
-``salt_partitions`` bounds the partials per group on that path only.
-Memory per task is bounded by ``_STAGE1_FLUSH_BYTES``: past it the
-partials flush early and accumulation restarts.
+(single-row-group parquet) are spread once on (group, key-salt)
+(``partials.spread_for_map_side``); ``salt_partitions`` bounds the
+partials per group on that path only.  Memory per task is bounded by
+``_STAGE1_FLUSH_BYTES``: past it the partials flush early and
+accumulation restarts.
 
 The broadcast probes split each batch by group with the same one sort.
 """
@@ -32,54 +32,26 @@ from __future__ import annotations
 from typing import Optional
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .build import (
-    _CounterAccumulator,
-    _PositionAccumulator,
-    _merge_partial_arrays,
-    _series_to_keys,
-    add_counting_payload,
-    key_column,
-)
+from .build import key_column
 from .counting import counter_dtype
-from .filter import BloomFilter, popcount, test_positions
+from .filter import BloomFilter, test_positions
 from .hashing import Keys, get_hash_fn
 from .params import FilterConfig
-
-
-def _factorize_groups(groups):
-    """(codes, uniques) over a possibly-null Arrow string array.
-
-    A null group gets its own code (dictionary-encoded with
-    ``null_encoding='encode'``), so it builds/probes its own filter
-    like any other value; its unique is the Python ``None``."""
-    if isinstance(groups, pa.ChunkedArray):
-        groups = groups.combine_chunks()
-    enc = groups.dictionary_encode(null_encoding="encode")
-    codes = enc.indices.to_numpy(zero_copy_only=False)
-    return codes, enc.dictionary.to_numpy(zero_copy_only=False).tolist()
-
-
-def _split_groups(groups):
-    """Split one batch's rows by group: ``(uniques, order, bounds)``.
-
-    ``order[bounds[i]:bounds[i + 1]]`` are the rows of ``uniques[i]``,
-    in batch order — one stable argsort and one bincount per batch,
-    instead of one ``codes == gi`` mask per group."""
-    codes, uniq = _factorize_groups(groups)
-    order = np.argsort(codes, kind="stable")
-    bounds = np.zeros(len(uniq) + 1, dtype=np.int64)
-    np.cumsum(np.bincount(codes, minlength=len(uniq)), out=bounds[1:])
-    return uniq, order, bounds.tolist()
-
-
-def _group_sort_key(item):
-    # None groups sort last (None is not orderable against str)
-    return (item[0] is None, item[0] or "")
+from .partials import (
+    CounterAccumulator,
+    PositionAccumulator,
+    bloom_kernel,
+    counting_kernel,
+    factorize_groups,
+    group_sort_key,
+    merge_groups,
+    split_groups,
+    spread_for_map_side,
+)
 
 
 #: Per-task budget for live stage-1 accumulator payloads; past it the
@@ -89,38 +61,10 @@ def _group_sort_key(item):
 _STAGE1_FLUSH_BYTES = 128 << 20
 
 
-def _spread_keyed(
-    keyed: DataFrame, df: DataFrame, salt_partitions: int
-) -> DataFrame:
-    """Ensure the stage-1 map side is parallel: when the input's
-    partition count is statically known and healthy (>= half the
-    session's shuffle parallelism, e.g. a pre-repartitioned or range
-    source) run directly on it — zero shuffle, at most P partials per
-    group; otherwise (single-row-group parquet scans plan as ONE
-    partition) spread the keyed rows once on (group, key-salt) — the
-    pre-round-7 clustering, which CO-LOCATES each group into at most
-    ``salt_partitions`` cells so a many-group input does not pay
-    partition-count partials per group.  Any spread yields the
-    identical merged filters (associative partials)."""
-    from .build import plan_num_partitions
-
-    shuffle_parts = max(
-        int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")), 1
-    )
-    known = plan_num_partitions(df)
-    if known is not None and known * 2 >= shuffle_parts:
-        return keyed
-    return keyed.repartition(
-        shuffle_parts,
-        F.col("__group"),
-        F.pmod(F.xxhash64(F.col("__key")), F.lit(max(salt_partitions, 1))),
-    )
-
-
 def _split_positions(groups, pos: np.ndarray, m: int):
     """Bloom batch split: ``(group, rows, (positions,))`` per group of one
-    batch — one stable sort of the rows by group (:func:`_split_groups`)."""
-    uniq, order, bounds = _split_groups(groups)
+    batch — one stable sort of the rows by group (:func:`split_groups`)."""
+    uniq, order, bounds = split_groups(groups)
     pos = pos[order]
     return [
         (g, hi - lo, (pos[lo:hi],)) for g, lo, hi in zip(uniq, bounds, bounds[1:])
@@ -131,9 +75,9 @@ def _split_position_counts(groups, pos: np.ndarray, m: int):
     """Counting batch split: ``(group, rows, (positions, counts))`` per
     group of one batch.  ONE ``np.unique`` over the batch's
     (group code, position) cells pre-aggregates every group at once —
-    the same pairs ``_CounterAccumulator.add`` derives, without its
+    the same pairs ``CounterAccumulator.add`` derives, without its
     per-group ``np.unique`` call."""
-    codes, uniq = _factorize_groups(groups)
+    codes, uniq = factorize_groups(groups)
     if len(uniq) * m >= 1 << 63:  # cells would overflow int64
         return [
             (g, n, np.unique(p, return_counts=True))
@@ -151,9 +95,7 @@ def _split_position_counts(groups, pos: np.ndarray, m: int):
     ]
 
 
-def _grouped_stage1_gen(
-    config: FilterConfig, new_acc, add, split, payload_col: str, pos_bytes: int
-):
+def _grouped_stage1_gen(config: FilterConfig, new_acc, add, split, payload_col: str):
     """mapInArrow generator over (__group, __key) batches of the RAW
     input partitioning: hashes each batch once, splits it by group
     (``split``) and feeds each group's share to that group's
@@ -161,7 +103,8 @@ def _grouped_stage1_gen(
     per (partition, group) — the map-side combine.  ``acc.finish()``
     returns ``(kind, ..., payload)``.  No keyed row ever shuffles; peak
     memory = one Arrow batch + the live accumulators, bounded by the
-    flush budget (``pos_bytes`` per hashed position)."""
+    flush budget, which counts the bytes of every share handed to an
+    accumulator (positions at their hash dtype, plus 8-byte counts)."""
     m, k, method = config.m, config.k, config.hash_method
     flush_bytes = _STAGE1_FLUSH_BYTES
     schema = pa.schema(
@@ -175,7 +118,7 @@ def _grouped_stage1_gen(
 
     def flush(accs):
         cols = {"group": [], "rows": [], "kind": [], payload_col: []}
-        for g, (acc, rows) in sorted(accs.items(), key=_group_sort_key):
+        for g, (acc, rows) in sorted(accs.items(), key=group_sort_key):
             finished = acc.finish()
             cols["group"].append(g)
             cols["rows"].append(rows)
@@ -198,7 +141,7 @@ def _grouped_stage1_gen(
                     st = accs[g] = [new_acc(), 0]
                 add(st[0], *share)
                 st[1] += rows
-            pending += pos.size * pos_bytes
+                pending += sum(a.nbytes for a in share)
             if pending > flush_bytes:
                 yield flush(accs)
                 accs, pending = {}, 0
@@ -209,35 +152,28 @@ def _grouped_stage1_gen(
 
 
 def _build_per_group(
-    df, group_col, key_col, salt_partitions, stage1, merge, stat_col, payload_col
+    df, group_col, key_col, salt_partitions, stage1, kernel, stat_col, payload_col
 ) -> DataFrame:
-    """Plan both stages -> (group, rows, <stat_col>, <payload_col>).
-    Stage 2 is ``groupBy(group).applyInArrow``: one group's partials ->
-    one row, with ``merge(kinds, payloads)`` -> ``(stat, payload_bytes)``."""
-
-    def stage2(tbl: pa.Table) -> pa.Table:
-        stat, payload = merge(
-            tbl.column("kind").to_pylist(), tbl.column(payload_col).to_pylist()
-        )
-        return pa.table({
-            "group": tbl.column("group").slice(0, 1),
-            "rows": pa.array([sum(tbl.column("rows").to_pylist())], pa.int64()),
-            stat_col: pa.array([stat], pa.int64()),
-            payload_col: pa.array([payload], pa.binary()),
-        })
-
+    """Plan both stages -> (group, rows, <stat_col>, <payload_col>)."""
     keyed = df.select(
         F.col(group_col).cast("string").alias("__group"),
         key_column(key_col).alias("__key"),
     )
-    partials = _spread_keyed(keyed, df, salt_partitions).mapInArrow(
+    placed = spread_for_map_side(
+        keyed, df, F.col("__group"),
+        F.pmod(F.xxhash64(F.col("__key")), F.lit(max(salt_partitions, 1))),
+    )
+    partials = placed.mapInArrow(
         stage1,
         schema=f"group string, rows bigint, kind string, {payload_col} binary",
     )
-    return partials.groupBy("group").applyInArrow(
-        stage2,
-        schema=f"group string, rows bigint, {stat_col} bigint, {payload_col} binary",
-    )
+    schema = pa.schema([
+        ("group", pa.string()),
+        ("rows", pa.int64()),
+        (stat_col, pa.int64()),
+        (payload_col, pa.binary()),
+    ])
+    return merge_groups(partials, "group", kernel, schema)
 
 
 def build_bloom_per_group(
@@ -251,20 +187,16 @@ def build_bloom_per_group(
     """One Bloom filter per group -> DataFrame (group, rows, ones, bitset).
 
     ``salt_partitions`` only matters when the input needs an explicit
-    spread (see :func:`_spread_keyed`); pre-partitioned inputs build
-    map-side with zero row shuffle."""
+    spread (see ``partials.spread_for_map_side``); pre-partitioned
+    inputs build map-side with zero row shuffle."""
     m, num_bytes = config.m, config.num_bytes
-
-    def merge(kinds, payloads):
-        acc = _merge_partial_arrays(kinds, payloads, config)
-        return popcount(acc), acc.tobytes()
-
     stage1 = _grouped_stage1_gen(
-        config, lambda: _PositionAccumulator(m, num_bytes),
-        _PositionAccumulator.add, _split_positions, "bitset", 4,
+        config, lambda: PositionAccumulator(m, num_bytes),
+        PositionAccumulator.add, _split_positions, "bitset",
     )
     return _build_per_group(
-        df, group_col, key_col, salt_partitions, stage1, merge, "ones", "bitset"
+        df, group_col, key_col, salt_partitions, stage1, bloom_kernel(config),
+        "ones", "bitset",
     )
 
 
@@ -283,24 +215,12 @@ def build_counting_per_group(
     to saturation (final counter = min(true sum, max) under ANY partial
     grouping), so the map-side partials merge to the identical counter
     arrays the row-shuffled build produced."""
-    from .build import _COUNTING_DENSE_ALLOC_LIMIT
-
-    dense_limit = _COUNTING_DENSE_ALLOC_LIMIT  # freeze policy driver-side
-    dt = counter_dtype(config.counting_bits)
-
-    def merge(kinds, payloads):
-        acc = np.zeros(config.m, dtype=dt)
-        noop_overflow = lambda n: None  # noqa: E731 — clamp count not surfaced
-        for kind, b in zip(kinds, payloads):
-            add_counting_payload(acc, kind, b, config, noop_overflow)
-        return int(np.count_nonzero(acc)), acc.tobytes()
-
     stage1 = _grouped_stage1_gen(
-        config, lambda: _CounterAccumulator(config, dense_limit),
-        _CounterAccumulator.add_pairs, _split_position_counts, "counters", 8,
+        config, CounterAccumulator.factory(config),
+        CounterAccumulator.add_pairs, _split_position_counts, "counters",
     )
     return _build_per_group(
-        df, group_col, key_col, salt_partitions, stage1, merge,
+        df, group_col, key_col, salt_partitions, stage1, counting_kernel(config),
         "nonzero", "counters",
     )
 
@@ -368,7 +288,8 @@ def _cogroup_probe(
     generalized to arbitrary group columns).  Each group's bitset or
     counter array crosses the wire once per job — never via the driver,
     never as a per-row column — so G x state_bytes can exceed any
-    broadcast or driver memory."""
+    broadcast or driver memory.  The cogroup runs in Arrow: keys reach
+    the hash kernels as contiguous buffers, never as Python strings."""
     from pyspark.sql.types import StructField, StructType
 
     out_schema = StructType(list(df.schema.fields) + [StructField(out_col, out_type)])
@@ -380,18 +301,15 @@ def _cogroup_probe(
     )
     orig_cols = df.columns
 
-    def apply(pdf: pd.DataFrame, sdf: pd.DataFrame) -> pd.DataFrame:
-        out = pdf[orig_cols].copy()
-        if len(sdf):
-            out[out_col] = probe_fn(pdf["__key"], bytes(sdf["__state"].iloc[0]))
-        else:
-            out[out_col] = probe_fn(pdf["__key"], None)
-        return out
+    def apply(ptbl: pa.Table, stbl: pa.Table) -> pa.Table:
+        raw = stbl.column("__state")[0].as_py() if stbl.num_rows else None
+        result = probe_fn(ptbl.column("__key").combine_chunks(), raw)
+        return ptbl.select(orig_cols).append_column(out_col, pa.array(result))
 
     return (
         probe_side.groupBy("__group")
         .cogroup(state_side.groupBy("__group"))
-        .applyInPandas(apply, schema=out_schema)
+        .applyInArrow(apply, schema=out_schema)
     )
 
 
@@ -414,7 +332,7 @@ def _group_probe(
 
     'broadcast' collects the state once (Arrow ``toPandas``) as a
     {group: bytes} dict and splits each batch by group with one sort
-    (:func:`_split_groups`); 'cogroup' hands each group's single state
+    (``partials.split_groups``); 'cogroup' hands each group's single state
     row to :func:`_cogroup_probe`."""
     from pyspark.sql.functions import arrow_udf
     from pyspark.sql.types import BooleanType
@@ -424,10 +342,10 @@ def _group_probe(
 
     if strategy == "cogroup":
 
-        def probe_fn(keys: pd.Series, raw):
+        def probe_fn(keys: pa.Array, raw):
             out = np.zeros(len(keys), dtype=out_dtype)
-            if raw is not None:
-                pos = get_hash_fn(method)(_series_to_keys(keys), m, k)
+            if raw is not None and len(keys):
+                pos = get_hash_fn(method)(Keys.from_arrow(keys), m, k)
                 out[:] = lookup(np.frombuffer(raw, dtype), pos)
             return out
 
@@ -446,7 +364,7 @@ def _group_probe(
         kb = Keys.from_arrow(
             keys.combine_chunks() if isinstance(keys, pa.ChunkedArray) else keys
         )
-        uniq, order, bounds = _split_groups(groups)
+        uniq, order, bounds = split_groups(groups)
         pos = get_hash_fn(method)(kb, m, k)[order]
         out = np.zeros(len(kb), dtype=out_dtype)
         for g, lo, hi in zip(uniq, bounds, bounds[1:]):

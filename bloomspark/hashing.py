@@ -645,150 +645,15 @@ def _extract_crypt_positions(words, active, counts, out, m, k, fs, nsplits):
                 counts[rows] += 1
 
 
-# -- vectorized SHA-1 / SHA-256 (FIPS 180-4) ----------------------------------
-
-def _first_primes(n: int):
-    primes, c = [], 2
-    while len(primes) < n:
-        if all(c % p for p in primes):
-            primes.append(c)
-        c += 1
-    return primes
-
-
-def _frac32(x: float) -> int:
-    return int((x - int(x)) * (1 << 32)) & 0xFFFFFFFF
-
-
-#: SHA-256 round constants / initial state: fractional parts of the cube
-#: (resp. square) roots of the first primes — computed, not pasted.
-_SHA256_K = np.array(
-    [_frac32(p ** (1.0 / 3.0)) for p in _first_primes(64)], dtype=np.uint32
-)
-_SHA256_H0 = np.array(
-    [_frac32(p ** 0.5) for p in _first_primes(8)], dtype=np.uint32
-)
-_SHA1_H0 = np.array(
-    [0x67452301, 0xEFCDAB89, 0x98BADCFE, 0x10325476, 0xC3D2E1F0], dtype=np.uint32
-)
-_SHA1_K = np.array([0x5A827999, 0x6ED9EBA1, 0x8F1BBCDC, 0xCA62C1D6], dtype=np.uint32)
-
-
-def _rotr32(x: np.ndarray, r: int) -> np.ndarray:
-    return (x >> _U32(r)) | (x << _U32(32 - r))
-
-
-def _sha_pad_be(mat: np.ndarray):
-    """FIPS 180-4 padding (0x80, zeros, 8-byte BIG-endian bit length) and
-    the per-block big-endian word view: (N, n_blocks*16) uint32."""
-    n, L = mat.shape
-    n_blocks = (L + 9 + 63) // 64
-    padded = np.zeros((n, n_blocks * 64), dtype=np.uint8)
-    padded[:, :L] = mat
-    padded[:, L] = 0x80
-    bitlen = np.uint64(L * 8)
-    padded[:, -8:] = np.frombuffer(
-        int(bitlen).to_bytes(8, "big"), dtype=np.uint8
-    )
-    return padded.view(">u4").astype(np.uint32), n_blocks
-
-
-def _sha256_matrix(mat: np.ndarray) -> np.ndarray:
-    """SHA-256 of N same-length messages at once: (N, L) uint8 ->
-    (N, 32) uint8.  Same whole-batch lane shape as :func:`_md5_matrix`:
-    every working variable is a length-N vector through the 64 rounds.
-    Parity with hashlib is golden-tested (tests/test_hashing.py)."""
-    n, _L = mat.shape
-    words, n_blocks = _sha_pad_be(mat)
-    h = [np.full(n, _SHA256_H0[i], dtype=np.uint32) for i in range(8)]
-    with np.errstate(over="ignore"):
-        for blk in range(n_blocks):
-            W = np.empty((64, n), dtype=np.uint32)
-            W[:16] = words[:, blk * 16 : (blk + 1) * 16].T
-            for t in range(16, 64):
-                s0 = _rotr32(W[t - 15], 7) ^ _rotr32(W[t - 15], 18) ^ (W[t - 15] >> _U32(3))
-                s1 = _rotr32(W[t - 2], 17) ^ _rotr32(W[t - 2], 19) ^ (W[t - 2] >> _U32(10))
-                W[t] = W[t - 16] + s0 + W[t - 7] + s1
-            a, b, c, d, e, f, g, hh = (v.copy() for v in h)
-            for t in range(64):
-                S1 = _rotr32(e, 6) ^ _rotr32(e, 11) ^ _rotr32(e, 25)
-                ch = (e & f) ^ (~e & g)
-                t1 = hh + S1 + ch + _SHA256_K[t] + W[t]
-                S0 = _rotr32(a, 2) ^ _rotr32(a, 13) ^ _rotr32(a, 22)
-                maj = (a & b) ^ (a & c) ^ (b & c)
-                t2 = S0 + maj
-                hh = g; g = f; f = e
-                e = d + t1
-                d = c; c = b; b = a
-                a = t1 + t2
-            for i, v in enumerate((a, b, c, d, e, f, g, hh)):
-                h[i] = h[i] + v
-    out = np.empty((n, 32), dtype=np.uint8)
-    for i in range(8):
-        out[:, 4 * i : 4 * i + 4] = (
-            h[i].astype(">u4").view(np.uint8).reshape(n, 4)
-        )
-    return out
-
-
-def _sha1_matrix(mat: np.ndarray) -> np.ndarray:
-    """SHA-1 of N same-length messages at once: (N, L) uint8 -> (N, 20)
-    uint8 (FIPS 180-4 §6.1, vectorized like :func:`_sha256_matrix`)."""
-    n, _L = mat.shape
-    words, n_blocks = _sha_pad_be(mat)
-    h = [np.full(n, _SHA1_H0[i], dtype=np.uint32) for i in range(5)]
-    with np.errstate(over="ignore"):
-        for blk in range(n_blocks):
-            W = np.empty((80, n), dtype=np.uint32)
-            W[:16] = words[:, blk * 16 : (blk + 1) * 16].T
-            for t in range(16, 80):
-                x = W[t - 3] ^ W[t - 8] ^ W[t - 14] ^ W[t - 16]
-                W[t] = _rotl32(x, 1)
-            a, b, c, d, e = (v.copy() for v in h)
-            for t in range(80):
-                if t < 20:
-                    f = (b & c) | (~b & d)
-                elif t < 40:
-                    f = b ^ c ^ d
-                elif t < 60:
-                    f = (b & c) | (b & d) | (c & d)
-                else:
-                    f = b ^ c ^ d
-                tmp = _rotl32(a, 5) + f + e + _SHA1_K[t // 20] + W[t]
-                e = d; d = c
-                c = _rotl32(b, 30)
-                b = a; a = tmp
-            for i, v in enumerate((a, b, c, d, e)):
-                h[i] = h[i] + v
-    out = np.empty((n, 20), dtype=np.uint8)
-    for i in range(5):
-        out[:, 4 * i : 4 * i + 4] = (
-            h[i].astype(">u4").view(np.uint8).reshape(n, 4)
-        )
-    return out
-
-
-#: Matrix (whole-batch) digest kernels for the vectorized crypt path.
-#: ONLY MD5 dispatches here by default: measured head-to-head on this
-#: box (100k 64-byte keys, constructor-based hashlib, chunked kernels),
-#: the numpy kernels beat per-row OpenSSL only where the CPU lacks a
-#: hardware digest —
-#:   MD5    golden 809k vs 601k, m=1e8 278k vs 275k rows/s -> matrix
-#:   SHA1   golden 495k vs 681k, m=1e8 287k vs 371k rows/s -> hashlib
-#:   SHA256 golden 435k vs 605k, m=1e8 226k vs 408k rows/s -> hashlib
-#: (OpenSSL uses SHA-NI instructions for SHA1/SHA256; there is no MD5
-#: equivalent).  The SHA kernels stay implemented + parity-tested below
-#: so a deployment without SHA-NI can flip them on here — same
-#: measured-and-documented discipline as the deflate partial codec
-#: (build.py).
+#: Matrix (whole-batch) digest kernels for the vectorized crypt path —
+#: MD5 only.  Measured head-to-head on SHA-NI hosts (m = 19.2M, k = 7,
+#: 100k keys, bit-equal outputs), per-row OpenSSL beats whole-batch
+#: numpy kernels for SHA1 (238k vs 176k rows/s) and SHA256 (282k vs
+#: 200k rows/s), while the MD5 kernel beats hashlib (248k vs 180k):
+#: there is no MD5 instruction.  The numpy SHA kernels were deleted for
+#: that reason (BASELINE.md "SHA matrix kernels retired").
 _MATRIX_DIGESTS = {
     "MD5": (_md5_matrix, 16),
-}
-#: All kernels, for parity tests and non-SHA-NI deployments.
-_ALL_MATRIX_DIGESTS = {
-    "MD5": (_md5_matrix, 16),
-    "SHA1": (_sha1_matrix, 20),
-    "SHA256": (_sha256_matrix, 32),
 }
 
 
@@ -800,17 +665,17 @@ _CRYPT_CHUNK = 32768
 
 
 def _positions_crypt_matrix(keys: Keys, m: int, k: int, method: str) -> np.ndarray:
-    """Fully-vectorized crypt position path (MD5/SHA1/SHA256): digest
-    chaining H(prev || key) runs through the method's matrix kernel per
-    round, slices through the shared extractor — no hashlib, no per-row
-    Python.  Bit-identical to the generic hashlib path (parity-tested)."""
-    matrix_fn, dig_len = _ALL_MATRIX_DIGESTS[method]
+    """Fully-vectorized crypt position path (the ``_MATRIX_DIGESTS``
+    methods): digest chaining H(prev || key) runs through the method's
+    matrix kernel per round, slices through the shared extractor — no
+    hashlib, no per-row Python.  Bit-identical to the generic hashlib
+    path (parity-tested)."""
+    matrix_fn, dig_len = _MATRIX_DIGESTS[method]
     n = len(keys)
     fs = m.bit_length()
     out = np.empty((n, k), dtype=np.int64)
     counts = np.zeros(n, dtype=np.int64)
     nsplits = (dig_len * 8) // fs
-    pad = (-dig_len) % 8  # zero-pad to whole little-endian u8 lanes
     for idx, key_mat in _group_by_length(keys):
         for s in range(0, idx.size, _CRYPT_CHUNK):
             active = idx[s : s + _CRYPT_CHUNK].copy()
@@ -819,13 +684,7 @@ def _positions_crypt_matrix(keys: Keys, m: int, k: int, method: str) -> np.ndarr
             local = np.arange(len(active))
             while active.size:
                 dig = matrix_fn(msg)
-                if pad:
-                    lanes = np.concatenate(
-                        [dig, np.zeros((dig.shape[0], pad), dtype=np.uint8)], axis=1
-                    )
-                else:
-                    lanes = dig
-                words = lanes.view("<u8")
+                words = dig.view("<u8")  # digests are whole u64 lanes
                 _extract_crypt_positions(words, active, counts, out, m, k, fs, nsplits)
                 unfinished = counts[active] < k
                 if not unfinished.any():
@@ -849,7 +708,7 @@ def positions_crypt(keys, m: int, k: int, method: str) -> np.ndarray:
     generic path below — one C-speed hashlib call per (row, round), with
     slice extraction, acceptance and position scatter vectorized over
     the whole batch per round — because on SHA-NI hardware per-row
-    OpenSSL beats the whole-batch numpy SHA kernels (measured; see
+    OpenSSL beats whole-batch numpy SHA kernels (measured; see
     ``_MATRIX_DIGESTS``).  MD2 is pure-Python RFC 1319, the documented
     parity tier.
     """

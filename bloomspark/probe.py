@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql.functions import arrow_udf
 
 from .build import key_column
@@ -85,20 +85,3 @@ def with_estimated_count(
     probe = estimated_count_udf(df, cbf)
     return df.withColumn(out_col, probe(key_column(col)))
 
-
-def hash_positions_column(col: Column, config: FilterConfig) -> Column:
-    """Expose the k hash positions as an array<long> column (the bulk
-    analog of BloomFilter.hash, BloomFilter.java:193-205)."""
-
-    @arrow_udf("array<long>")
-    def positions(keys: pa.Array) -> pa.Array:
-        kb = _keys_from_arrow_any(keys)
-        pos = get_hash_fn(config.hash_method)(kb, config.m, config.k)
-        k = pos.shape[1] if pos.ndim == 2 else config.k
-        offsets = np.arange(len(kb) + 1, dtype=np.int32) * k
-        return pa.ListArray.from_arrays(
-            pa.array(offsets),
-            pa.array(pos.ravel().astype(np.int64), type=pa.int64()),
-        )
-
-    return positions(col)

@@ -10,7 +10,7 @@ for n/S keys.  Nothing is ever collected:
   as the group — one shuffle of (key, shard), bitsets stay distributed;
 - **probe** = co-partition probes and shards on the shard id and test
   each partition's probe rows against its ONE local bitset via
-  ``cogroup().applyInPandas``.  Each bitset crosses the wire once per
+  ``cogroup().applyInArrow``.  Each bitset crosses the wire once per
   probe job (S rows total), never once per probe row — the shape that
   survives a TB-scale filter, unlike a broadcast (too big) or a plain
   join (bitset duplicated onto every probe row).
@@ -24,13 +24,21 @@ two-phase build handles any residual skew.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .build import _series_to_keys, key_column, reserve_probe_cols
+from .build import key_column, reserve_probe_cols
 from .grouped import build_bloom_per_group
 from .params import FilterConfig
+from .partials import (
+    bloom_kernel,
+    counting_kernel,
+    merge_bloom_payloads,
+    merge_counting_payloads,
+    merge_groups,
+)
 
 
 def shard_column(key_col: str, num_shards: int):
@@ -87,21 +95,6 @@ def _keyed_probe_side(df: DataFrame, col: str, num_shards: int):
     return probe_side.withColumn("__key", key_column(col)), "__key"
 
 
-def _or_bitset_column(arr) -> np.ndarray:
-    """OR an Arrow binary column's rows into one bitset.  >1 row per
-    shard = a non-canonical (un-merged union) filter table; OR-ing is
-    identical to probing the merge, instead of silently reading only
-    the first row (false negatives)."""
-    bits = np.frombuffer(arr[0].as_py(), dtype=np.uint8)
-    if len(arr) > 1:
-        bits = bits.copy()
-        for i in range(1, len(arr)):
-            np.bitwise_or(
-                bits, np.frombuffer(arr[i].as_py(), dtype=np.uint8), out=bits
-            )
-    return bits
-
-
 def with_sharded_membership(
     df: DataFrame,
     col: str,
@@ -111,42 +104,58 @@ def with_sharded_membership(
     num_shards: int = 64,
     out_col: str = "member",
 ) -> DataFrame:
-    """Probe every row of ``df`` against the sharded filter.
-
-    Plan shape: both sides shuffle ONCE on the shard id (the probe rows
-    by their key's shard, the S bitset rows by shard), then a cogroup
-    tests each shard's probe batch against its single local bitset —
-    the bitset appears once per task, never as a per-row column.
-    Shards absent from ``shards`` probe False.  The cogroup runs in
-    ARROW (``applyInPandas`` materialized every key as a Python string
-    object; ``Keys.from_arrow`` reads the contiguous UTF-8 buffers
-    zero-copy — round-7).
+    """Probe every row of ``df`` against the sharded filter
+    (:func:`_shard_probe`).  Shards absent from ``shards`` probe False.
     """
-    import pyarrow as pa
+    from pyspark.sql.types import BooleanType
 
     from .filter import test_positions
-    from .hashing import Keys, get_hash_fn
 
+    return _shard_probe(
+        df, col, shards, shard_config, num_shards, out_col, BooleanType(),
+        "bitset", merge_bloom_payloads, test_positions,
+    )
+
+
+def _shard_probe(
+    df, col, shards, shard_config, num_shards, out_col, out_type,
+    state_col, merge_state, lookup,
+) -> DataFrame:
+    """The sharded probe plan: both sides shuffle ONCE on the shard id
+    (the probe rows by their key's shard, the S state rows by shard),
+    then an Arrow cogroup evaluates ``lookup(state, positions)`` for
+    each shard's probe batch against its ONE local state — the state
+    appears once per task, never as a per-row column.  >1 state row
+    per shard is a non-canonical (un-merged union) table:
+    ``merge_state`` folds its rows, so probing it is probing the merge.
+    Rows of shards without state read 0 / False.  The cogroup runs in
+    ARROW (``applyInPandas`` materialized every key as a Python string
+    object; ``Keys.from_arrow`` reads the contiguous UTF-8 buffers
+    zero-copy — round-7)."""
     from pyspark.sql.types import BooleanType, StructField, StructType
+
+    from .hashing import Keys, get_hash_fn
 
     _reserve_probe_cols(df, out_col)
     m, k, method = shard_config.m, shard_config.k, shard_config.hash_method
+    out_dtype = bool if isinstance(out_type, BooleanType) else np.int64
     # StructType.add mutates in place — build a fresh schema instead of
     # appending to the DataFrame's cached one
     out_schema = StructType(
-        list(df.schema.fields) + [StructField(out_col, BooleanType())]
+        list(df.schema.fields) + [StructField(out_col, out_type)]
     )
     probe_side, key_col = _keyed_probe_side(df, col, num_shards)
-    shard_side = shards.select(F.col("shard").alias("__shard"), "bitset")
+    shard_side = shards.select(F.col("shard").alias("__shard"), state_col)
     orig_cols = df.columns
 
     def probe(ptbl: pa.Table, stbl: pa.Table) -> pa.Table:
-        result = np.zeros(ptbl.num_rows, dtype=bool)
+        result = np.zeros(ptbl.num_rows, dtype=out_dtype)
         if ptbl.num_rows and stbl.num_rows:
-            bits = _or_bitset_column(stbl.column("bitset"))
+            state = merge_state(
+                None, stbl.column(state_col).to_pylist(), shard_config
+            )
             keys = Keys.from_arrow(ptbl.column(key_col).combine_chunks())
-            pos = get_hash_fn(method)(keys, m, k)
-            result = test_positions(bits, pos)
+            result = lookup(state, get_hash_fn(method)(keys, m, k))
         out = ptbl.select(orig_cols)
         return out.append_column(out_col, pa.array(result))
 
@@ -156,50 +165,18 @@ def with_sharded_membership(
         .applyInArrow(probe, schema=out_schema)
     )
 
-
 # ``rows`` is TOTAL EVER INSERTED into the shard (adds only — never
 # decremented by subtract_sharded_counting, whose removes don't carry a
 # reliable live count once subtraction floors at 0); use
 # estimated_population_sharded_counting for the live-population number.
 COUNTING_SHARDS_SCHEMA = "shard long, rows bigint, nonzero bigint, counters binary"
 
-
-def _sum_counter_rows(
-    buffers, shard_config: FilterConfig, *, writable: bool = False
-) -> np.ndarray:
-    """Saturating sum of one shard's counter-array rows.  One row is the
-    canonical case; >1 means a non-canonical (un-merged union) table —
-    summing matches what merge_sharded_counting would have produced,
-    instead of silently reading only the first row.  ``writable=True``
-    guarantees an owned mutable array (the >1-row path already copies,
-    so callers that mutate should ask rather than re-copy)."""
-    from .counting import add_saturating, counter_dtype, counter_max
-
-    dt = counter_dtype(shard_config.counting_bits)
-    acc = np.frombuffer(bytes(buffers.iloc[0]), dtype=dt)
-    if len(buffers) == 1:
-        return acc.copy() if writable else acc
-    acc = acc.copy()
-    mx = counter_max(shard_config.counting_bits)
-    for buf in buffers.iloc[1:]:
-        add_saturating(acc, np.frombuffer(bytes(buf), dtype=dt), mx)
-    return acc
-
-
-def _sum_counter_rows_arrow(arr, shard_config: FilterConfig) -> np.ndarray:
-    """Arrow-column twin of :func:`_sum_counter_rows` (one row is
-    canonical; >1 rows saturating-sum, identical to merging first)."""
-    from .counting import add_saturating, counter_dtype, counter_max
-
-    dt = counter_dtype(shard_config.counting_bits)
-    acc = np.frombuffer(arr[0].as_py(), dtype=dt)
-    if len(arr) == 1:
-        return acc
-    acc = acc.copy()
-    mx = counter_max(shard_config.counting_bits)
-    for i in range(1, len(arr)):
-        add_saturating(acc, np.frombuffer(arr[i].as_py(), dtype=dt), mx)
-    return acc
+_COUNTING_SHARDS_PA_SCHEMA = pa.schema([
+    ("shard", pa.int64()),
+    ("rows", pa.int64()),
+    ("nonzero", pa.int64()),
+    ("counters", pa.binary()),
+])
 
 
 def build_sharded_counting(
@@ -245,82 +222,32 @@ def with_sharded_estimated_count(
     out_col: str = "est_count",
 ) -> DataFrame:
     """Minimum-selection frequency estimate of every row of ``df``
-    against the sharded counting filter — same cogroup plan shape as
-    :func:`with_sharded_membership`: both sides shuffle ONCE on the
-    shard id, each task reads its shard's ONE counter array (the array
-    crosses the wire S times per job, never per probe row).  Shards
-    absent from ``shards`` estimate 0.  Arrow cogroup, like the
-    membership probe."""
-    import pyarrow as pa
+    against the sharded counting filter — the plan of
+    :func:`with_sharded_membership` (:func:`_shard_probe`): each task
+    reads its shard's ONE counter array (the array crosses the wire S
+    times per job, never per probe row).  Shards absent from ``shards``
+    estimate 0."""
+    from pyspark.sql.types import LongType
 
-    from .hashing import Keys, get_hash_fn
-
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    _reserve_probe_cols(df, out_col)
-    m, k, method = shard_config.m, shard_config.k, shard_config.hash_method
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField(out_col, LongType())]
+    return _shard_probe(
+        df, col, shards, shard_config, num_shards, out_col, LongType(),
+        "counters", merge_counting_payloads,
+        lambda counters, pos: counters[pos].min(axis=1).astype(np.int64),
     )
-    probe_side, key_col = _keyed_probe_side(df, col, num_shards)
-    shard_side = shards.select(F.col("shard").alias("__shard"), "counters")
-    orig_cols = df.columns
-
-    def probe(ptbl: pa.Table, stbl: pa.Table) -> pa.Table:
-        result = np.zeros(ptbl.num_rows, dtype=np.int64)
-        if ptbl.num_rows and stbl.num_rows:
-            counters = _sum_counter_rows_arrow(
-                stbl.column("counters"), shard_config
-            )
-            keys = Keys.from_arrow(ptbl.column(key_col).combine_chunks())
-            pos = get_hash_fn(method)(keys, m, k)
-            result = counters[pos].min(axis=1).astype(np.int64)
-        out = ptbl.select(orig_cols)
-        return out.append_column(out_col, pa.array(result))
-
-    return (
-        probe_side.groupBy("__shard")
-        .cogroup(shard_side.groupBy("__shard"))
-        .applyInArrow(probe, schema=out_schema)
-    )
-
 
 def merge_sharded_counting(
     a: DataFrame, b: DataFrame, shard_config: FilterConfig
 ) -> DataFrame:
     """Saturating-add merge of two sharded counting filters built under
     the SAME (shard_config, num_shards) — the counting twin of
-    :func:`merge_sharded` (union + one groupBy(shard); counter arrays
-    ride the shuffle once each, the driver never sees one).  For
-    distributed remove use :func:`subtract_sharded_counting`."""
-    from .counting import add_saturating, counter_dtype, counter_max
-
-    dt = counter_dtype(shard_config.counting_bits)
-    mx = counter_max(shard_config.counting_bits)
-
-    both = a.select("shard", "rows", "nonzero", "counters").unionByName(
-        b.select("shard", "rows", "nonzero", "counters")
-    )
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = None
-        for buf in pdf["counters"]:
-            arr = np.frombuffer(bytes(buf), dtype=dt)
-            if acc is None:
-                acc = arr.copy()
-            else:
-                add_saturating(acc, arr, mx)
-        return pd.DataFrame(
-            {
-                "shard": [int(pdf["shard"].iloc[0])],
-                "rows": [int(pdf["rows"].sum())],
-                "nonzero": [int(np.count_nonzero(acc))],
-                "counters": [acc.tobytes()],
-            }
-        )
-
-    return both.groupBy("shard").applyInPandas(
-        merge, schema=COUNTING_SHARDS_SCHEMA
+    :func:`merge_sharded` (union + ``partials.merge_groups`` on the
+    shard; counter arrays ride the shuffle once each, the driver never
+    sees one).  For distributed remove use
+    :func:`subtract_sharded_counting`."""
+    cols = ("shard", "rows", "nonzero", "counters")
+    both = a.select(*cols).unionByName(b.select(*cols))
+    return merge_groups(
+        both, "shard", counting_kernel(shard_config), _COUNTING_SHARDS_PA_SCHEMA
     )
 
 
@@ -347,30 +274,33 @@ def subtract_sharded_counting(
     ``rows`` stays monotone and the live estimate comes from
     :func:`estimated_population_sharded_counting`."""
     add_side = adds.select("shard", "rows", "nonzero", "counters")
-    rem_side = removes.select(F.col("shard").alias("shard"), "counters")
+    rem_side = removes.select("shard", "counters")
 
-    def sub(apdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(apdf):
-            return pd.DataFrame(
-                {"shard": [], "rows": [], "nonzero": [], "counters": []}
-            ).astype({"shard": "int64", "rows": "int64", "nonzero": "int64"})
-        acc = _sum_counter_rows(apdf["counters"], shard_config, writable=True)
-        if len(rpdf):
-            rem = _sum_counter_rows(rpdf["counters"], shard_config)
+    def sub(atbl: pa.Table, rtbl: pa.Table) -> pa.Table:
+        if not atbl.num_rows:
+            return _COUNTING_SHARDS_PA_SCHEMA.empty_table()
+        acc = merge_counting_payloads(
+            None, atbl.column("counters").to_pylist(), shard_config
+        )
+        if rtbl.num_rows:
+            rem = merge_counting_payloads(
+                None, rtbl.column("counters").to_pylist(), shard_config
+            )
             np.subtract(acc, np.minimum(acc, rem), out=acc)
-        return pd.DataFrame(
+        return pa.table(
             {
-                "shard": [int(apdf["shard"].iloc[0])],
-                "rows": [int(apdf["rows"].sum())],
+                "shard": atbl.column("shard").slice(0, 1),
+                "rows": [pc.sum(atbl.column("rows")).as_py()],
                 "nonzero": [int(np.count_nonzero(acc))],
                 "counters": [acc.tobytes()],
-            }
+            },
+            schema=_COUNTING_SHARDS_PA_SCHEMA,
         )
 
     return (
         add_side.groupBy("shard")
         .cogroup(rem_side.groupBy("shard"))
-        .applyInPandas(sub, schema=COUNTING_SHARDS_SCHEMA)
+        .applyInArrow(sub, schema=COUNTING_SHARDS_SCHEMA)
     )
 
 
@@ -381,29 +311,26 @@ def estimated_population_sharded_counting(
     swamidass-baldi estimate from each shard's NONZERO slot count
     (a counting filter's bit-level analog of `ones`), summed over
     shards — only S (shard, nonzero) rows reach the driver."""
+    return _swamidass_baldi_sum(
+        shards, "counters", "nonzero", shard_config, counting_kernel(shard_config)
+    )
 
-    def reduce_counts(sdf: DataFrame) -> DataFrame:
-        def red(pdf: pd.DataFrame) -> pd.DataFrame:
-            acc = _sum_counter_rows(pdf["counters"], shard_config)
-            return pd.DataFrame(
-                {
-                    "shard": [int(pdf["shard"].iloc[0])],
-                    "nonzero": [int(np.count_nonzero(acc))],
-                }
-            )
 
-        return sdf.groupBy("shard").applyInPandas(
-            red, "shard long, nonzero bigint"
-        )
-
-    return _swamidass_baldi_sum(shards, "nonzero", shard_config, reduce_counts)
+def _shard_set_counts(
+    shards: DataFrame, payload_col: str, set_col: str, kernel
+) -> DataFrame:
+    """(shard, <set_col>) of each shard's merged state — the executor-
+    side reduction of a non-canonical table (>1 row per shard)."""
+    schema = pa.schema([("shard", pa.int64()), (set_col, pa.int64())])
+    return merge_groups(shards.select("shard", payload_col), "shard", kernel, schema)
 
 
 def _swamidass_baldi_sum(
     shards: DataFrame,
+    payload_col: str,
     set_col: str,
     shard_config: FilterConfig,
-    reduce_counts,
+    kernel,
 ) -> int:
     """Shared per-shard swamidass-baldi population sum
     (BloomFilter.getEstimatedPopulation, java:285-293) over whichever
@@ -413,10 +340,10 @@ def _swamidass_baldi_sum(
     A non-canonical table (>1 row per shard, e.g. a raw union of
     builds) cannot be summed per ROW: overlapping slots double-count
     and the log is nonlinear in the slot count.  Those shards are
-    reduced executor-side first (``reduce_counts``: OR / saturating
-    sum, identical to estimating the merge — the same union==merge
-    contract the cogroup probes keep), and still only (shard, count)
-    rows reach the driver."""
+    merged executor-side first (:func:`_shard_set_counts` with the OR /
+    saturating-add ``kernel``, identical to estimating the merge — the
+    same union==merge contract the cogroup probes keep), and still only
+    (shard, count) rows reach the driver."""
     import math
 
     m, k = shard_config.m, shard_config.k
@@ -429,7 +356,9 @@ def _swamidass_baldi_sum(
     ).collect()[0]
     canonical = int(probe["n"]) == int(probe["d"])
     rows = (
-        shards.select("shard", set_col) if canonical else reduce_counts(shards)
+        shards.select("shard", set_col)
+        if canonical
+        else _shard_set_counts(shards, payload_col, set_col, kernel)
     ).collect()
     total = 0.0
     for r in rows:
@@ -452,34 +381,23 @@ def _hadoop_fs_and_path(spark, path: str, child: str):
 
 SHARDS_SCHEMA = "shard long, rows bigint, ones bigint, bitset binary"
 
+_SHARDS_PA_SCHEMA = pa.schema([
+    ("shard", pa.int64()),
+    ("rows", pa.int64()),
+    ("ones", pa.int64()),
+    ("bitset", pa.binary()),
+])
+
 
 def merge_sharded(a: DataFrame, b: DataFrame) -> DataFrame:
     """OR-merge two sharded filters built under the SAME (shard_config,
-    num_shards): union the shard rows, then one groupBy(shard) that ORs
-    each shard's bitsets in pandas.  One shuffle of <= 2S tiny-prefixed
-    rows (bitsets ride the shuffle once each); the driver never sees a
-    bitset.  Associative and commutative like every bloom merge."""
-    from .filter import popcount
-
-    both = a.select("shard", "rows", "ones", "bitset").unionByName(
-        b.select("shard", "rows", "ones", "bitset")
-    )
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        bits = None
-        for buf in pdf["bitset"]:
-            arr = np.frombuffer(bytes(buf), dtype=np.uint8)
-            bits = arr.copy() if bits is None else np.bitwise_or(bits, arr)
-        return pd.DataFrame(
-            {
-                "shard": [int(pdf["shard"].iloc[0])],
-                "rows": [int(pdf["rows"].sum())],
-                "ones": [int(popcount(bits))],
-                "bitset": [bits.tobytes()],
-            }
-        )
-
-    return both.groupBy("shard").applyInPandas(merge, schema=SHARDS_SCHEMA)
+    num_shards): union the shard rows, then ``partials.merge_groups`` on
+    the shard.  One shuffle of <= 2S tiny-prefixed rows (bitsets ride
+    the shuffle once each); the driver never sees a bitset.
+    Associative and commutative like every bloom merge."""
+    cols = ("shard", "rows", "ones", "bitset")
+    both = a.select(*cols).unionByName(b.select(*cols))
+    return merge_groups(both, "shard", bloom_kernel(None), _SHARDS_PA_SCHEMA)
 
 
 def estimated_population_sharded(shards: DataFrame, shard_config: FilterConfig) -> int:
@@ -487,24 +405,9 @@ def estimated_population_sharded(shards: DataFrame, shard_config: FilterConfig) 
     baldi estimate from each shard's ones count, summed over shards
     (see :func:`_swamidass_baldi_sum`) — the driver never sees a
     bitset."""
-    from .filter import popcount
-
-    def reduce_counts(sdf: DataFrame) -> DataFrame:
-        def red(pdf: pd.DataFrame) -> pd.DataFrame:
-            bits = None
-            for buf in pdf["bitset"]:
-                arr = np.frombuffer(bytes(buf), dtype=np.uint8)
-                bits = arr.copy() if bits is None else np.bitwise_or(bits, arr)
-            return pd.DataFrame(
-                {
-                    "shard": [int(pdf["shard"].iloc[0])],
-                    "ones": [int(popcount(bits))],
-                }
-            )
-
-        return sdf.groupBy("shard").applyInPandas(red, "shard long, ones bigint")
-
-    return _swamidass_baldi_sum(shards, "ones", shard_config, reduce_counts)
+    return _swamidass_baldi_sum(
+        shards, "bitset", "ones", shard_config, bloom_kernel(shard_config)
+    )
 
 
 def save_sharded(

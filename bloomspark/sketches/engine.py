@@ -1,10 +1,10 @@
 """Generic mergeable-sketch partial aggregation over Spark.
 
 One harness for every sketch in this package — the exact shape of the
-Bloom build (build.py:220-310, the Spark replacement for the reference's
+Bloom build (build.py, the Spark replacement for the reference's
 shared-Redis-state distribution layer): scan -> ``mapInArrow`` partial
 per partition -> optional executor tree merge -> associative driver
-merge.  A sketch plugs in five functions; the harness owns partitioning,
+merge, with the tree merge, placement and merge routine of partials.py.  A sketch plugs in five functions; the harness owns partitioning,
 Arrow decoding, lineage metrics, tree-merge sizing, and the
 checkpoint-resume path (content-addressed buckets, identical to
 checkpoint.py).
@@ -31,14 +31,20 @@ from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..build import (
-    _collect_arrow,
-    _resolve_num_partitions,
-    _should_tree_merge,
-    key_column,
-    spread_repartition,
-)
+from ..build import key_column
 from ..hashing import Keys
+from ..partials import (
+    DEFAULT_TREE_MERGE_GROUPS,
+    collect_rows,
+    group_sort_key,
+    merge_groups,
+    merge_sketch_payloads,
+    place_build_input,
+    sketch_kernel,
+    split_groups,
+    spread_for_map_side,
+    tree_merge,
+)
 
 SKETCH_PARTIAL_SCHEMA = "part_id int, rows bigint, t_ms double, payload binary"
 
@@ -92,24 +98,22 @@ def build_sketch_partials(df: DataFrame, col: str, sketch) -> DataFrame:
     return sel.mapInArrow(gen, schema=SKETCH_PARTIAL_SCHEMA)
 
 
-def _merge_partials_udf(sketch):
-    import pandas as pd
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        state = None
-        for payload in pdf["payload"]:
-            other = sketch.deserialize(bytes(payload))
-            state = other if state is None else sketch.merge_states(state, other)
-        return pd.DataFrame(
-            {
-                "part_id": [int(pdf["part_id"].min())],
-                "rows": [int(pdf["rows"].sum())],
-                "t_ms": [float(pdf["t_ms"].sum())],
-                "payload": [sketch.serialize(state)],
-            }
-        )
-
-    return merge
+def _merged_sketch_partials(
+    df: DataFrame,
+    col: str,
+    sketch,
+    num_partitions: Optional[int] = None,
+    tree_merge_threshold: Optional[int] = None,
+    tree_merge_groups: int = DEFAULT_TREE_MERGE_GROUPS,
+) -> DataFrame:
+    """The partials a sketch build collects: one per input partition,
+    or ONE after the executor tree merge."""
+    df, n_parts = place_build_input(df, col, num_partitions)
+    return tree_merge(
+        build_sketch_partials(df, col, sketch), n_parts, sketch.payload_bytes(),
+        sketch_kernel(sketch), _SKETCH_PA_SCHEMA,
+        tree_merge_threshold, tree_merge_groups,
+    )
 
 
 class SketchHandle:
@@ -138,37 +142,45 @@ def build_sketch(
     *,
     num_partitions: Optional[int] = None,
     tree_merge_threshold: Optional[int] = None,
-    tree_merge_groups: int = 16,
+    tree_merge_groups: int = DEFAULT_TREE_MERGE_GROUPS,
 ) -> SketchHandle:
     """Distributed sketch build.  No shuffle in the default path; the
     executor tree merge engages when P partials would swamp the driver
-    (same policy/threshold as the Bloom build)."""
-    n_parts = _resolve_num_partitions(df, num_partitions)
-    if num_partitions is not None:
-        df = spread_repartition(df, num_partitions, col)
-    partials = build_sketch_partials(df, col, sketch)
-    if _should_tree_merge(n_parts, sketch.payload_bytes(), tree_merge_threshold):
-        partials = (
-            partials.withColumn(
-                "part_id", F.pmod(F.col("part_id"), F.lit(tree_merge_groups))
-            )
-            .groupBy("part_id")
-            .applyInPandas(_merge_partials_udf(sketch), schema=SKETCH_PARTIAL_SCHEMA)
-        )
-    rows = _collect_arrow(partials)
-    state = None
-    for r in rows:
-        other = sketch.deserialize(bytes(r["payload"]))
-        state = other if state is None else sketch.merge_states(state, other)
-    if state is None:
-        state = sketch.new_state()
+    (``partials.tree_merge``, the policy of the Bloom build)."""
+    rows = collect_rows(_merged_sketch_partials(
+        df, col, sketch, num_partitions, tree_merge_threshold, tree_merge_groups
+    ))
+    state = merge_sketch_payloads(sketch, [r["payload"] for r in rows])
     lineage = [
         {"part_id": r["part_id"], "rows": r["rows"], "t_ms": r["t_ms"]} for r in rows
     ]
     return SketchHandle(sketch, state, int(sum(r["rows"] for r in rows)), lineage)
 
 
+def _states_by_group(batches, sketch, group_idx: int, value_idx: int) -> dict:
+    """{group: [state, rows]} over Arrow batches: each batch is split by
+    its ``group_idx`` column with one null-safe sort (a null group is a
+    group of its own) and each group's ``value_idx`` values, in batch
+    order, update that group's state."""
+    states = {}
+    for batch in batches:
+        if batch.num_rows == 0:
+            continue
+        uniq, order, bounds = split_groups(batch.column(group_idx))
+        vals_all = batch.column(value_idx).take(order)
+        for g, lo, hi in zip(uniq, bounds, bounds[1:]):
+            vals = _decode(vals_all.slice(lo, hi - lo), sketch.numeric)
+            st = states.setdefault(g, [sketch.new_state(), 0])
+            sketch.update(st[0], vals)
+            st[1] += hi - lo
+    return states
+
+
 GROUPED_SKETCH_SCHEMA = "group string, rows bigint, payload binary"
+
+_GROUPED_SKETCH_PA_SCHEMA = pa.schema(
+    [("group", pa.string()), ("rows", pa.int64()), ("payload", pa.binary())]
+)
 
 
 def build_sketch_per_group(
@@ -180,83 +192,38 @@ def build_sketch_per_group(
     salt_partitions: int = 8,
 ) -> DataFrame:
     """One sketch per group -> DataFrame (group, rows, payload) — the
-    grouped twin of :func:`build_sketch`, same two-phase salted shape
-    as ``build_bloom_per_group`` (grouped.py): stage 1 accumulates one
-    state per (group, salt slice) inside ``mapInArrow``, stage 2 merges
-    each group's <= salt_partitions states.  Sketch states never touch
-    the driver; the classic use is approx-distinct / quantiles PER
-    TENANT at a group count where per-group exact aggregation would
+    grouped twin of :func:`build_sketch`, same two-phase shape as
+    ``build_bloom_per_group`` (grouped.py): stage 1 accumulates one
+    state per (input partition, group) inside ``mapInArrow``, placed by
+    ``partials.spread_for_map_side``; stage 2 merges each group's
+    states through ``partials.merge_groups``.  Sketch states never
+    touch the driver; the classic use is approx-distinct / quantiles
+    PER TENANT at a group count where per-group exact aggregation would
     shuffle the full table."""
-    import pandas as pd
-
     numeric = sketch.numeric
     keyed = df.select(
         F.col(group_col).cast("string").alias("__group"),
         _value_column(col, numeric).alias("__v"),
-        F.pmod(
-            F.xxhash64(_value_column(col, numeric)), F.lit(salt_partitions)
-        ).alias("__salt"),
     )
 
-    from ..grouped import _group_sort_key, _split_groups
-
     def stage1(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        states: dict = {}
-        for batch in batches:
-            if batch.num_rows == 0:
-                continue
-            # one null-safe sort split per batch (a null group is a
-            # group of its own); slices keep each group's batch order
-            uniq, order, bounds = _split_groups(batch.column(0))
-            vals_all = batch.column(1).take(order)
-            for g, lo, hi in zip(uniq, bounds, bounds[1:]):
-                vals = _decode(vals_all.slice(lo, hi - lo), numeric)
-                st = states.setdefault(g, [sketch.new_state(), 0])
-                sketch.update(st[0], vals)
-                st[1] += hi - lo
+        states = _states_by_group(batches, sketch, 0, 1)
         if not states:
             return
         cols = {"group": [], "rows": [], "payload": []}
-        for g, (st, rows) in sorted(states.items(), key=_group_sort_key):
+        for g, (st, rows) in sorted(states.items(), key=group_sort_key):
             cols["group"].append(g)
             cols["rows"].append(rows)
             cols["payload"].append(sketch.serialize(st))
-        yield pa.RecordBatch.from_pydict(
-            cols,
-            schema=pa.schema(
-                [("group", pa.string()), ("rows", pa.int64()),
-                 ("payload", pa.binary())]
-            ),
-        )
+        yield pa.RecordBatch.from_pydict(cols, schema=_GROUPED_SKETCH_PA_SCHEMA)
 
-    def stage2(pdf):
-        state = None
-        for payload in pdf["payload"]:
-            other = sketch.deserialize(bytes(payload))
-            state = other if state is None else sketch.merge_states(state, other)
-        return pd.DataFrame(
-            {
-                "group": [pdf["group"].iloc[0]],
-                "rows": [int(pdf["rows"].sum())],
-                "payload": [sketch.serialize(state)],
-            }
-        )
-
-    # map-side stage 1 when the input's partitioning is statically
-    # healthy (round-7, same policy as grouped._spread_keyed): no keyed
-    # row shuffles, stage 2 merges <= P states per group; otherwise
-    # spread once on (group, salt) as before
-    from ..build import plan_num_partitions
-
-    shuffle_parts = max(
-        int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")), 1
+    placed = spread_for_map_side(
+        keyed, df, F.col("__group"),
+        F.pmod(F.xxhash64(F.col("__v")), F.lit(salt_partitions)),
     )
-    known = plan_num_partitions(df)
-    if known is None or known * 2 < shuffle_parts:
-        keyed = keyed.repartition(shuffle_parts, "__group", "__salt")
-    partials = keyed.mapInArrow(stage1, schema=GROUPED_SKETCH_SCHEMA)
-    return partials.groupBy("group").applyInPandas(
-        stage2, schema=GROUPED_SKETCH_SCHEMA
+    partials = placed.mapInArrow(stage1, schema=GROUPED_SKETCH_SCHEMA)
+    return merge_groups(
+        partials, "group", sketch_kernel(sketch), _GROUPED_SKETCH_PA_SCHEMA
     )
 
 
@@ -338,21 +305,9 @@ def build_sketch_checkpointed(
         if len(missing) < num_buckets:
             keyed = keyed.where(F.col("__bucket").isin(missing))
 
-        from ..grouped import _split_groups
-
         def gen(batches):
             t0 = time.time()
-            states = {}
-            for batch in batches:
-                if batch.num_rows == 0:
-                    continue
-                uniq, order, bounds = _split_groups(batch.column(1))
-                vals_all = batch.column(0).take(order)
-                for b, lo, hi in zip(uniq, bounds, bounds[1:]):
-                    vals = _decode(vals_all.slice(lo, hi - lo), numeric)
-                    st = states.setdefault(int(b), [sketch.new_state(), 0])
-                    sketch.update(st[0], vals)
-                    st[1] += hi - lo
+            states = _states_by_group(batches, sketch, 1, 0)
             if not states:
                 return
             cols = {k: [] for k in ("part_id", "rows", "t_ms", "payload")}
@@ -368,19 +323,13 @@ def build_sketch_checkpointed(
             gen, schema=SKETCH_PARTIAL_SCHEMA
         ).write.mode("append").parquet(partials_path)
 
-    rows = _collect_arrow(spark.read.parquet(partials_path))
-    state = None
-    for r in rows:
-        other = sketch.deserialize(bytes(r["payload"]))
-        state = other if state is None else sketch.merge_states(state, other)
-    if state is None:
-        state = sketch.new_state()
+    rows = collect_rows(spark.read.parquet(partials_path))
+    state = merge_sketch_payloads(sketch, [r["payload"] for r in rows])
     lineage = [
         {"bucket": r["part_id"], "rows": r["rows"], "t_ms": r["t_ms"],
          "resumed": r["part_id"] in done}
         for r in rows
     ]
-    import json as _json
     with open(os.path.join(checkpoint_dir, "lineage.json"), "w") as f:
-        _json.dump({"num_buckets": num_buckets, "buckets": lineage}, f, indent=2)
+        json.dump({"num_buckets": num_buckets, "buckets": lineage}, f, indent=2)
     return SketchHandle(sketch, state, int(sum(r["rows"] for r in rows)), lineage)

@@ -187,7 +187,8 @@ def test_grouped_builds_identical_across_stage1_flushes(spark, monkeypatch):
     import pyarrow as pa
 
     from bloomspark import grouped
-    from bloomspark.build import _CounterAccumulator, _PositionAccumulator
+    from bloomspark.hashing import Keys, get_hash_fn
+    from bloomspark.partials import CounterAccumulator, PositionAccumulator
 
     cfg = FilterConfig.complete(n=2_000, p=0.01, counting_bits=16)
     df = spark.range(0, 4_000, 1, 2).select(
@@ -209,14 +210,32 @@ def test_grouped_builds_identical_across_stage1_flushes(spark, monkeypatch):
         {"__group": [g for g in keys_by_group for _ in keys_by_group[g]],
          "__key": [k for g in keys_by_group for k in keys_by_group[g]]}
     ).to_batches(max_chunksize=500)
-    for new_acc, add, split, col, pos_bytes in (
-        (lambda: _PositionAccumulator(cfg.m, cfg.num_bytes),
-         _PositionAccumulator.add, grouped._split_positions, "bitset", 4),
-        (lambda: _CounterAccumulator(cfg), _CounterAccumulator.add_pairs,
-         grouped._split_position_counts, "counters", 8),
-    ):
-        stage1 = grouped._grouped_stage1_gen(cfg, new_acc, add, split, col, pos_bytes)
-        assert len(list(stage1(iter(batches)))) == len(batches) >= 8
+    def stage1_flushes(cfg):
+        return [
+            len(list(grouped._grouped_stage1_gen(cfg, new_acc, add, split, col)(
+                iter(batches)
+            )))
+            for new_acc, add, split, col in (
+                (lambda: PositionAccumulator(cfg.m, cfg.num_bytes),
+                 PositionAccumulator.add, grouped._split_positions, "bitset"),
+                (lambda: CounterAccumulator(cfg), CounterAccumulator.add_pairs,
+                 grouped._split_position_counts, "counters"),
+            )
+        ]
+
+    assert stage1_flushes(cfg) == [len(batches)] * 2 and len(batches) >= 8
+    # int64 positions count 8 bytes each: a budget of 6 bytes per hashed
+    # position flushes after every batch (counting at 4 bytes would
+    # flush every other batch and hold twice the budget)
+    cfg64 = FilterConfig.complete(
+        n=2_000, p=0.01, counting_bits=16, hash_method="Murmur3"
+    )
+    assert get_hash_fn("Murmur3")(
+        Keys.from_objects(["x"]), cfg64.m, cfg64.k
+    ).dtype == np.int64
+    monkeypatch.setattr(grouped, "_STAGE1_FLUSH_BYTES", 500 * cfg64.k * 6)
+    assert stage1_flushes(cfg64) == [len(batches)] * 2
+    monkeypatch.setattr(grouped, "_STAGE1_FLUSH_BYTES", budget)
 
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "500")
     try:
@@ -430,41 +449,42 @@ def test_build_report_metrics(spark, orders):
     assert report["ones"] == bf.cardinality()
     assert 0 < report["fill_ratio"] < 1
     assert len(report["partials"]) == 4
-    assert all(p["kind"] in ("sparse", "sparse_z", "dense", "dense_z") for p in report["partials"])
+    assert all(p["kind"] in ("sparse", "dense") for p in report["partials"])
     import json
 
     json.dumps(report)  # must be JSON-serializable as-is
 
 
-def test_partial_codec_deflate_roundtrip(spark, orders, monkeypatch):
-    """Opt-in deflate partial codec (BLOOMSPARK_PARTIAL_CODEC=deflate):
-    z-kinds appear on the wire and the merged filter is byte-identical
-    to the uncompressed build.  Default stays 'none' — measured slower
-    on this box (Spark transport already lz4-compresses; see build.py)."""
-    import bloomspark.build as b
-    from bloomspark import FilterConfig, build_bloom
-
-    cfg = FilterConfig.complete(n=200_000, p=0.01)
-    plain = build_bloom(orders.repartition(6), "o_orderkey", cfg)
-    monkeypatch.setattr(b, "_Z_MIN_BYTES", 1)
-    kind, payload = b._encode_sparse(
-        __import__("numpy").arange(0, 400_000, 3, dtype=__import__("numpy").uint32), 4
+def test_merge_kernels_refuse_unknown_kinds():
+    """A payload of an unknown kind (e.g. a retired ``dense_z``) must not
+    merge: read as positions it would set garbage bits silently."""
+    from bloomspark.partials import (
+        PositionAccumulator,
+        add_counting_payload,
+        merge_bloom_payloads,
     )
-    assert kind == "sparse_z"
-    assert (b._decode_sparse(kind, payload)
-            == __import__("numpy").arange(0, 400_000, 3, dtype=__import__("numpy").uint32)).all()
-    # driver-side merge handles z-kinds byte-identically
-    import numpy as np
 
-    pos = np.unique(np.random.RandomState(0).randint(0, cfg.m, 100_000)).astype(np.uint32)
-    k1, p1 = b._encode_sparse(pos, 4)
-    dense = b._merge_partial_arrays([k1], [p1], cfg)
-    monkeypatch.setattr(b, "_Z_MIN_BYTES", None)
-    k2, p2 = b._encode_sparse(pos, 4)
-    assert k2 == "sparse"
-    dense2 = b._merge_partial_arrays([k2], [p2], cfg)
-    assert dense.tobytes() == dense2.tobytes()
-    assert plain == build_bloom(orders.repartition(6), "o_orderkey", cfg)
+    acc = PositionAccumulator(CFG.m, CFG.num_bytes)
+    acc.add(np.arange(0, 64, 3, dtype=np.uint32))
+    kind, _, payload = acc.finish()
+    assert kind == "sparse"
+    bits = merge_bloom_payloads([kind], [payload], CFG)
+    assert bits.tobytes() == local_filter_bits(np.arange(0, 64, 3)).tobytes()
+    for bad in ("dense_z", "sparse_z", "bogus"):
+        with pytest.raises(ValueError, match="unknown bloom partial kind"):
+            merge_bloom_payloads(["dense", bad], [bits.tobytes(), payload], CFG)
+    ccfg = FilterConfig.complete(n=100, p=0.01, counting_bits=8)
+    counters = np.zeros(ccfg.m, dtype=np.uint8)
+    with pytest.raises(ValueError, match="unknown counting partial kind"):
+        add_counting_payload(counters, "cdense_z", b"\x00", ccfg, lambda n: None)
+
+
+def local_filter_bits(positions):
+    from bloomspark.filter import set_positions
+
+    bits = np.zeros(CFG.num_bytes, dtype=np.uint8)
+    set_positions(bits, np.asarray(positions, dtype=np.int64))
+    return bits
 
 
 def test_counting_partial_wire_kinds_byte_identical(spark, monkeypatch):
@@ -474,6 +494,7 @@ def test_counting_partial_wire_kinds_byte_identical(spark, monkeypatch):
     import numpy as np
 
     import bloomspark.build as b
+    import bloomspark.partials as partials
     from bloomspark import FilterConfig, build_counting
 
     keys = spark.range(2000).select(F.col("id").cast("string").alias("k")).repartition(4)
@@ -484,7 +505,7 @@ def test_counting_partial_wire_kinds_byte_identical(spark, monkeypatch):
     assert set(pk["kind"]) == {"cdense"}
 
     # forbid dense accumulation -> every partial rides the sparse wire
-    monkeypatch.setattr(b, "_COUNTING_DENSE_ALLOC_LIMIT", 0)
+    monkeypatch.setattr(partials, "COUNTING_DENSE_ALLOC_LIMIT", 0)
     sparse_built = build_counting(keys, "k", cfg)
     ps = b.build_counting_partials(keys, "k", cfg).toPandas()
     assert set(ps["kind"]) == {"csparse"}

@@ -162,37 +162,28 @@ def test_crypt_digest_chaining():
     assert [int(x) for x in pos] == expected
 
 
-def test_sha_matrix_kernels_parity():
-    """The whole-batch numpy SHA-1/SHA-256 kernels are bit-identical to
-    hashlib across lengths (incl. multi-block) and their position paths
-    match the generic hashlib chain path.  They are NOT the default
-    dispatch (on SHA-NI hardware per-row OpenSSL measures faster — see
-    hashing._MATRIX_DIGESTS), but a non-SHA-NI deployment can enable
-    them, so parity must not rot."""
+def test_sha_matrix_kernels_parity(monkeypatch):
+    """The whole-batch numpy MD5 kernel — the one matrix kernel still
+    dispatched (hashing._MATRIX_DIGESTS) — is bit-identical to hashlib
+    across lengths (incl. multi-block), and its position path matches
+    the generic per-row hashlib chain path of ``positions_crypt``."""
     import numpy as np
 
-    from bloomspark.hashing import (
-        Keys,
-        _positions_crypt_matrix,
-        _sha1_matrix,
-        _sha256_matrix,
-        positions_crypt,
-    )
+    from bloomspark import hashing
+    from bloomspark.hashing import Keys, _md5_matrix, positions_crypt
 
     rng = np.random.RandomState(0)
     for L in [0, 1, 7, 55, 56, 63, 64, 119, 120, 200]:
         mat = rng.randint(0, 256, size=(9, L)).astype(np.uint8)
         for i in range(9):
             b = mat[i].tobytes()
-            assert _sha256_matrix(mat)[i].tobytes() == hashlib.sha256(b).digest()
-            assert _sha1_matrix(mat)[i].tobytes() == hashlib.sha1(b).digest()
+            assert _md5_matrix(mat)[i].tobytes() == hashlib.md5(b).digest()
     keys = Keys.from_objects([f"key{i}" for i in range(500)] + ["foo", "bar", ""])
-    for m, k in [(8143, 6), (1 << 20, 7), (7, 40)]:
-        for meth in ("SHA1", "SHA256"):
-            assert (
-                _positions_crypt_matrix(keys, m, k, meth)
-                == positions_crypt(keys, m, k, meth)
-            ).all()
+    cases = [(8143, 6), (1 << 20, 7), (7, 40)]
+    matrix = [positions_crypt(keys, m, k, "MD5") for m, k in cases]
+    monkeypatch.setattr(hashing, "_MATRIX_DIGESTS", {})
+    for (m, k), got in zip(cases, matrix):
+        assert (got == positions_crypt(keys, m, k, "MD5")).all()
 
 
 def test_md2_rfc1319_vectors():

@@ -303,3 +303,74 @@ def test_file_index_prune_plan_shapes(spark, tmp_path_factory):
     finally:
         mat.unpersist()
     assert ranged.columns == ["file", "may_contain"]
+
+
+def test_partial_merges_plan_arrow_only(spark):
+    """Every executor-side partial merge goes through the one Arrow
+    routine (partials.merge_groups): with the tree merge forced, the
+    bloom, counting and sketch builds merge P -> G -> 1 (two
+    FlatMapGroupsInArrow), and the grouped sketch stage 2, both shard
+    merges and the population estimates of a non-canonical (unioned)
+    table plan FlatMapGroupsInArrow — none of them
+    FlatMapGroupsInPandas."""
+    from bloomspark import build, sharded
+    from bloomspark.partials import bloom_kernel, counting_kernel
+    from bloomspark.sketches import build_sketch_per_group
+    from bloomspark.sketches.engine import _merged_sketch_partials
+
+    df = spark.range(0, 1_000, 1, 4).select(
+        (F.col("id") % 7).cast("string").alias("g"),
+        F.col("id").cast("string").alias("k"),
+    )
+    ccfg = FilterConfig.complete(n=1_000, p=0.01, counting_bits=16)
+    hll = HyperLogLog(p=10)
+    sb = sharded.build_sharded_bloom(df, "k", CFG, num_shards=4)
+    sc = sharded.build_sharded_counting(df, "k", ccfg, num_shards=4)
+    trees = {
+        "build_bloom": build._merged_bloom_partials(
+            df, "k", CFG, tree_merge_threshold=1),
+        "build_counting": build._merged_counting_partials(
+            df, "k", ccfg, tree_merge_threshold=1),
+        "build_sketch": _merged_sketch_partials(
+            df, "k", hll, tree_merge_threshold=1),
+    }
+    merges = {
+        "build_sketch_per_group": build_sketch_per_group(df, "g", "k", hll),
+        "merge_sharded": sharded.merge_sharded(sb, sb),
+        "merge_sharded_counting": sharded.merge_sharded_counting(sc, sc, ccfg),
+        "estimated_population_sharded": sharded._shard_set_counts(
+            sb.unionByName(sb), "bitset", "ones", bloom_kernel(CFG)),
+        "estimated_population_sharded_counting": sharded._shard_set_counts(
+            sc.unionByName(sc), "counters", "nonzero", counting_kernel(ccfg)),
+    }
+    for name, df_ in {**trees, **merges}.items():
+        p = plan(df_, "simple")
+        assert "FlatMapGroupsInPandas" not in p, name
+        # the merge is the plan's top node (inputs built by grouped
+        # builds carry their own stage-2 merges below it)
+        top = [l for l in p.splitlines() if l.lstrip().startswith("+-")][0]
+        assert "FlatMapGroupsInArrow" in top, name
+        if name in trees:
+            assert p.count("FlatMapGroupsInArrow") == 2, name
+
+
+def test_cogroups_plan_arrow(spark):
+    """The grouped cogroup probe and the sharded counting subtract are
+    Arrow cogroups (FlatMapCoGroupsInArrow), never pandas ones."""
+    from bloomspark import with_group_membership
+    from bloomspark.sharded import build_sharded_counting, subtract_sharded_counting
+
+    df = spark.range(0, 1_000, 1, 4).select(
+        (F.col("id") % 7).cast("string").alias("g"),
+        F.col("id").cast("string").alias("k"),
+    )
+    ccfg = FilterConfig.complete(n=1_000, p=0.01, counting_bits=16)
+    sc = build_sharded_counting(df, "k", ccfg, num_shards=4)
+    probed = with_group_membership(
+        df, "g", "k", build_bloom_per_group(df, "g", "k", CFG), CFG,
+        strategy="cogroup",
+    )
+    for df_ in (probed, subtract_sharded_counting(sc, sc, ccfg)):
+        p = plan(df_, "simple")
+        assert "FlatMapCoGroupsInArrow" in p
+        assert "FlatMapCoGroupsInPandas" not in p

@@ -1,9 +1,9 @@
 """Property-based tests (hypothesis) for the driver-side filter algebra
 and the hash suite — laws that must hold for ARBITRARY inputs, not just
 the fixtures: no false negatives, union/intersect monotonicity, counting
-add/remove inversion, serde identity, position ranges for every method.
-All pure driver-side (no Spark session), so the whole module runs in
-seconds."""
+add/remove inversion, serde identity, position ranges for every method,
+merge-order independence of the partial kernels.  All pure driver-side
+(no Spark session), so the whole module runs in seconds."""
 
 import numpy as np
 from hypothesis import given, settings, strategies as st
@@ -122,22 +122,18 @@ def test_all_methods_positions_in_range(keys):
 )
 @settings(max_examples=60, deadline=None)
 def test_counter_accumulator_matches_naive(pairs, dense_limit):
-    """_CounterAccumulator (hybrid csparse/cdense wire) must agree with
+    """CounterAccumulator (hybrid csparse/cdense wire) must agree with
     a naive dense saturating accumulation for ANY (pos, cnt) sequence
     and ANY densification policy — sparse-vs-dense is a wire choice,
     never a semantics choice."""
-    from bloomspark.build import (
-        _CounterAccumulator,
-        add_counting_payload,
-        _COUNTING_COMPACT_ENTRIES,
-    )
+    from bloomspark.partials import CounterAccumulator, add_counting_payload
     from bloomspark.counting import counter_dtype, counter_max
 
     cfg = FilterConfig.complete(n=1000, p=0.02, counting_bits=8)
     dt, mx = counter_dtype(8), counter_max(8)
 
     naive = np.zeros(cfg.m, dtype=np.uint64)
-    acc = _CounterAccumulator(cfg, dense_limit)
+    acc = CounterAccumulator(cfg, dense_limit)
     for pos, cnt in pairs:
         acc.add_pairs(
             np.array([pos], dtype=np.int64), np.array([cnt], dtype=np.int64)
@@ -200,3 +196,111 @@ def test_hash_sample_threshold_monotone(f1, f2):
 
     lo, hi = sorted((f1, f2))
     assert int(lo * SAMPLE_SPACE) <= int(hi * SAMPLE_SPACE)
+
+
+def _merge_tree(rows, kernel, cols, rnd):
+    """Merge ``rows`` (dicts of ``cols``) through ``kernel`` as one
+    random binary tree over a random permutation."""
+    import pyarrow as pa
+
+    rows = list(rows)
+    rnd.shuffle(rows)
+
+    def tree(part):
+        if len(part) == 1:
+            return part[0]
+        cut = rnd.randint(1, len(part) - 1)
+        merged = kernel(pa.Table.from_pylist([tree(part[:cut]), tree(part[cut:])]))
+        return {c: merged[c] for c in cols}
+
+    return tree(rows)
+
+
+@given(
+    KEYS,
+    st.lists(st.sampled_from(["sparse", "dense"]), min_size=1, max_size=6),
+    st.lists(st.sampled_from(["csparse", "cdense"]), min_size=1, max_size=6),
+    st.integers(0, 2**32 - 1),
+)
+@settings(max_examples=40, deadline=None)
+def test_partial_merges_identical_in_any_tree_order(keys, bkinds, ckinds, seed):
+    """Split a key set into partials of forced wire kinds and merge them
+    through the shared kernels (partials.py) in random tree orders: the
+    merged bytes equal a direct build every time, for bloom, counting
+    (both the sparse-out tree-merge kernel and the dense-out kernel)
+    and a sketch state."""
+    import random
+
+    from bloomspark.counting import counter_dtype
+    from bloomspark.hashing import Keys
+    from bloomspark.partials import (
+        CounterAccumulator,
+        bloom_kernel,
+        counting_kernel,
+        merge_bloom_payloads,
+        merge_counting_payloads,
+        positions_to_dense_bits,
+        sketch_kernel,
+    )
+    from bloomspark.sketches import HyperLogLog
+
+    rnd = random.Random(seed)
+    pos = hash_positions(keys, CFG.m, CFG.k, CFG.hash_method)
+    cpos = hash_positions(keys, CCFG.m, CCFG.k, CCFG.hash_method)
+
+    def split(n):
+        cuts = sorted(rnd.randint(0, len(keys)) for _ in range(n - 1))
+        return [slice(a, b) for a, b in zip([0] + cuts, cuts + [len(keys)])]
+
+    # bloom: sparse partials carry sorted distinct uint32 positions
+    rows = []
+    for kind, part in zip(bkinds, split(len(bkinds))):
+        uniq = np.unique(pos[part])
+        payload = (
+            uniq.astype(np.uint32).tobytes() if kind == "sparse"
+            else positions_to_dense_bits(uniq, CFG.m, CFG.num_bytes).tobytes()
+        )
+        rows.append({"kind": kind, "bitset": payload})
+    expected = positions_to_dense_bits(np.unique(pos), CFG.m, CFG.num_bytes)
+    for _ in range(3):
+        root = _merge_tree(rows, bloom_kernel(CFG), ("kind", "bitset"), rnd)
+        got = merge_bloom_payloads([root["kind"]], [root["bitset"]], CFG)
+        assert got.tobytes() == expected.tobytes()
+
+    # counting: csparse via an accumulator that never densifies, cdense
+    # as the plain counter array
+    direct = CountingBloomFilter(CCFG)
+    direct.add_batch(keys)
+    rows = []
+    for kind, part in zip(ckinds, split(len(ckinds))):
+        if kind == "csparse":
+            acc = CounterAccumulator(CCFG, dense_limit=0)
+            acc.add(cpos[part])
+            got_kind, _, _, payload = acc.finish()
+            assert got_kind == kind
+        else:
+            arr = np.zeros(CCFG.m, dtype=counter_dtype(CCFG.counting_bits))
+            np.add.at(arr, cpos[part].ravel(), 1)
+            payload = arr.tobytes()
+        rows.append({"kind": kind, "counters": payload})
+    for sparse in (True, False):
+        for _ in range(2):
+            root = _merge_tree(
+                rows, counting_kernel(CCFG, sparse=sparse), ("kind", "counters"), rnd
+            )
+            got = merge_counting_payloads([root["kind"]], [root["counters"]], CCFG)
+            assert got.tobytes() == direct.counters.tobytes()
+
+    # sketch: HyperLogLog states
+    hll = HyperLogLog(p=8)
+    rows = []
+    for part in split(rnd.randint(1, 6)):
+        state = hll.new_state()
+        if part.stop > part.start:
+            hll.update(state, Keys.from_objects(keys[part]))
+        rows.append({"payload": hll.serialize(state)})
+    whole = hll.new_state()
+    hll.update(whole, Keys.from_objects(keys))
+    for _ in range(3):
+        root = _merge_tree(rows, sketch_kernel(hll), ("payload",), rnd)
+        assert root["payload"] == hll.serialize(whole)
