@@ -1210,16 +1210,14 @@ def q_fast_extended_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     words = fast_bloom_words(lineitem, "l_orderkey", cfg)
     return with_fast_membership(
-        orders.select("o_orderkey"), "o_orderkey", words, cfg,
-        strategy="exploded",
+        orders.select("o_orderkey"), "o_orderkey", words, cfg
     ).select("o_orderkey", "member")
 
 
 def q_fast_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JVM-native counting tier: explode + count(*) position aggregate,
-    blocked-broadcast least() probe — frequency estimates equal exact
-    GROUP BY counts at p=1e-9."""
-    from bloomspark.fast import build_fast_counting, with_fast_estimated_count
+    """Collected XXHash64KM counting filter: the mapInArrow build and the
+    Arrow min-selection probe on the fast tier's hash method — frequency
+    estimates equal exact GROUP BY counts at p=1e-9."""
 
     lineitem = _read(spark, sf_dir, "lineitem")
     part = _read(spark, sf_dir, "part")
@@ -1227,16 +1225,16 @@ def q_fast_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         n=max(part.count(), 1), p=EXACT_P, counting_bits=32,
         hash_method="XXHash64KM",
     )
-    cbf = build_fast_counting(lineitem, "l_partkey", cfg)
-    return with_fast_estimated_count(
-        part.select("p_partkey"), "p_partkey", cbf, cfg
+    cbf = build_counting(lineitem, "l_partkey", cfg)
+    return with_estimated_count(
+        part.select("p_partkey"), "p_partkey", cbf
     ).select("p_partkey", "est_count")
 
 
 def q_fast_extended_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Extended-m counting, never collected: the distributed sparse
     (pos, cnt) table (fast_counting_positions) probed with the exploded
-    single-join strategy — no m-proportional structure anywhere, driver
+    single join — no m-proportional structure anywhere, driver
     or wire.  Exact at this fill, so the oracle is the plain GROUP BY."""
     from bloomspark.fast import fast_counting_positions, with_fast_estimated_count
 
@@ -1248,7 +1246,7 @@ def q_fast_extended_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pos = fast_counting_positions(lineitem, "l_partkey", cfg)
     return with_fast_estimated_count(
-        part.select("p_partkey"), "p_partkey", pos, cfg, strategy="exploded"
+        part.select("p_partkey"), "p_partkey", pos, cfg
     ).select("p_partkey", "est_count")
 
 
@@ -1272,7 +1270,7 @@ def q_fast_counts_remove(spark: SparkSession, sf_dir: str) -> DataFrame:
         lineitem, lineitem.where(F.col("l_returnflag") == "R"), "l_partkey", cfg
     )
     return with_fast_estimated_count(
-        part.select("p_partkey"), "p_partkey", pos, cfg, strategy="exploded"
+        part.select("p_partkey"), "p_partkey", pos, cfg
     ).select("p_partkey", "est_count")
 
 

@@ -59,12 +59,10 @@ from .sharded import (build_sharded_bloom, build_sharded_counting,
 from .fast import (
     blocks_from_bloom,
     build_fast_bloom,
-    build_fast_counting,
     fast_bloom_words,
     fast_counting_positions,
     with_fast_estimated_count,
     with_fast_membership,
-    words_from_bloom,
     words_to_blocks,
 )
 from .join import (bloom_prune_join, bloom_semi_filter,
@@ -109,10 +107,8 @@ __all__ = [
     "build_fast_bloom",
     "fast_bloom_words",
     "with_fast_membership",
-    "words_from_bloom",
     "words_to_blocks",
     "blocks_from_bloom",
-    "build_fast_counting",
     "fast_counting_positions",
     "with_fast_estimated_count",
     "bloom_prune_join",

@@ -47,6 +47,9 @@ Plan shapes (pinned in tests/test_plans.py):
   cache-resident and each bit test is one in-place ``element_at`` into
   broadcast memory.  Measured on 20M rows x 32 cores: 12.2M rows/s
   vs 8.6M (pandas bitset probe) vs 0.21M (word-granular join).
+- **extended-m and counting probes**: explode(k) -> ONE join against
+  the never-collected (word, bits) or (pos, cnt) table -> min per
+  distinct key -> re-join the probe rows.
 
 Scale limits: the collected form needs m/8 driver bytes (same as any
 single filter); the probe broadcasts ~k copies of the blocked filter
@@ -58,19 +61,16 @@ in all plans).  Past broadcast-sized filters, go to the sharded tier
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .build import reserve_probe_cols
-from .counting import CountingBloomFilter
 from .filter import BloomFilter
 from .hashing import FAST_SEED2
 from .params import FilterConfig
 
 FAST_HASH_METHOD = "XXHash64KM"
-
-WORDS_SCHEMA = "word long, bits long"
 
 
 def _require_fast(config: FilterConfig) -> None:
@@ -134,7 +134,7 @@ def build_fast_bloom(df: DataFrame, col: str, config: FilterConfig) -> BloomFilt
     """Native build collected into an ordinary :class:`BloomFilter`.
 
     The driver receives at most m/64 (word, bits) rows — the dense
-    bitset's own size in a sparse dress — via one Arrow ``toPandas``.
+    bitset's own size in a sparse dress — via one ``toArrow`` collect.
     For filters too big to collect, keep :func:`fast_bloom_words`
     distributed or shard (sharded.py)."""
     _require_fast(config)
@@ -143,30 +143,13 @@ def build_fast_bloom(df: DataFrame, col: str, config: FilterConfig) -> BloomFilt
             "extended-m fast filters cannot be collected to one driver "
             "bitset; keep fast_bloom_words distributed or use sharded.py"
         )
-    pdf = fast_bloom_words(df, col, config).toPandas()
+    tbl = fast_bloom_words(df, col, config).toArrow()
     n_words = (config.m + 63) // 64
     arr = np.zeros(n_words, dtype=np.uint64)
-    if len(pdf):
-        arr[pdf["word"].to_numpy(dtype=np.int64)] = (
-            pdf["bits"].to_numpy(dtype=np.int64).view(np.uint64)
-        )
+    if tbl.num_rows:
+        arr[tbl["word"].to_numpy()] = tbl["bits"].to_numpy().view(np.uint64)
     bits = np.frombuffer(arr.tobytes(), dtype=np.uint8)[: config.num_bytes].copy()
     return BloomFilter(config, bits)
-
-
-def words_from_bloom(spark: SparkSession, bloom: BloomFilter) -> DataFrame:
-    """A BloomFilter's nonzero 64-bit words as a (word, bits) DataFrame
-    — lets any XXHash64KM filter (fast-built, parity-built, restored
-    from JSON/checkpoint) feed the native probe."""
-    _require_fast(bloom.config)
-    raw = bloom.to_bytes()
-    pad = (-len(raw)) % 8
-    arr = np.frombuffer(raw + b"\x00" * pad, dtype=np.uint64)
-    nz = np.nonzero(arr)[0]
-    pdf = pd.DataFrame(
-        {"word": nz.astype(np.int64), "bits": arr[nz].view(np.int64)}
-    )
-    return spark.createDataFrame(pdf, schema=WORDS_SCHEMA)
 
 
 #: Words per probe block: 512 x 8 B = 4 KiB rows.  Keeps the broadcast
@@ -176,34 +159,6 @@ def words_from_bloom(spark: SparkSession, bloom: BloomFilter) -> DataFrame:
 #: big: 0.21M rows/s) and one giant array row (BroadcastNestedLoopJoin
 #: copies the build row per output row).
 BLOCK_WORDS = 512
-
-BLOCKS_SCHEMA = "block long, words array<bigint>"
-
-
-def _tag_block_words(df: DataFrame, array_col: str, block_words: int) -> DataFrame:
-    """Stamp the blocking granularity into the array column's schema
-    metadata.  A pre-blocked table probed with a different block_words
-    would silently compute wrong bits — including FALSE NEGATIVES, which
-    would break bloom_prune_join's no-false-negative guarantee — so the
-    producer records it and the probe validates it (no extra Spark job:
-    metadata rides the schema)."""
-    others = [c for c in df.columns if c != array_col]
-    return df.select(
-        *others,
-        F.col(array_col).alias(array_col, metadata={"block_words": block_words}),
-    )
-
-
-def _check_block_words(df: DataFrame, array_col: str, block_words: int) -> None:
-    meta = df.schema[array_col].metadata or {}
-    tagged = meta.get("block_words")
-    if tagged is not None and int(tagged) != int(block_words):
-        raise ValueError(
-            f"blocked table was built with block_words={int(tagged)} but the "
-            f"probe uses block_words={block_words}; bit positions would be "
-            "read from the wrong slots (false negatives possible)"
-        )
-
 
 # ---------------------------------------------------------------------------
 # Counting tier: the same zero-Python treatment for the counting filter.
@@ -247,45 +202,35 @@ def fast_counting_positions_with_removals(
     )
 
 
-def build_fast_counting(df: DataFrame, col: str, config: FilterConfig) -> CountingBloomFilter:
-    """Native counting-filter build collected into an ordinary
-    :class:`CountingBloomFilter` — byte-identical to the mapInArrow
-    ``build_counting`` under the same XXHash64KM config (saturation at
-    the counter width applies on the driver scatter, with the overflow
-    count reported like any other build)."""
-    _require_fast(config)
-    if config.extended:
-        raise ValueError(
-            "extended-m fast counting filters cannot be collected; "
-            "keep fast_counting_positions distributed or shard"
-        )
-    pdf = fast_counting_positions(df, col, config).toPandas()
-    cbf = CountingBloomFilter(config)
-    if len(pdf):
-        pos = pdf["pos"].to_numpy(dtype=np.int64)
-        cnt = pdf["cnt"].to_numpy(dtype=np.int64)
-        mx = int(cbf.max_count)
-        over = int((cnt > mx).sum())
-        cbf.counters[pos] = np.minimum(cnt, mx).astype(cbf.counters.dtype)
-        if over:
-            cbf._on_overflow(over)
-    return cbf
-
-
-def _with_fast_estimated_count_exploded(
+def with_fast_estimated_count(
     df: DataFrame,
     col: str,
-    positions: DataFrame,
+    filter_src: DataFrame,
     config: FilterConfig,
-    out_col: str,
+    *,
+    out_col: str = "est_count",
 ) -> DataFrame:
-    """Single-join frequency estimate: explode the k positions, ONE left
-    join against the sparse (pos, cnt) table, re-aggregate with min per
-    distinct key value.  The counting twin of the exploded membership
-    probe — and like it, the ONLY shape for extended-m / low-fill
-    counting filters, where dense blocked counts (block_words x 8 B per
-    nonzero block) would dwarf the actual (pos, cnt) content.  Keyed on
-    the normalized key value, not a row id (see the membership twin)."""
+    """Minimum-selection frequency estimates with a 100% JVM plan over
+    the never-collected (pos, cnt) table from
+    :func:`fast_counting_positions` (or its ``_with_removals`` twin).
+
+    Single-join estimate: explode the k positions, ONE left join
+    against the sparse (pos, cnt) table, re-aggregate with min per
+    distinct key value; positions absent from the table count 0.  The
+    counting twin of the exploded membership probe, and like it the
+    shape that works at extended m / low fill, where dense blocked
+    counts would dwarf the actual (pos, cnt) content.  Keyed on the
+    normalized key value, not a row id (see the membership twin).  A
+    collected :class:`CountingBloomFilter` is probed by
+    ``probe.with_estimated_count``."""
+    _require_fast(config)
+    _reserve_probe_cols(df, out_col)
+    if not isinstance(filter_src, DataFrame):
+        raise TypeError(
+            "with_fast_estimated_count takes the distributed (pos, cnt) "
+            "table from fast_counting_positions; probe a collected "
+            "CountingBloomFilter with with_estimated_count"
+        )
     kept = df.columns
     kv = "__fkv"
     keys = df.select(_fast_key(col).alias(kv)).distinct()
@@ -293,7 +238,7 @@ def _with_fast_estimated_count_exploded(
         kv, F.explode(F.array(*fast_position_cols(kv, config))).alias("__pos")
     )
     joined = exploded.join(
-        positions.select(F.col("pos").alias("__pos"), F.col("cnt").alias("__cnt")),
+        filter_src.select(F.col("pos").alias("__pos"), F.col("cnt").alias("__cnt")),
         "__pos",
         "left",
     )
@@ -305,184 +250,55 @@ def _with_fast_estimated_count_exploded(
     )
 
 
-def with_fast_estimated_count(
-    df: DataFrame,
-    col: str,
-    filter_src: DataFrame | CountingBloomFilter,
-    config: FilterConfig,
-    *,
-    out_col: str = "est_count",
-    block_words: int = BLOCK_WORDS,
-    strategy: str = "kjoin",
-) -> DataFrame:
-    """Minimum-selection frequency estimates with a 100% JVM plan.
-
-    ``strategy="kjoin"`` (default): the counters travel as blocked
-    ``array<bigint>`` rows (one count per slot — wider than the packed
-    driver dtype, but the broadcast is count-bounded and the join stays
-    the cache-resident blocked shape); each of the k positions reads
-    its count via in-place ``element_at`` and the estimate is the
-    native ``least`` of the k reads.  Missing blocks/slots count 0.
-
-    ``strategy="exploded"``: one join of the exploded positions against
-    the sparse (pos, cnt) table (:func:`fast_counting_positions`) and a
-    min re-aggregation — the extended-m / low-fill shape, mirroring the
-    membership probe's strategy trade (see with_fast_membership)."""
-    _require_fast(config)
-    _reserve_probe_cols(df, out_col)
-    if strategy not in ("kjoin", "exploded"):
-        raise ValueError(f"unknown probe strategy {strategy!r}")
-    if strategy == "exploded":
-        if isinstance(filter_src, CountingBloomFilter):
-            raise ValueError(
-                "strategy='exploded' takes the distributed (pos, cnt) table "
-                "(fast_counting_positions); a driver CountingBloomFilter "
-                "should use the default kjoin strategy"
-            )
-        return _with_fast_estimated_count_exploded(
-            df, col, filter_src, config, out_col
-        )
-    if config.extended:
-        raise ValueError(
-            "extended-m counting filters cannot use the kjoin strategy "
-            "(dense blocked counts dwarf the sparse content); probe the "
-            "(pos, cnt) table with strategy='exploded'"
-        )
-    spark = df.sparkSession
-    if isinstance(filter_src, CountingBloomFilter):
-        if not filter_src.config.is_compatible_to(config):
-            raise ValueError("filter is not compatible with the probe config")
-        counters = filter_src.counters.astype(np.int64)
-        nblocks = -(-len(counters) // block_words)
-        padded = np.zeros(nblocks * block_words, dtype=np.int64)
-        padded[: len(counters)] = counters
-        grid = padded.reshape(nblocks, block_words)
-        nz = np.nonzero(grid.any(axis=1))[0]
-        import pyarrow as pa
-
-        offsets = np.arange(len(nz) + 1, dtype=np.int32) * block_words
-        tbl = pa.table(
-            {
-                "block": pa.array(nz.astype(np.int64)),
-                "counts": pa.ListArray.from_arrays(
-                    pa.array(offsets), pa.array(grid[nz].ravel())
-                ),
-            }
-        )
-        try:
-            blocks = spark.createDataFrame(tbl)
-        except Exception:  # pragma: no cover
-            blocks = spark.createDataFrame(
-                tbl.to_pandas(), schema="block long, counts array<bigint>"
-            )
-    else:
-        # distributed (pos, cnt) -> blocked counts, entirely native
-        blocks = (
-            filter_src.groupBy(F.expr(f"pos div {block_words}").alias("block"))
-            .agg(
-                F.map_from_entries(
-                    F.collect_list(
-                        F.struct(
-                            (F.col("pos") % block_words).cast("int").alias("key"),
-                            F.col("cnt").alias("value"),
-                        )
-                    )
-                ).alias("cm")
-            )
-            .select(
-                "block",
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(block_words - 1)),
-                    lambda i: F.coalesce(
-                        F.element_at(F.col("cm"), i), F.lit(0).cast("long")
-                    ),
-                ).alias("counts"),
-            )
-        )
-    a, b = fast_hash_cols(col, config)
-    out = df.withColumn("__fa", a).withColumn("__fb", b)
-    temp = ["__fa", "__fb"]
-    reads = []
-    for i in range(config.k):
-        p, blk, c = f"__fp{i}", f"__fblk{i}", f"__fcnts{i}"
-        out = out.withColumn(
-            p, F.pmod(F.col("__fa") + F.lit(i) * F.col("__fb"), F.lit(config.m))
-        ).withColumn(blk, F.expr(f"{p} div {block_words}"))
-        out = out.join(
-            F.broadcast(
-                blocks.select(F.col("block").alias(blk), F.col("counts").alias(c))
-            ),
-            blk,
-            "left",
-        )
-        reads.append(
-            F.coalesce(
-                F.expr(f"element_at({c}, CAST({p} % {block_words} AS INT) + 1)"),
-                F.lit(0).cast("long"),
-            )
-        )
-        temp += [p, blk, c]
-    est = F.least(*reads) if len(reads) > 1 else reads[0]
-    return out.withColumn(out_col, est).drop(*temp)
-
-
-def blocks_from_bloom(
-    spark: SparkSession, bloom: BloomFilter, *, block_words: int = BLOCK_WORDS
-) -> DataFrame:
+def blocks_from_bloom(spark: SparkSession, bloom: BloomFilter) -> DataFrame:
     """A BloomFilter's nonzero 4 KiB blocks as (block, array<bigint>) —
     the probe-side broadcast form.  Sparse filters yield few rows;
-    dense ones at most m/(64*block_words)."""
+    dense ones at most m/(64*BLOCK_WORDS)."""
     _require_fast(bloom.config)
     raw = bloom.to_bytes()
-    pad = (-len(raw)) % (8 * block_words)
+    pad = (-len(raw)) % (8 * BLOCK_WORDS)
     arr = np.frombuffer(raw + b"\x00" * pad, dtype=np.uint64).reshape(
-        -1, block_words
+        -1, BLOCK_WORDS
     )
     nz = np.nonzero(arr.any(axis=1))[0]
     flat = arr[nz].view(np.int64).ravel()
-    import pyarrow as pa
-
-    offsets = np.arange(len(nz) + 1, dtype=np.int32) * block_words
-    tbl = pa.table(
-        {
-            "block": pa.array(nz.astype(np.int64)),
-            "words": pa.ListArray.from_arrays(pa.array(offsets), pa.array(flat)),
-        }
+    offsets = np.arange(len(nz) + 1, dtype=np.int32) * BLOCK_WORDS
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "block": pa.array(nz.astype(np.int64)),
+                "words": pa.ListArray.from_arrays(pa.array(offsets), pa.array(flat)),
+            }
+        )
     )
-    try:
-        out = spark.createDataFrame(tbl)
-    except Exception:  # pragma: no cover - older Arrow-table support
-        out = spark.createDataFrame(tbl.to_pandas(), schema=BLOCKS_SCHEMA)
-    return _tag_block_words(out, "words", block_words)
 
 
-def words_to_blocks(words: DataFrame, *, block_words: int = BLOCK_WORDS) -> DataFrame:
+def words_to_blocks(words: DataFrame) -> DataFrame:
     """Assemble the distributed (word, bits) table into probe blocks —
     entirely native (groupBy block + map_from_entries + transform), for
     filters that were never collected."""
     wm = (
-        words.groupBy(F.expr(f"word div {block_words}").alias("block"))
+        words.groupBy(F.expr(f"word div {BLOCK_WORDS}").alias("block"))
         .agg(
             F.map_from_entries(
                 F.collect_list(
                     F.struct(
-                        (F.col("word") % block_words).cast("int").alias("key"),
+                        (F.col("word") % BLOCK_WORDS).cast("int").alias("key"),
                         F.col("bits").alias("value"),
                     )
                 )
             ).alias("wm")
         )
     )
-    out = wm.select(
+    return wm.select(
         "block",
         F.transform(
-            F.sequence(F.lit(0), F.lit(block_words - 1)),
+            F.sequence(F.lit(0), F.lit(BLOCK_WORDS - 1)),
             lambda i: F.coalesce(
                 F.element_at(F.col("wm"), i), F.lit(0).cast("long")
             ),
         ).alias("words"),
     )
-    return _tag_block_words(out, "words", block_words)
 
 
 def _with_fast_membership_exploded(
@@ -538,71 +354,44 @@ def with_fast_membership(
     config: FilterConfig,
     *,
     out_col: str = "member",
-    block_words: int = BLOCK_WORDS,
-    strategy: str = "kjoin",
 ) -> DataFrame:
     """Append a boolean membership column with a 100% JVM plan.
 
-    ``strategy="kjoin"`` (default): each of the k positions is tested by
-    a broadcast hash join of its block index against the blocked filter,
-    then an in-place ``element_at`` + shift/mask; a missing block
-    (left-join null) tests False.  The plan is scan -> k codegen'd
-    broadcast joins -> project: no shuffle, no Python worker, no per-row
-    bitset traffic.  Measured against the exploded form at 20M rows
-    (BASELINE.md round-4): the k-join is the faster default whenever the
-    blocked filter fits a broadcast.
+    The config decides the shape.  A non-extended filter is probed by
+    the k-join: each of the k positions is tested by a broadcast hash
+    join of its block index against the blocked filter, then an
+    in-place ``element_at`` + shift/mask; a missing block (left-join
+    null) tests False.  The plan is scan -> k codegen'd broadcast joins
+    -> project: no shuffle, no Python worker, no per-row bitset
+    traffic.  MEASURED 20M rows, dense p=0.01 filter, fresh pinned
+    JVMs, best-of-3 (BASELINE.md round-4): k-join 2.54M rows/s @4 cores
+    / 6.21M @16 vs the exploded single join 0.22M / 0.37M — the explode
+    shuffle costs ~12-17x.
 
-    ``strategy="exploded"``: explode the k positions and join the
-    (word, bits) table ONCE, re-aggregating with bool_and — broadcasts
-    the filter once instead of up to k times and never materializes
-    dense blocks, at the cost of shuffling k rows per probe row through
-    a groupBy plus a rid re-join.  MEASURED 20M rows, dense p=0.01
-    filter, fresh pinned JVMs, best-of-3 (scripts/probe_strategy_bench
-    .py, BASELINE.md round-4): kjoin 2.54M rows/s @4 cores / 6.21M @16
-    vs exploded 0.22M / 0.37M — the explode shuffle costs ~12-17x, so
-    kjoin stays the default.  The exploded form is for extended-m /
-    low-fill filters, where dense 4 KiB blocks would be ~512x larger
-    than the set bits they carry and the broadcast stops fitting.
+    An extended-m filter is probed by the exploded single join
+    (:func:`_with_fast_membership_exploded`): its dense 4 KiB blocks
+    would be ~512x larger than the set bits they carry and the
+    broadcast stops fitting.
 
-    ``filter_src`` may be an XXHash64KM :class:`BloomFilter`, the
-    distributed (word, bits) table from :func:`fast_bloom_words`, or a
-    pre-blocked (block, words) table (kjoin only)."""
+    ``filter_src`` is an XXHash64KM :class:`BloomFilter` (non-extended
+    only: an extended bitset is never collected) or the distributed
+    (word, bits) table from :func:`fast_bloom_words`."""
     _require_fast(config)
     _reserve_probe_cols(df, out_col)
-    if strategy not in ("kjoin", "exploded"):
-        raise ValueError(f"unknown probe strategy {strategy!r}")
-    if strategy == "exploded":
-        if isinstance(filter_src, BloomFilter):
-            if not filter_src.config.is_compatible_to(config):
-                raise ValueError("filter is not compatible with the probe config")
-            words = words_from_bloom(df.sparkSession, filter_src)
-        elif set(filter_src.columns) >= {"word", "bits"}:
-            words = filter_src
-        else:
-            raise ValueError(
-                "strategy='exploded' needs a BloomFilter or a (word, bits) "
-                "table; pre-blocked (block, words) tables only support the "
-                "kjoin strategy"
-            )
-        return _with_fast_membership_exploded(df, col, words, config, out_col)
-    if config.extended:
-        raise ValueError(
-            "extended-m filters cannot use the kjoin strategy: their dense "
-            "4 KiB blocks are ~512x the set bits and the broadcast cannot "
-            "fit; probe with strategy='exploded' (or the sharded tier)"
-        )
     if isinstance(filter_src, BloomFilter):
+        if config.extended:
+            raise ValueError(
+                "extended-m fast filters are probed from the distributed "
+                "fast_bloom_words table, not a driver BloomFilter"
+            )
         if not filter_src.config.is_compatible_to(config):
             raise ValueError("filter is not compatible with the probe config")
-        blocks = blocks_from_bloom(
-            df.sparkSession, filter_src, block_words=block_words
-        )
-    elif set(filter_src.columns) >= {"word", "bits"}:
-        blocks = words_to_blocks(filter_src, block_words=block_words)
+        blocks = blocks_from_bloom(df.sparkSession, filter_src)
+    elif config.extended:
+        return _with_fast_membership_exploded(df, col, filter_src, config, out_col)
     else:
-        _check_block_words(filter_src, "words", block_words)
-        blocks = filter_src.select("block", "words")
-    bits_per_block = 64 * block_words
+        blocks = words_to_blocks(filter_src)
+    bits_per_block = 64 * BLOCK_WORDS
     a, b = fast_hash_cols(col, config)
     out = df.withColumn("__fa", a).withColumn("__fb", b)
     temp = ["__fa", "__fb"]
@@ -623,7 +412,7 @@ def with_fast_membership(
             F.coalesce(
                 F.expr(
                     f"(shiftright(element_at({w}, "
-                    f"CAST(({p} div 64) % {block_words} AS INT) + 1), "
+                    f"CAST(({p} div 64) % {BLOCK_WORDS} AS INT) + 1), "
                     f"CAST({p} % 64 AS INT)) & 1) = 1"
                 ),
                 F.lit(False),

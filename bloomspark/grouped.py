@@ -228,12 +228,12 @@ def build_counting_per_group(
 def collect_group_filters(grouped: DataFrame, config: FilterConfig) -> dict:
     """Collect a per-group build into {group: BloomFilter} (small dims).
 
-    Uses ``toPandas()`` (Arrow path) — never row-``collect()`` binary
-    partials through py4j (CLAUDE.md invariant)."""
-    pdf = grouped.select("group", "bitset").toPandas()
+    Uses ``toArrow()`` — never row-``collect()`` binary partials through
+    py4j."""
+    tbl = grouped.select("group", "bitset").toArrow()
     return {
-        g: BloomFilter.from_bytes(config, bytes(b))
-        for g, b in zip(pdf["group"], pdf["bitset"])
+        g: BloomFilter.from_bytes(config, b)
+        for g, b in zip(tbl["group"].to_pylist(), tbl["bitset"].to_pylist())
     }
 
 
@@ -330,7 +330,7 @@ def _group_probe(
     its own group's state (a ``dtype`` array) with
     ``lookup(state, pos)``; rows whose group has no state read 0 / False.
 
-    'broadcast' collects the state once (Arrow ``toPandas``) as a
+    'broadcast' collects the state once (``toArrow``) as a
     {group: bytes} dict and splits each batch by group with one sort
     (``partials.split_groups``); 'cogroup' hands each group's single state
     row to :func:`_cogroup_probe`."""
@@ -353,9 +353,9 @@ def _group_probe(
             df, group_col, key_col, grouped_state, state_col,
             out_col, out_type, probe_fn,
         )
-    pdf = grouped_state.select("group", state_col).toPandas()
+    tbl = grouped_state.select("group", state_col).toArrow()
     bc = df.sparkSession.sparkContext.broadcast(
-        {g: bytes(b) for g, b in zip(pdf["group"], pdf[state_col])}
+        dict(zip(tbl["group"].to_pylist(), tbl[state_col].to_pylist()))
     )
 
     @arrow_udf(out_type)
@@ -435,7 +435,7 @@ def with_group_membership(
     with the same ``config``.  Two plans behind one API:
 
     - ``'broadcast'`` (the default when the state fits): the filters
-      table is collected once on the driver (Arrow ``toPandas``) and
+      table is collected once on the driver (``toArrow``) and
       broadcast to the executors as a ``{group: bitset}`` dict —
       exactly like the single-filter probe (probe.py:29-43); each batch
       is split by group with one sort.  The probe UDF receives ONLY the (group, key) columns; the multi-MB bitsets

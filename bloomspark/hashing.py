@@ -138,8 +138,8 @@ def as_keys(keys) -> Keys:
 
 def keys_from_pandas(series) -> Keys:
     """pandas Series -> Keys via one C-level Arrow encode (no per-row
-    Python).  Used by pandas-UDF surfaces; mapInArrow paths use
-    :meth:`Keys.from_arrow` directly on the batch column."""
+    Python).  Used by the streaming sketch's pandas batches; Arrow paths
+    use :meth:`Keys.from_arrow` directly on the batch column."""
     import pyarrow as pa
 
     return Keys.from_arrow(pa.Array.from_pandas(series))

@@ -37,7 +37,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .fast import (
-    BLOCK_WORDS,
     FAST_HASH_METHOD,
     build_fast_bloom,
     fast_bloom_words,
@@ -95,8 +94,6 @@ def bloom_semi_filter(
     *,
     p: float = 0.01,
     n_build: Optional[int] = None,
-    filter_mode: str = "auto",
-    block_words: int = BLOCK_WORDS,
 ) -> DataFrame:
     """Approximate semi-join: the rows of ``big`` whose ``big_key``
     *may* appear in ``small[small_key]``, pruned by a fast-tier Bloom
@@ -115,10 +112,9 @@ def bloom_semi_filter(
     :func:`bloom_prune_join` — whose answer is exact regardless of
     FPP — sizes with :data:`DEFAULT_EXPECTED_N` instead and launches
     no count job.
-    ``filter_mode``: ``"driver"`` collects the built filter once to the
-    driver (<= m/8 bytes, the fast default), ``"distributed"`` keeps it
-    as a (word, bits) table end to end (the never-collected shape),
-    ``"auto"`` picks by :data:`DRIVER_FILTER_MAX_BYTES`.
+    Filters up to :data:`DRIVER_FILTER_MAX_BYTES` are collected once to
+    the driver (<= m/8 bytes, the fast shape); bigger ones stay a
+    (word, bits) table end to end (the never-collected shape).
 
     Dimensions past the Java-int sizing cap (optimal m > 2^31 at this
     ``n``/``p``) complete as extended-m configs automatically: the
@@ -136,13 +132,7 @@ def bloom_semi_filter(
     config = FilterConfig.complete(
         n=max(int(n), 1), p=p, hash_method=FAST_HASH_METHOD, extended=extended
     )
-    if extended:
-        filter_mode = "distributed"
-    if filter_mode == "auto":
-        filter_mode = (
-            "driver" if config.num_bytes <= DRIVER_FILTER_MAX_BYTES else "distributed"
-        )
-    if filter_mode == "driver":
+    if not extended and config.num_bytes <= DRIVER_FILTER_MAX_BYTES:
         src: Union[DataFrame, object] = build_fast_bloom(small, small_key, config)
         # saturation signal (round-5 advice): with n_build omitted and a
         # build side far above the sized n, the filter fills up, the
@@ -163,15 +153,10 @@ def bloom_semi_filter(
                 RuntimeWarning,
                 stacklevel=2,
             )
-    elif filter_mode == "distributed":
-        src = fast_bloom_words(small, small_key, config)
     else:
-        raise ValueError(f"unknown filter_mode {filter_mode!r}")
+        src = fast_bloom_words(small, small_key, config)
     out_col = "__bloom_prune_member"
-    pruned = with_fast_membership(
-        big, big_key, src, config, out_col=out_col, block_words=block_words,
-        strategy="exploded" if extended else "kjoin",
-    )
+    pruned = with_fast_membership(big, big_key, src, config, out_col=out_col)
     return pruned.where(F.col(out_col)).drop(out_col)
 
 
@@ -183,8 +168,6 @@ def bloom_prune_join(
     how: str = "inner",
     p: float = 0.01,
     n_build: Optional[int] = None,
-    filter_mode: str = "auto",
-    block_words: int = BLOCK_WORDS,
 ) -> DataFrame:
     """Exact ``big.join(small, on, how)`` with the big side Bloom-pruned
     first.
@@ -229,8 +212,6 @@ def bloom_prune_join(
         small_key,
         p=p,
         n_build=n_build if n_build is not None else DEFAULT_EXPECTED_N,
-        filter_mode=filter_mode,
-        block_words=block_words,
     )
     how = "left_semi" if how in {"leftsemi", "semi"} else how
     if same_name:

@@ -680,10 +680,7 @@ def tree_merge(
 
 def collect_rows(df: DataFrame):
     """Collect partial rows through the Arrow path — row-based collect()
-    of multi-MB binary payloads through py4j is several times slower
-    than toPandas() with Arrow enabled."""
-    try:
-        df.sparkSession.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    except Exception:
-        pass
-    return df.toPandas().to_dict("records")
+    of multi-MB binary payloads through py4j is several times slower.
+    ``toArrow`` always collects Arrow batches, whatever the session's
+    ``spark.sql.execution.arrow.pyspark.enabled``."""
+    return df.toArrow().to_pylist()

@@ -9,12 +9,12 @@ needs a vectorized UDF.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
-from ..hashing import keys_from_pandas
+from ..hashing import Keys, _group_by_length
 
 #: Tiny deterministic stopword lists for the n-gram/stopword language
 #: heuristic.  Intentionally small — the operator's value is the Spark
@@ -109,9 +109,9 @@ def with_fingerprint(
     Content-identical documents get identical fingerprints regardless of
     formatting."""
 
-    @pandas_udf("long")
-    def fp(texts: pd.Series) -> pd.Series:
-        keys = keys_from_pandas(texts)
+    @arrow_udf("long")
+    def fp(texts: pa.Array) -> pa.Array:
+        keys = Keys.from_arrow(texts)
         # rolling polynomial hash: h = h*B + byte (mod 2^64), vectorized
         # per distinct length group via cumulative fold over columns
         out = np.zeros(len(keys), dtype=np.uint64)
@@ -119,14 +119,12 @@ def with_fingerprint(
         B = np.uint64(1099511628211)
         with np.errstate(over="ignore"):
             # process per length group (fixed-width matrix fold)
-            from ..hashing import _group_by_length
-
             for idx, mat in _group_by_length(keys):
                 h = np.zeros(len(idx), dtype=np.uint64)
                 for j in range(mat.shape[1]):
                     h = h * B + mat[:, j].astype(np.uint64)
                 out[idx] = h
-        return pd.Series(out.astype(np.int64))
+        return pa.array(out.view(np.int64))
 
     normalized = F.regexp_replace(F.lower(F.trim(F.col(text_col))), r"\s+", " ")
     return df.withColumn(out_col, fp(normalized))

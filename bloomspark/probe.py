@@ -35,13 +35,12 @@ def _keys_from_arrow_any(arr) -> Keys:
     return Keys.from_arrow(arr)
 
 
-def membership_udf(df_or_spark, bloom: BloomFilter):
-    """A reusable BooleanType Arrow UDF testing membership in ``bloom``."""
-    spark = getattr(df_or_spark, "sparkSession", df_or_spark)
+def _membership_fn(spark, bloom: BloomFilter):
+    """Broadcast a snapshot of ``bloom`` and return the batch body every
+    single-filter membership UDF shares: string keys -> booleans."""
     bc = spark.sparkContext.broadcast((bloom.config.to_dict(), bloom.to_bytes()))
 
-    @arrow_udf("boolean")
-    def probe(keys: pa.Array) -> pa.Array:
+    def contains(keys: pa.Array) -> pa.Array:
         cfg_dict, raw = bc.value
         cfg = FilterConfig.from_dict(cfg_dict)
         bits = np.frombuffer(raw, dtype=np.uint8)
@@ -49,7 +48,29 @@ def membership_udf(df_or_spark, bloom: BloomFilter):
         pos = get_hash_fn(cfg.hash_method)(kb, cfg.m, cfg.k)
         return pa.array(test_positions(bits, pos))
 
-    return probe
+    return contains
+
+
+def _estimated_count_fn(spark, cbf: CountingBloomFilter):
+    """Broadcast a snapshot of ``cbf`` and return the shared batch body:
+    string keys -> Minimum-Selection count estimates."""
+    bc = spark.sparkContext.broadcast((cbf.config.to_dict(), cbf.to_bytes()))
+
+    def estimate(keys: pa.Array) -> pa.Array:
+        cfg_dict, raw = bc.value
+        cfg = FilterConfig.from_dict(cfg_dict)
+        counters = np.frombuffer(raw, dtype=counter_dtype(cfg.counting_bits))
+        kb = _keys_from_arrow_any(keys)
+        pos = get_hash_fn(cfg.hash_method)(kb, cfg.m, cfg.k)
+        return pa.array(counters[pos].min(axis=1).astype(np.int64))
+
+    return estimate
+
+
+def membership_udf(df_or_spark, bloom: BloomFilter):
+    """A reusable BooleanType Arrow UDF testing membership in ``bloom``."""
+    spark = getattr(df_or_spark, "sparkSession", df_or_spark)
+    return arrow_udf(_membership_fn(spark, bloom), "boolean")
 
 
 def with_membership(
@@ -63,18 +84,7 @@ def with_membership(
 def estimated_count_udf(df_or_spark, cbf: CountingBloomFilter):
     """A reusable LongType Arrow UDF: Minimum-Selection count estimate."""
     spark = getattr(df_or_spark, "sparkSession", df_or_spark)
-    bc = spark.sparkContext.broadcast((cbf.config.to_dict(), cbf.to_bytes()))
-
-    @arrow_udf("long")
-    def probe(keys: pa.Array) -> pa.Array:
-        cfg_dict, raw = bc.value
-        cfg = FilterConfig.from_dict(cfg_dict)
-        counters = np.frombuffer(raw, dtype=counter_dtype(cfg.counting_bits))
-        kb = _keys_from_arrow_any(keys)
-        pos = get_hash_fn(cfg.hash_method)(kb, cfg.m, cfg.k)
-        return pa.array(counters[pos].min(axis=1).astype(np.int64))
-
-    return probe
+    return arrow_udf(_estimated_count_fn(spark, cbf), "long")
 
 
 def with_estimated_count(
@@ -84,4 +94,3 @@ def with_estimated_count(
     ``getEstimatedCount``)."""
     probe = estimated_count_udf(df, cbf)
     return df.withColumn(out_col, probe(key_column(col)))
-

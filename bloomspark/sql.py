@@ -22,37 +22,41 @@ wrapper would route them through Python and forfeit the tier's point.
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import SparkSession
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
-from .counting import CountingBloomFilter, counter_dtype
-from .filter import BloomFilter, test_positions
-from .hashing import get_hash_fn, keys_from_pandas
-from .params import FilterConfig
+from .counting import CountingBloomFilter
+from .filter import BloomFilter
+from .probe import _estimated_count_fn, _membership_fn
 
 
-def _coerce_str(keys: pd.Series) -> pd.Series:
+def _coerce_str(keys: pa.Array) -> pa.Array:
     # SQL callers pass any type; normalize like key_column's
-    # cast("string") (ints/bools render as Spark string form).  Float
-    # dtypes are REJECTED (round-7 advice): pandas repr ("0.0001",
-    # "10000000.0") diverges from the JVM cast's Java Double.toString
-    # form ("1.0E-4", "1.0E7") that the build side hashed, which would
-    # silently produce false negatives.  Cast to string in SQL
-    # (CAST(x AS STRING)) so the JVM renders the key.
-    if keys.dtype == object:
+    # cast("string") with one Arrow cast, which renders ints in decimal
+    # and bools as true/false exactly like the JVM.  Float types are
+    # REJECTED (round-7 advice): Arrow's repr ("0.0001", "10000000")
+    # diverges from the JVM cast's Java Double.toString form ("1.0E-4",
+    # "1.0E7") that the build side hashed, which would silently produce
+    # false negatives; every other type is rejected the same way.  Cast
+    # to string in SQL (CAST(x AS STRING)) so the JVM renders the key.
+    t = keys.type
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
         return keys
-    if keys.dtype == bool:
-        return keys.map({True: "true", False: "false"})
-    if pd.api.types.is_float_dtype(keys.dtype):
-        raise ValueError(
-            "registered bloom SQL functions cannot hash float-typed "
-            "arguments bit-faithfully (pandas and Java Double.toString "
-            "render them differently); CAST the argument to STRING in "
-            "the SQL so the JVM formats it"
-        )
-    return keys.astype("string").astype(object)
+    if pa.types.is_integer(t) or pa.types.is_boolean(t):
+        return pc.cast(keys, pa.string())
+    why = (
+        "float-typed arguments bit-faithfully (Arrow and Java "
+        "Double.toString render them differently)"
+        if pa.types.is_floating(t)
+        else f"{t}-typed arguments bit-faithfully (only string, integer "
+        "and boolean keys render like the JVM cast)"
+    )
+    raise ValueError(
+        f"registered bloom SQL functions cannot hash {why}; CAST the "
+        "argument to STRING in the SQL so the JVM formats it"
+    )
 
 
 def register_membership(
@@ -60,16 +64,11 @@ def register_membership(
 ) -> None:
     """Register ``name(key) -> boolean``: bulk ``contains`` against a
     snapshot of ``bloom`` (re-register after mutating the filter)."""
-    bc = spark.sparkContext.broadcast((bloom.config.to_dict(), bloom.to_bytes()))
+    contains = _membership_fn(spark, bloom)
 
-    @pandas_udf("boolean")
-    def probe(keys: pd.Series) -> pd.Series:
-        cfg_dict, raw = bc.value
-        cfg = FilterConfig.from_dict(cfg_dict)
-        bits = np.frombuffer(raw, dtype=np.uint8)
-        kb = keys_from_pandas(_coerce_str(keys))
-        pos = get_hash_fn(cfg.hash_method)(kb, cfg.m, cfg.k)
-        return pd.Series(test_positions(bits, pos))
+    @arrow_udf("boolean")
+    def probe(keys: pa.Array) -> pa.Array:
+        return contains(_coerce_str(keys))
 
     spark.udf.register(name, probe)
 
@@ -79,15 +78,10 @@ def register_estimated_count(
 ) -> None:
     """Register ``name(key) -> long``: bulk Minimum-Selection count
     estimates against a snapshot of ``cbf``."""
-    bc = spark.sparkContext.broadcast((cbf.config.to_dict(), cbf.to_bytes()))
+    estimate = _estimated_count_fn(spark, cbf)
 
-    @pandas_udf("long")
-    def probe(keys: pd.Series) -> pd.Series:
-        cfg_dict, raw = bc.value
-        cfg = FilterConfig.from_dict(cfg_dict)
-        counters = np.frombuffer(raw, dtype=counter_dtype(cfg.counting_bits))
-        kb = keys_from_pandas(_coerce_str(keys))
-        pos = get_hash_fn(cfg.hash_method)(kb, cfg.m, cfg.k)
-        return pd.Series(counters[pos].min(axis=1).astype(np.int64))
+    @arrow_udf("long")
+    def probe(keys: pa.Array) -> pa.Array:
+        return estimate(_coerce_str(keys))
 
     spark.udf.register(name, probe)

@@ -455,6 +455,45 @@ def test_build_report_metrics(spark, orders):
     json.dumps(report)  # must be JSON-serializable as-is
 
 
+def test_collects_leave_arrow_conf_untouched(spark, orders):
+    """Builds collect through ``toArrow``: a session with
+    spark.sql.execution.arrow.pyspark.enabled=false keeps it false
+    through build_bloom, build_counting, collect_group_filters and the
+    grouped broadcast probe, and the bytes equal those built with the
+    conf on."""
+    from bloomspark.grouped import with_group_membership
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    ccfg = FilterConfig.complete(n=10_000, p=0.01, counting_bits=8)
+    keyed = orders.select(
+        F.col("o_orderstatus").alias("g"), F.col("o_orderkey").alias("k")
+    )
+
+    def run():
+        grouped = build_bloom_per_group(keyed, "g", "k", CFG)
+        probed = with_group_membership(keyed, "g", "k", grouped, CFG)
+        return (
+            build_bloom(orders, "o_orderkey", CFG).to_bytes(),
+            build_counting(orders, "o_orderkey", ccfg).to_bytes(),
+            {g: bf.to_bytes() for g, bf in collect_group_filters(grouped, CFG).items()},
+            probed.where(~F.col("member")).count(),
+        )
+
+    before = spark.conf.get(key, None)
+    try:
+        spark.conf.set(key, "false")
+        off = run()
+        assert spark.conf.get(key) == "false"
+        spark.conf.set(key, "true")
+        assert run() == off
+        assert off[3] == 0
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+
+
 def test_merge_kernels_refuse_unknown_kinds():
     """A payload of an unknown kind (e.g. a retired ``dense_z``) must not
     merge: read as positions it would set garbage bits silently."""

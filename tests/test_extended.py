@@ -89,10 +89,10 @@ def test_extended_fast_tier_never_collected(spark):
     probe = spark.range(40_000).select(
         F.concat(F.lit("key:"), F.col("id").cast("string")).alias("k")
     )
-    # exploded strategy: the extended/low-fill shape (the dense blocked
+    # the extended config selects the exploded probe (the dense blocked
     # broadcast would be ~512x the set bits at this fill)
     got = (
-        with_fast_membership(probe, "k", words, cfg, strategy="exploded")
+        with_fast_membership(probe, "k", words, cfg)
         .select("k", "member")
         .toPandas()
     )

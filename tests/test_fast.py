@@ -10,13 +10,21 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from bloomspark import BloomFilter, FilterConfig, build_bloom
+from bloomspark import (
+    BloomFilter,
+    CountingBloomFilter,
+    FilterConfig,
+    build_bloom,
+    build_counting,
+)
 from bloomspark.fast import (
+    _with_fast_membership_exploded,
     build_fast_bloom,
     fast_bloom_words,
+    fast_counting_positions,
     fast_position_cols,
+    with_fast_estimated_count,
     with_fast_membership,
-    words_from_bloom,
 )
 from bloomspark.hashing import (
     FAST_SEED2,
@@ -25,7 +33,7 @@ from bloomspark.hashing import (
     xxh64,
     xxh64_hash_long,
 )
-from bloomspark.probe import with_membership
+from bloomspark.probe import with_estimated_count, with_membership
 
 CFG = FilterConfig.complete(n=20_000, p=0.01, hash_method="XXHash64KM")
 
@@ -107,9 +115,7 @@ def test_words_table_roundtrip_and_distributed_probe(spark, orders, customer):
     bf = build_fast_bloom(orders, "o_custkey", CFG)
     via_filter = {
         r["c_custkey"]: r["member"]
-        for r in with_fast_membership(
-            customer, "c_custkey", words_from_bloom(spark, bf), CFG
-        ).collect()
+        for r in with_fast_membership(customer, "c_custkey", bf, CFG).collect()
     }
     assert via_words == via_filter
 
@@ -153,13 +159,17 @@ def test_fast_extended_m_words_path(spark):
     with pytest.raises(ValueError, match="extended"):
         build_fast_bloom(df, "s", cfg)
     words = fast_bloom_words(df, "s", cfg)
-    # round-4: extended filters must take the exploded strategy — the
-    # kjoin default would densify ~one-set-bit blocks 512x and is
-    # refused outright
-    with pytest.raises(ValueError, match="kjoin"):
-        with_fast_membership(df, "s", words, cfg)
-    probed = with_fast_membership(df, "s", words, cfg, strategy="exploded")
+    # the extended config alone selects the exploded probe (the k-join
+    # would densify ~one-set-bit blocks 512x)
+    probed = with_fast_membership(df, "s", words, cfg)
     assert probed.where(~F.col("member")).count() == 0
+    # a driver bitset of an extended config is refused, pointing at the
+    # words table (a small extended m keeps the bitset cheap here)
+    small = FilterConfig.complete(
+        m=1024, k=3, hash_method="XXHash64KM", extended=True
+    )
+    with pytest.raises(ValueError, match="fast_bloom_words"):
+        with_fast_membership(df, "s", BloomFilter(small), small)
     # numpy replica agrees on the 64-bit positions
     keys = Keys.from_objects(["k0", "k1"])
     exp = positions_xxh64km(keys, cfg.m, cfg.k)
@@ -174,40 +184,27 @@ def test_fast_extended_m_words_path(spark):
 
 
 def test_fast_counting_build_byte_identical(spark, lineitem):
-    """Native counting build == mapInArrow build_counting under the same
-    XXHash64KM config, counter for counter."""
-    from bloomspark import build_counting
-    from bloomspark.fast import build_fast_counting
-
+    """The native (pos, cnt) table == mapInArrow build_counting under the
+    same XXHash64KM config, counter for counter (no count reaches the
+    32-bit counter width, so no saturation is involved)."""
     cfg = FilterConfig.complete(n=2000, p=1e-6, counting_bits=32,
                                 hash_method="XXHash64KM")
-    native = build_fast_counting(lineitem, "l_partkey", cfg)
+    tbl = fast_counting_positions(lineitem, "l_partkey", cfg).toArrow()
+    native = np.zeros(cfg.m, dtype=np.int64)
+    native[tbl["pos"].to_numpy()] = tbl["cnt"].to_numpy()
     arrow = build_counting(lineitem, "l_partkey", cfg)
-    assert native == arrow
-    assert native.to_bytes() == arrow.to_bytes()
+    assert (native == arrow.counters.astype(np.int64)).all()
 
 
 def test_fast_estimated_count_probe(spark, lineitem):
-    """Native min-selection estimates equal exact GROUP BY counts at
-    tiny FPP, via both the driver filter and the distributed (pos, cnt)
-    table; missing keys estimate 0."""
-    from bloomspark.fast import (
-        build_fast_counting,
-        fast_counting_positions,
-        with_fast_estimated_count,
-    )
-
+    """Native min-selection estimates over the distributed (pos, cnt)
+    table equal exact GROUP BY counts at tiny FPP; missing keys
+    estimate 0; a collected CountingBloomFilter is refused."""
     cfg = FilterConfig.complete(n=2000, p=1e-9, counting_bits=32,
                                 hash_method="XXHash64KM")
-    cbf = build_fast_counting(lineitem, "l_partkey", cfg)
     keys = lineitem.select("l_partkey").distinct()
     exact = {r["l_partkey"]: r["count"]
              for r in lineitem.groupBy("l_partkey").count().collect()}
-    via_filter = {
-        r["l_partkey"]: r["est_count"]
-        for r in with_fast_estimated_count(keys, "l_partkey", cbf, cfg).collect()
-    }
-    assert via_filter == exact
     pos_table = fast_counting_positions(lineitem, "l_partkey", cfg)
     via_table = {
         r["l_partkey"]: r["est_count"]
@@ -215,24 +212,25 @@ def test_fast_estimated_count_probe(spark, lineitem):
     }
     assert via_table == exact
     missing = spark.createDataFrame([(99_999_999,)], "l_partkey long")
-    assert with_fast_estimated_count(missing, "l_partkey", cbf, cfg).first()[
+    assert with_fast_estimated_count(missing, "l_partkey", pos_table, cfg).first()[
         "est_count"
     ] == 0
     # the probe plan stays pure JVM
-    probed = with_fast_estimated_count(keys, "l_partkey", cbf, cfg)
+    probed = with_fast_estimated_count(keys, "l_partkey", pos_table, cfg)
     plan = probed._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan and "MapInArrow" not in plan
+    with pytest.raises(TypeError, match="with_estimated_count"):
+        with_fast_estimated_count(keys, "l_partkey", CountingBloomFilter(cfg), cfg)
 
 
 def test_fast_counting_saturation(spark):
-    """Counter-width saturation applies on the native build like the
-    parity build: 2-bit counters cap at 3 and report overflows."""
-    from bloomspark.fast import build_fast_counting
-
+    """A collected XXHash64KM counting filter comes from build_counting,
+    and counter-width saturation applies there: 2-bit counters cap at 3
+    and report overflows."""
     cfg = FilterConfig.complete(m=64, k=1, counting_bits=2,
                                 hash_method="XXHash64KM")
     df = spark.createDataFrame([("x",)] * 9, "s string")
-    cbf = build_fast_counting(df, "s", cfg)
+    cbf = build_counting(df, "s", cfg)
     assert int(cbf.counters.max()) == 3
     assert cbf._overflows > 0
 
@@ -246,84 +244,48 @@ def test_fast_probe_null_keys(spark):
     assert got[""] is True and got[None] is True
 
 
-def test_preblocked_table_block_words_mismatch_raises(spark):
-    """ADVICE r3: a pre-blocked (block, words) table carries its blocking
-    granularity in schema metadata; probing it with a different
-    block_words must raise instead of silently reading wrong slots."""
-    from bloomspark.fast import blocks_from_bloom, with_fast_membership
-
-    cfg = FilterConfig.complete(n=500, p=0.01, hash_method="XXHash64KM")
-    bf = build_fast_bloom(
-        spark.range(500).select(F.col("id").cast("string").alias("k")), "k", cfg
-    )
-    blocks = blocks_from_bloom(spark, bf, block_words=256)
-    probe = spark.range(100).select(F.col("id").cast("string").alias("k"))
-    # same block_words: fine
-    assert (
-        with_fast_membership(probe, "k", blocks, cfg, block_words=256)
-        .where("member").count() == 100
-    )
-    with pytest.raises(ValueError, match="block_words=256"):
-        with_fast_membership(probe, "k", blocks, cfg, block_words=512)
-
-
 def test_exploded_probe_strategy_matches_kjoin(spark):
-    """Round-4 item 3: the single-join exploded probe must agree with
-    the default k-join blocked probe bit-for-bit, from both a driver
-    BloomFilter and the distributed words table."""
-    from bloomspark.fast import fast_bloom_words, with_fast_membership
-
+    """The single-join exploded probe (the extended-m shape) agrees with
+    the k-join blocked probe bit-for-bit on one words table, and with
+    the k-join from a driver BloomFilter."""
     cfg = FilterConfig.complete(n=5_000, p=0.01, hash_method="XXHash64KM")
     keys = spark.range(5_000).select(F.col("id").cast("string").alias("k"))
     bf = build_fast_bloom(keys, "k", cfg)
+    words = fast_bloom_words(keys, "k", cfg)
     probe = spark.range(0, 15_000).select(F.col("id").cast("string").alias("k"))
 
     base = with_fast_membership(probe, "k", bf, cfg).orderBy("k").toPandas()
+    kjoin = with_fast_membership(probe, "k", words, cfg).orderBy("k").toPandas()
     expl = (
-        with_fast_membership(probe, "k", bf, cfg, strategy="exploded")
+        _with_fast_membership_exploded(probe, "k", words, cfg, "member")
         .orderBy("k")
         .toPandas()
     )
-    assert (base["member"] == expl["member"]).all()
-
-    words = fast_bloom_words(keys, "k", cfg)
-    expl2 = (
-        with_fast_membership(probe, "k", words, cfg, strategy="exploded")
-        .orderBy("k")
-        .toPandas()
-    )
-    assert (base["member"] == expl2["member"]).all()
+    assert (base["member"] == kjoin["member"]).all()
+    assert (kjoin["member"] == expl["member"]).all()
     # all true keys are members (no false negatives, ever)
     assert expl["member"][expl["k"].astype(int) < 5_000].all()
 
-    with pytest.raises(ValueError, match="unknown probe strategy"):
-        with_fast_membership(probe, "k", bf, cfg, strategy="nope")
 
-
-def test_exploded_count_strategy_matches_kjoin_and_extended(spark):
-    """The counting twin of the exploded membership probe: same
-    estimates as the blocked kjoin probe on a normal filter, and the
-    never-collected composition at extended m (fast_counting_positions
-    -> exploded estimate) returns exact counts at tiny fill."""
-    from bloomspark.fast import (
-        build_fast_counting,
-        fast_counting_positions,
-        with_fast_estimated_count,
-    )
-
+def test_fast_estimated_count_matches_arrow_probe_and_extended(spark):
+    """The exploded count probe over the (pos, cnt) table gives the same
+    estimate per key as the Arrow probe of a collected build_counting
+    filter on the same XXHash64KM config, and the never-collected
+    composition at extended m returns exact counts at tiny fill."""
     cfg = FilterConfig.complete(
         n=2_000, p=0.01, counting_bits=16, hash_method="XXHash64KM"
     )
     # keys with known multiplicity: id % 500 appears 4x
     keys = spark.range(2_000).select((F.col("id") % 500).cast("string").alias("k"))
-    cbf = build_fast_counting(keys, "k", cfg)
     probe = spark.range(600).select(F.col("id").cast("string").alias("k"))
-    base = with_fast_estimated_count(probe, "k", cbf, cfg).orderBy("k").toPandas()
-    pos_tbl = fast_counting_positions(keys, "k", cfg)
-    expl = (
-        with_fast_estimated_count(probe, "k", pos_tbl, cfg, strategy="exploded")
+    base = (
+        with_estimated_count(probe, "k", build_counting(keys, "k", cfg))
         .orderBy("k")
         .toPandas()
+    )
+    pos_tbl = fast_counting_positions(keys, "k", cfg)
+    expl = (
+        with_fast_estimated_count(probe, "k", pos_tbl, cfg).orderBy("k").toPandas()
     )
     assert (base["est_count"] == expl["est_count"]).all()
 
@@ -333,15 +295,9 @@ def test_exploded_count_strategy_matches_kjoin_and_extended(spark):
         hash_method="XXHash64KM",
     )
     xpos = fast_counting_positions(keys, "k", xcfg)
-    got = (
-        with_fast_estimated_count(probe, "k", xpos, xcfg, strategy="exploded")
-        .toPandas()
-    )
+    got = with_fast_estimated_count(probe, "k", xpos, xcfg).toPandas()
     ids = got["k"].astype(int)
     assert (got["est_count"] == np.where(ids < 500, 4, 0)).all()
-
-    with pytest.raises(ValueError, match="exploded"):
-        with_fast_estimated_count(probe, "k", cbf, cfg, strategy="exploded")
 
 
 def test_fast_counting_removals_matches_parity_subtract(spark):
@@ -365,34 +321,29 @@ def test_fast_counting_removals_matches_parity_subtract(spark):
 
 def test_probe_rejects_reserved_column_collisions(spark, orders):
     """ADVICE r4: a probe df already carrying the out_col or a '__f*'
-    column must raise (both strategies, membership and counting) —
-    silent clobber/duplicate behavior diverged per strategy before."""
-    from bloomspark.fast import (
-        build_fast_bloom,
-        build_fast_counting,
-        with_fast_estimated_count,
-        with_fast_membership,
-    )
-
+    column must raise (both probe shapes, membership and counting) —
+    silent clobber/duplicate behavior diverged per shape before."""
     cfg = FilterConfig.complete(n=1000, p=0.01, hash_method="XXHash64KM")
     bf = build_fast_bloom(orders, "o_orderkey", cfg)
+    xcfg = FilterConfig.complete(
+        m=2**33, k=3, extended=True, hash_method="XXHash64KM"
+    )
+    xwords = fast_bloom_words(orders, "o_orderkey", xcfg)
     ccfg = FilterConfig.complete(
         n=1000, p=0.01, counting_bits=16, hash_method="XXHash64KM"
     )
-    cbf = build_fast_counting(orders, "o_orderkey", ccfg)
+    pos_tbl = fast_counting_positions(orders, "o_orderkey", ccfg)
 
     has_out = orders.withColumn("member", F.lit(True))
     with pytest.raises(ValueError, match="reserved"):
         with_fast_membership(has_out, "o_orderkey", bf, cfg)
     has_tmp = orders.withColumn("__fkv", F.lit("x"))
-    for strategy in ("kjoin", "exploded"):
+    for src, c in ((bf, cfg), (xwords, xcfg)):
         with pytest.raises(ValueError, match="reserved"):
-            with_fast_membership(
-                has_tmp, "o_orderkey", bf, cfg, strategy=strategy
-            )
+            with_fast_membership(has_tmp, "o_orderkey", src, c)
     with pytest.raises(ValueError, match="reserved"):
         with_fast_estimated_count(
-            orders.withColumn("est_count", F.lit(0)), "o_orderkey", cbf, ccfg
+            orders.withColumn("est_count", F.lit(0)), "o_orderkey", pos_tbl, ccfg
         )
     # a clean df still probes fine with a custom out_col
     ok = with_fast_membership(orders, "o_orderkey", bf, cfg, out_col="m2")

@@ -247,3 +247,20 @@ def test_sql_registered_functions_match_dataframe_probes(spark):
         else (not got[k][0] and got[k][1] == 0)
         for k in got
     )
+
+    # boolean arguments render "true"/"false" like the JVM cast; float
+    # arguments (and any type the JVM renders differently) are refused
+    bf.add("true")
+    register_membership(spark, "t_seen", bf)
+    flags = spark.createDataFrame([(True,), (False,), (None,)], "b boolean")
+    flags.createOrReplaceTempView("__sql_probe_bools")
+    got_b = {
+        r["b"]: r["m"]
+        for r in spark.sql("SELECT b, t_seen(b) AS m FROM __sql_probe_bools").collect()
+    }
+    want_b = {r["b"]: r["member"] for r in with_membership(flags, "b", bf).collect()}
+    assert got_b == want_b and got_b[True] and not got_b[False]
+    for arg in ("CAST(k AS DOUBLE)", "CAST(k AS FLOAT)", "DATE'2020-01-01'"):
+        for fn in ("t_seen", "t_count"):
+            with pytest.raises(Exception, match="CAST the argument to STRING"):
+                spark.sql(f"SELECT {fn}({arg}) FROM __sql_probe_test").collect()

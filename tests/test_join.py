@@ -67,14 +67,16 @@ def test_duplicate_and_null_keys(spark):
     assert len(_rows(out)) == 4  # a×a only
 
 
-def test_distributed_filter_mode(lineitem, urgent):
+def test_distributed_filter_mode(lineitem, urgent, monkeypatch):
+    """Filters over DRIVER_FILTER_MAX_BYTES stay a distributed (word,
+    bits) table: with the limit at 0 every filter takes that path, and
+    the plan shows the native words build instead of a collected
+    bitset's local scan."""
+    monkeypatch.setattr("bloomspark.join.DRIVER_FILTER_MAX_BYTES", 0)
     pruned = bloom_prune_join(
-        lineitem,
-        urgent,
-        ("l_orderkey", "o_orderkey"),
-        filter_mode="distributed",
-        p=0.01,
+        lineitem, urgent, ("l_orderkey", "o_orderkey"), p=0.01
     ).select("l_orderkey", "o_orderkey")
+    assert "bit_or" in pruned._jdf.queryExecution().optimizedPlan().toString()
     plain = lineitem.join(
         urgent, lineitem["l_orderkey"] == urgent["o_orderkey"]
     ).select("l_orderkey", "o_orderkey")
@@ -163,20 +165,19 @@ def test_prune_join_auto_extends_past_sizing_cap(spark):
     assert joined.count() == expected
 
 
-def test_prune_join_plan_construction_launches_no_jobs(spark):
+def test_prune_join_plan_construction_launches_no_jobs(spark, monkeypatch):
     """Round-5 item 4: constructing the bloom-pruned-join plan with the
-    distributed filter mode launches ZERO driver jobs — the filter is
-    sized by DEFAULT_EXPECTED_N (Spark's own runtime-bloom-filter
-    trade), not a count() of the small side; same for the grouped
-    probe's auto strategy when n_groups is hinted."""
+    distributed filter (DRIVER_FILTER_MAX_BYTES at 0) launches ZERO
+    driver jobs — the filter is sized by DEFAULT_EXPECTED_N (Spark's own
+    runtime-bloom-filter trade), not a count() of the small side; same
+    for the grouped probe's auto strategy when n_groups is hinted."""
     big = spark.range(0, 5000).selectExpr("id AS key", "id * 2 AS v")
     small = spark.range(0, 100).selectExpr("id AS key")
+    monkeypatch.setattr("bloomspark.join.DRIVER_FILTER_MAX_BYTES", 0)
     sc = spark.sparkContext
     sc.setJobGroup("plan-only", "plan construction must be lazy")
     try:
-        plan = bloom_prune_join(
-            big, small, "key", filter_mode="distributed"
-        )
+        plan = bloom_prune_join(big, small, "key")
         from bloomspark.grouped import (
             build_bloom_per_group,
             with_group_membership,

@@ -191,14 +191,60 @@ def test_exploded_probe_plan_no_python_no_nested_loop(spark, lineitem):
     )
     words = fast_bloom_words(lineitem, "l_orderkey", cfg)
     probed = with_fast_membership(
-        lineitem.select("l_orderkey"), "l_orderkey", words, cfg,
-        strategy="exploded",
+        lineitem.select("l_orderkey"), "l_orderkey", words, cfg
     )
     p = plan(probed)
     assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
     for py_node in ("MapInArrow", "ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsInPandas"):
         assert py_node not in p
     assert p.count("Generate") >= 1  # the explode
+
+
+def test_fast_probe_shape_follows_config(spark, lineitem):
+    """No argument chooses the fast probe's shape: the same call on a
+    (word, bits) table plans the k broadcast block joins for a
+    non-extended config and the exploded single join (explode of the
+    probe keys, one join on the word, one re-join) for an extended one.
+    with_fast_estimated_count always plans the exploded single join.
+    All three stay pure JVM."""
+    from bloomspark.fast import (
+        fast_bloom_words,
+        fast_counting_positions,
+        with_fast_estimated_count,
+        with_fast_membership,
+    )
+
+    probe = lineitem.select("l_orderkey")
+    cfg = FilterConfig.complete(n=10_000, p=0.01, hash_method="XXHash64KM")
+    xcfg = FilterConfig.complete(
+        m=2**33 + 64, k=5, extended=True, hash_method="XXHash64KM"
+    )
+    ccfg = FilterConfig.complete(
+        n=10_000, p=0.01, counting_bits=16, hash_method="XXHash64KM"
+    )
+    kjoin, expl, counts = (
+        plan(df, "simple")
+        for df in (
+            with_fast_membership(
+                probe, "l_orderkey", fast_bloom_words(lineitem, "l_orderkey", cfg), cfg
+            ),
+            with_fast_membership(
+                probe, "l_orderkey", fast_bloom_words(lineitem, "l_orderkey", xcfg), xcfg
+            ),
+            with_fast_estimated_count(
+                probe, "l_orderkey",
+                fast_counting_positions(lineitem, "l_orderkey", ccfg), ccfg,
+            ),
+        )
+    )
+    assert kjoin.count("BroadcastHashJoin") == kjoin.count("Join ") == cfg.k
+    assert "xxhash64(__fkv" not in kjoin
+    for p in (expl, counts):
+        assert p.count("Join ") == 2
+        assert "explode(array(pmod((pmod(xxhash64(__fkv" in p
+    for p in (kjoin, expl, counts):
+        for py_node in ("MapInArrow", "EvalPython", "FlatMapGroupsIn", "FlatMapCoGroupsIn"):
+            assert py_node not in p
 
 
 def test_sharded_counting_probe_plan_cogroups(spark, lineitem):

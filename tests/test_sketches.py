@@ -22,7 +22,11 @@ SF = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="module")
 def lineitem(spark):
-    return spark.read.parquet(f"{SF}/lineitem.parquet").cache()
+    # unpersist at teardown: a cached parquet read would otherwise plan
+    # as InMemoryTableScan for every later read of the same path
+    df = spark.read.parquet(f"{SF}/lineitem.parquet").cache()
+    yield df
+    df.unpersist()
 
 
 def test_hll_distinct_within_bound(spark, lineitem):
