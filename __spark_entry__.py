@@ -1178,39 +1178,40 @@ def q_events_error_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_fast_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JVM-native fast tier (fast.py): positions as xxhash64 expressions,
-    bit_or word aggregation, broadcast-join probe — zero Python workers
-    end to end.  At p=1e-9 membership equals the exact IN, so the DuckDB
-    oracle is a plain subquery."""
-    from bloomspark.fast import build_fast_bloom, with_fast_membership
+    """JVM-native fast probe (fast.py): an XXHash64KM filter from
+    build_bloom, probed by k broadcast block joins with positions as
+    xxhash64 expressions — zero Python workers in the probe.  At p=1e-9
+    membership equals the exact IN, so the DuckDB oracle is a plain
+    subquery."""
+    from bloomspark.fast import with_fast_membership
 
     lineitem = _read(spark, sf_dir, "lineitem")
     orders = _read(spark, sf_dir, "orders")
     cfg = FilterConfig.complete(
         n=max(lineitem.count(), 1), p=EXACT_P, hash_method="XXHash64KM"
     )
-    bf = build_fast_bloom(lineitem, "l_orderkey", cfg)
+    bf = build_bloom(lineitem, "l_orderkey", cfg)
     return with_fast_membership(
-        orders.select("o_orderkey"), "o_orderkey", bf, cfg
+        orders.select("o_orderkey"), "o_orderkey", bf
     ).select("o_orderkey", "member")
 
 
 def q_fast_extended_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Extended-m (m > 2^31) fast tier, never collected: the distributed
-    (word, bits) build feeds the blocked broadcast probe directly —
-    no driver bitset can exist at this size (fast.py round-4 item 4).
-    At ~6k keys in 2^33 bits the configured FPP is ~1e-25, so membership
-    equals the exact IN."""
-    from bloomspark.fast import fast_bloom_words, with_fast_membership
+    """XXHash64KM membership past the driver-filter limit, never
+    collected: the route bloom_semi_filter takes there — 64 shard
+    bitsets (sharded.py) probed by co-partitioning orders on the shard
+    id.  At p=1e-9 membership equals the exact IN."""
+    from bloomspark.sharded import build_sharded_bloom, with_sharded_membership
 
     lineitem = _read(spark, sf_dir, "lineitem")
     orders = _read(spark, sf_dir, "orders")
+    n, num_shards = lineitem.count(), 64
     cfg = FilterConfig.complete(
-        m=2**33 + 4096, k=5, extended=True, hash_method="XXHash64KM"
+        n=max(n // num_shards, 100), p=EXACT_P, hash_method="XXHash64KM"
     )
-    words = fast_bloom_words(lineitem, "l_orderkey", cfg)
-    return with_fast_membership(
-        orders.select("o_orderkey"), "o_orderkey", words, cfg
+    shards = build_sharded_bloom(lineitem, "l_orderkey", cfg, num_shards=num_shards)
+    return with_sharded_membership(
+        orders.select("o_orderkey"), "o_orderkey", shards, cfg, num_shards=num_shards
     ).select("o_orderkey", "member")
 
 
@@ -1231,46 +1232,64 @@ def q_fast_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("p_partkey", "est_count")
 
 
+def _fast_shard_counting_config(n: int, num_shards: int) -> FilterConfig:
+    # prime_m: composite m lets Kirsch-Mitzenmacher position cycles
+    # inflate min-selection estimates (FilterConfig.complete docstring)
+    return FilterConfig.complete(
+        n=max(n // num_shards, 100), p=EXACT_P, counting_bits=32,
+        hash_method="XXHash64KM", prime_m=True,
+    )
+
+
 def q_fast_extended_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Extended-m counting, never collected: the distributed sparse
-    (pos, cnt) table (fast_counting_positions) probed with the exploded
-    single join — no m-proportional structure anywhere, driver
-    or wire.  Exact at this fill, so the oracle is the plain GROUP BY."""
-    from bloomspark.fast import fast_counting_positions, with_fast_estimated_count
+    """Never-collected XXHash64KM counting: lineitem partkey
+    multiplicities in 16 shard counter arrays (sharded.py), probed by
+    co-partitioning part keys on the shard id — no driver counter
+    array.  Exact at p=1e-9, so the oracle is the plain GROUP BY."""
+    from bloomspark.sharded import (
+        build_sharded_counting,
+        with_sharded_estimated_count,
+    )
 
     lineitem = _read(spark, sf_dir, "lineitem")
     part = _read(spark, sf_dir, "part")
-    cfg = FilterConfig.complete(
-        m=2**33 + 64, k=4, counting_bits=32, extended=True,
-        hash_method="XXHash64KM",
+    num_shards = 16
+    cfg = _fast_shard_counting_config(lineitem.count(), num_shards)
+    shards = build_sharded_counting(
+        lineitem, "l_partkey", cfg, num_shards=num_shards
     )
-    pos = fast_counting_positions(lineitem, "l_partkey", cfg)
-    return with_fast_estimated_count(
-        part.select("p_partkey"), "p_partkey", pos, cfg
+    return with_sharded_estimated_count(
+        part.select("p_partkey"), "p_partkey", shards, cfg,
+        num_shards=num_shards,
     ).select("p_partkey", "est_count")
 
 
 def q_fast_counts_remove(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fast-tier distributed remove at extended m: adds minus removals
-    as one native outer join of (pos, cnt) aggregates
-    (fast_counting_positions_with_removals), probed with the exploded
-    strategy — the counting remove contract with nothing collected."""
-    from bloomspark.fast import (
-        fast_counting_positions_with_removals,
-        with_fast_estimated_count,
+    """Never-collected XXHash64KM remove: the returned lines' sharded
+    counts are subtracted from all lines' (subtract_sharded_counting,
+    floored per counter), and the result is probed on the shard id —
+    the counting remove contract with nothing collected."""
+    from bloomspark.sharded import (
+        build_sharded_counting,
+        subtract_sharded_counting,
+        with_sharded_estimated_count,
     )
 
     lineitem = _read(spark, sf_dir, "lineitem")
     part = _read(spark, sf_dir, "part")
-    cfg = FilterConfig.complete(
-        m=2**33 + 64, k=4, counting_bits=32, extended=True,
-        hash_method="XXHash64KM",
+    num_shards = 16
+    cfg = _fast_shard_counting_config(lineitem.count(), num_shards)
+    adds = build_sharded_counting(
+        lineitem, "l_partkey", cfg, num_shards=num_shards
     )
-    pos = fast_counting_positions_with_removals(
-        lineitem, lineitem.where(F.col("l_returnflag") == "R"), "l_partkey", cfg
+    removes = build_sharded_counting(
+        lineitem.where(F.col("l_returnflag") == "R"), "l_partkey", cfg,
+        num_shards=num_shards,
     )
-    return with_fast_estimated_count(
-        part.select("p_partkey"), "p_partkey", pos, cfg
+    shards = subtract_sharded_counting(adds, removes, cfg)
+    return with_sharded_estimated_count(
+        part.select("p_partkey"), "p_partkey", shards, cfg,
+        num_shards=num_shards,
     ).select("p_partkey", "est_count")
 
 

@@ -245,10 +245,10 @@ def bench_queries(spark, sf_dir: str):
         n_li,
     )
 
-    # JVM-native fast tier (fast.py): same membership workload as q1/q2
-    # but positions/aggregation/probe entirely in whole-stage codegen —
-    # the plan the 100-TB path runs, with no Arrow hop to scale-limit
-    from bloomspark.fast import build_fast_bloom, with_fast_membership
+    # fast tier: the same membership workload as q1/q2 on the
+    # XXHash64KM method, probed in whole-stage codegen (fast.py) with
+    # no Arrow hop to scale-limit
+    from bloomspark.fast import with_fast_membership
 
     fcfg = FilterConfig.complete(n=n_li, p=0.01, hash_method="XXHash64KM")
     fbf_holder = {}
@@ -256,13 +256,13 @@ def bench_queries(spark, sf_dir: str):
         "q11_fast_build",
         lambda: fbf_holder.__setitem__(
             "bf",
-            build_fast_bloom(lineitem.repartition(nparts), "l_orderkey", fcfg),
+            build_bloom(lineitem.repartition(nparts), "l_orderkey", fcfg),
         ),
         n_li,
     )
     timed(
         "q12_fast_probe",
-        lambda: with_fast_membership(orders, "o_orderkey", fbf_holder["bf"], fcfg)
+        lambda: with_fast_membership(orders, "o_orderkey", fbf_holder["bf"])
         .where(F.col("member"))
         .count(),
         n_ord,
@@ -578,8 +578,8 @@ def bench_sf1_queries(spark):
 
     from pyspark.sql import functions as F
 
-    from bloomspark import FilterConfig
-    from bloomspark.fast import build_fast_bloom, with_fast_membership
+    from bloomspark import FilterConfig, build_bloom
+    from bloomspark.fast import with_fast_membership
     from bloomspark.join import bloom_prune_join
     from bloomspark.pipeline import (
         ivf_assign,
@@ -611,21 +611,18 @@ def bench_sf1_queries(spark):
 
     # warm-up outside the timings (same rationale as the sf0.1 block):
     # JVM codegen + the Python worker pool both spawn here, not under s1
-    from bloomspark import build_bloom as _warm_build
-
     warm = spark.range(0, 200_000, 1, nparts).select(
         F.sha2(F.col("id").cast("string"), 256).alias("sha")
     )
     wcfg = FilterConfig.complete(n=200_000, p=0.01, hash_method="XXHash64KM")
-    build_fast_bloom(warm, "sha", wcfg)
-    _warm_build(warm, "sha", wcfg)
+    build_bloom(warm, "sha", wcfg)
 
     fcfg = FilterConfig.complete(n=n_fact, p=0.01, hash_method="XXHash64KM")
     holder = {}
     timed("s1_fast_build_6m", lambda: holder.__setitem__(
-        "bf", build_fast_bloom(fact, "sha", fcfg)))
+        "bf", build_bloom(fact, "sha", fcfg)))
     timed("s2_fast_probe_1m5", lambda: with_fast_membership(
-        probes, "sha", holder["bf"], fcfg).where("member").count())
+        probes, "sha", holder["bf"]).where("member").count())
 
     num_shards = 64
     shcfg = FilterConfig.complete(n=n_fact // num_shards, p=0.01)
@@ -697,11 +694,7 @@ def scaling_worker(cores: int, mode: str = "python") -> None:
     """One scaling measurement in a fresh JVM: the identical CPU-bound
     build job, varying only the core count (same rows, same partitions).
     ``mode='python'`` is the parity-tier build (mapInArrow partials,
-    chained-Murmur3 hashing); ``mode='native'`` is the fast tier
-    (fast.py) — the same 20M-key membership build with ZERO Python
-    workers, isolating whether the 2->8 ceiling is the Arrow hop
-    (native scales) or shared DRAM (native hits it too);
-    ``mode='sharded'`` is the never-collected tier (sharded.py) — the
+    chained-Murmur3 hashing); ``mode='sharded'`` is the never-collected tier (sharded.py) — the
     same keys into 16 per-shard bitsets through the salted (shard,
     salt) shuffle + cogroup merge, the DataFrame-resident shape a
     100-TB filter actually runs, with nothing driver-resident to
@@ -709,7 +702,6 @@ def scaling_worker(cores: int, mode: str = "python") -> None:
     from pyspark.sql import SparkSession, functions as F
 
     from bloomspark import FilterConfig, build_bloom
-    from bloomspark.fast import build_fast_bloom
     from bloomspark.sharded import build_sharded_bloom
 
     spark = (
@@ -723,11 +715,10 @@ def scaling_worker(cores: int, mode: str = "python") -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     nparts = 64  # fixed across levels; >= 2 tasks/core at the big level
-    method = "XXHash64KM" if mode == "native" else SCALING_METHOD
     if mode == "sharded":
         num_shards = 16
         cfg = FilterConfig.complete(
-            n=SCALING_ROWS // num_shards, p=0.01, hash_method=method
+            n=SCALING_ROWS // num_shards, p=0.01, hash_method=SCALING_METHOD
         )
 
         def build_fn(df):
@@ -737,12 +728,13 @@ def scaling_worker(cores: int, mode: str = "python") -> None:
             return int(sh.agg(F.sum("ones")).collect()[0][0])
 
     else:
-        cfg = FilterConfig.complete(n=SCALING_ROWS, p=0.01, hash_method=method)
-        build_fn = (
-            (lambda df: build_fast_bloom(df, "sha", cfg))
-            if mode == "native"
-            else (lambda df: build_bloom(df, "sha", cfg, tree_merge_groups=8))
+        cfg = FilterConfig.complete(
+            n=SCALING_ROWS, p=0.01, hash_method=SCALING_METHOD
         )
+
+        def build_fn(df):
+            return build_bloom(df, "sha", cfg, tree_merge_groups=8)
+
     keys = spark.range(0, SCALING_ROWS, 1, nparts).select(
         F.sha2(F.col("id").cast("string"), 256).alias("sha")
     )
@@ -883,11 +875,6 @@ def main():
         # does not suffer.
         payload["scaling"] = run_scaling(1, 4)
         payload["scaling_2_8"] = run_scaling(2, 8)
-        # the fast tier's legs: no Python worker anywhere, so any
-        # remaining 2->8 shortfall is the box's shared-DRAM ceiling,
-        # not the Arrow hop (round-2 verdict item 7)
-        payload["scaling_fast"] = run_scaling(1, 4, mode="native")
-        payload["scaling_fast_2_8"] = run_scaling(2, 8, mode="native")
         # the never-collected tier's legs: the same build THROUGH the
         # salted (shard, salt) shuffle + per-shard merge — the shape a
         # 100-TB filter actually runs (round-5)

@@ -251,17 +251,14 @@ def _sf1_fact(spark, n_fact=6_000_000):
 
 
 def profile_s1(spark):
-    from bloomspark import FilterConfig
-    from bloomspark.fast import build_fast_bloom, fast_bloom_words
+    from bloomspark import FilterConfig, build_bloom
 
     fact = _sf1_fact(spark)
     fcfg = FilterConfig.complete(n=6_000_000, p=0.01, hash_method="XXHash64KM")
-    print("[s1] fast build 6m phases (single-run each)")
+    print("[s1] XXHash64KM build 6m phases (single-run each)")
     timed(spark, "fact scan (sha2 gen) noop", lambda: noop(fact), best_of=1)
-    timed(spark, "words agg noop",
-          lambda: noop(fast_bloom_words(fact, "sha", fcfg)), best_of=1)
-    timed(spark, "full build_fast_bloom (collect)",
-          lambda: build_fast_bloom(fact, "sha", fcfg), best_of=1)
+    timed(spark, "full build_bloom (collect)",
+          lambda: build_bloom(fact, "sha", fcfg), best_of=1)
 
 
 def profile_s3(spark):

@@ -56,15 +56,7 @@ from .sharded import (build_sharded_bloom, build_sharded_counting,
                       merge_sharded_counting, save_sharded,
                       save_sharded_counting, subtract_sharded_counting,
                       with_sharded_estimated_count, with_sharded_membership)
-from .fast import (
-    blocks_from_bloom,
-    build_fast_bloom,
-    fast_bloom_words,
-    fast_counting_positions,
-    with_fast_estimated_count,
-    with_fast_membership,
-    words_to_blocks,
-)
+from .fast import blocks_from_bloom, with_fast_membership
 from .join import (bloom_prune_join, bloom_semi_filter,
                    sharded_prune_join, sharded_semi_filter)
 from .sources import read_table, source_code_table
@@ -104,13 +96,8 @@ __all__ = [
     "load_sharded_counting",
     "save_sharded",
     "load_sharded",
-    "build_fast_bloom",
-    "fast_bloom_words",
     "with_fast_membership",
-    "words_to_blocks",
     "blocks_from_bloom",
-    "fast_counting_positions",
-    "with_fast_estimated_count",
     "bloom_prune_join",
     "bloom_semi_filter",
     "sharded_prune_join",

@@ -338,10 +338,9 @@ def build_counting(
             f"GiB driver-side counter array (m={config.m}, "
             f"{config.counting_bits}-bit counters), over the "
             f"max_driver_bytes limit of {max_driver_bytes / 2**30:.1f} GiB. "
-            "At this scale keep the counters distributed: "
-            "fast_counting_positions + with_fast_estimated_count, or the "
-            "sharded counting tier "
-            "(build_sharded_counting). Pass max_driver_bytes to raise the "
+            "At this scale keep the counters distributed in the sharded "
+            "counting tier (build_sharded_counting + "
+            "with_sharded_estimated_count). Pass max_driver_bytes to raise the "
             "limit if the driver really has the memory."
         )
     rows = collect_rows(_merged_counting_partials(

@@ -36,19 +36,14 @@ from typing import Optional, Sequence, Tuple, Union
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .fast import (
-    FAST_HASH_METHOD,
-    build_fast_bloom,
-    fast_bloom_words,
-    with_fast_membership,
-)
-from .params import FilterConfig
+from .build import build_bloom
+from .fast import FAST_HASH_METHOD, with_fast_membership
+from .params import FilterConfig, optimal_m
 
 #: Filters at or below this size are collected once to the driver and
 #: broadcast in blocked form (one Arrow collect of <= m/8 bytes);
-#: bigger filters stay a distributed (word, bits) table that is blocked
-#: natively and broadcast straight from the executors — the driver
-#: never holds the bitset.
+#: bigger ones go to the sharded tier (:func:`sharded_semi_filter`),
+#: where the driver never holds a bitset.
 DRIVER_FILTER_MAX_BYTES = 64 << 20
 
 #: Filter sizing used by :func:`bloom_prune_join` when the caller gives
@@ -96,8 +91,8 @@ def bloom_semi_filter(
     n_build: Optional[int] = None,
 ) -> DataFrame:
     """Approximate semi-join: the rows of ``big`` whose ``big_key``
-    *may* appear in ``small[small_key]``, pruned by a fast-tier Bloom
-    filter — zero Python in the probe plan, no shuffle of ``big``.
+    *may* appear in ``small[small_key]``, pruned by an XXHash64KM Bloom
+    filter of the small side's keys.
 
     Guaranteed superset of the exact semi-join (no false negatives);
     overshoots by at most a ``p`` fraction of the non-matching rows.
@@ -112,51 +107,44 @@ def bloom_semi_filter(
     :func:`bloom_prune_join` — whose answer is exact regardless of
     FPP — sizes with :data:`DEFAULT_EXPECTED_N` instead and launches
     no count job.
-    Filters up to :data:`DRIVER_FILTER_MAX_BYTES` are collected once to
-    the driver (<= m/8 bytes, the fast shape); bigger ones stay a
-    (word, bits) table end to end (the never-collected shape).
 
-    Dimensions past the Java-int sizing cap (optimal m > 2^31 at this
-    ``n``/``p``) complete as extended-m configs automatically: the
-    filter stays a distributed words table and the probe switches to
-    the exploded single-join strategy — slower per row than the blocked
-    k-join (BASELINE.md round-4 measurement) but the only shape that
-    exists once the blocked broadcast stops fitting; past ~10^10 build
-    keys prefer the sharded tier outright.
+    The filter's size picks the route.  Up to
+    :data:`DRIVER_FILTER_MAX_BYTES` it is built by ``build_bloom``,
+    collected once (<= m/8 bytes) and probed by
+    :func:`~bloomspark.fast.with_fast_membership`: zero Python in the
+    probe plan, no shuffle of ``big``.  A bigger filter is never
+    collected: :func:`sharded_semi_filter` builds it as 64 shards with
+    the same ``n`` and ``p``, and the big side's keys shuffle once on
+    the shard id (BASELINE.md "Measured decision: one collected build,
+    one never-collected tier").
     """
-    from .params import optimal_m
-
     small_key = small_key if small_key is not None else big_key
-    n = n_build if n_build is not None else small.count()
-    extended = optimal_m(max(int(n), 1), p) > 2**31 - 1
-    config = FilterConfig.complete(
-        n=max(int(n), 1), p=p, hash_method=FAST_HASH_METHOD, extended=extended
-    )
-    if not extended and config.num_bytes <= DRIVER_FILTER_MAX_BYTES:
-        src: Union[DataFrame, object] = build_fast_bloom(small, small_key, config)
-        # saturation signal (round-5 advice): with n_build omitted and a
-        # build side far above the sized n, the filter fills up, the
-        # effective FPP ~ fill^k approaches 1 and the prune silently
-        # becomes pure overhead.  The bitset is already on the driver
-        # here, so the check is one popcount — warn so callers learn to
-        # pass n_build (the answer stays exact either way).
-        fill = src.cardinality() / config.m
-        est_fpp = fill ** config.k
-        if est_fpp > max(10.0 * p, SATURATION_FPP_WARN):
-            import warnings
+    n = max(int(n_build if n_build is not None else small.count()), 1)
+    if optimal_m(n, p) > 8 * DRIVER_FILTER_MAX_BYTES:
+        return sharded_semi_filter(big, big_key, small, small_key, p=p, n_build=n)
+    config = FilterConfig.complete(n=n, p=p, hash_method=FAST_HASH_METHOD)
+    bloom = build_bloom(small, small_key, config)
+    # saturation signal (round-5 advice): with n_build omitted and a
+    # build side far above the sized n, the filter fills up, the
+    # effective FPP ~ fill^k approaches 1 and the prune silently
+    # becomes pure overhead.  The bitset is already on the driver
+    # here, so the check is one popcount — warn so callers learn to
+    # pass n_build (the answer stays exact either way).
+    fill = bloom.cardinality() / config.m
+    est_fpp = fill ** config.k
+    if est_fpp > max(10.0 * p, SATURATION_FPP_WARN):
+        import warnings
 
-            warnings.warn(
-                f"bloom_semi_filter: filter sized for n={config.n} is "
-                f"{fill:.0%} full (effective FPP ~{est_fpp:.2f}, target "
-                f"p={p}); the prune will pass most non-matching rows. "
-                "Pass n_build with the build side's true cardinality.",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-    else:
-        src = fast_bloom_words(small, small_key, config)
+        warnings.warn(
+            f"bloom_semi_filter: filter sized for n={config.n} is "
+            f"{fill:.0%} full (effective FPP ~{est_fpp:.2f}, target "
+            f"p={p}); the prune will pass most non-matching rows. "
+            "Pass n_build with the build side's true cardinality.",
+            RuntimeWarning,
+            stacklevel=2,
+        )
     out_col = "__bloom_prune_member"
-    pruned = with_fast_membership(big, big_key, src, config, out_col=out_col)
+    pruned = with_fast_membership(big, big_key, bloom, out_col=out_col)
     return pruned.where(F.col(out_col)).drop(out_col)
 
 
@@ -236,10 +224,10 @@ def sharded_semi_filter(
     with the filter living as a distributed (shard, bitset) DataFrame
     that is never collected or broadcast.
 
-    This is the prune for the regime where :func:`bloom_semi_filter`
-    stops working: past ~10^10 build keys the optimal bitset is tens of
-    GB — too big to collect to the driver, too big to broadcast, and
-    past 2^46 bits beyond extended-m entirely.  The sharded form sizes
+    This is the prune :func:`bloom_semi_filter` routes to once its
+    filter would pass :data:`DRIVER_FILTER_MAX_BYTES`: past that the
+    bitset is too big to collect to the driver or to broadcast, and
+    past ~10^10 build keys it is tens of GB.  The sharded form sizes
     ``num_shards`` independent bitsets for n/``num_shards`` keys each
     and probes by co-partitioning (sharded.py): both sides shuffle once
     on the shard id, each bitset crosses the wire once per job.  The

@@ -353,9 +353,8 @@ class CounterAccumulator:
     O(m): what keeps the PARTIALS and their tree merge m-free at
     extended m (m > 2^31) — note ``build_counting`` still materializes
     an m-sized driver array at the very end and guards that allocation
-    with ``max_driver_bytes``; only the fully distributed tiers
-    (fast_counting_positions, sharded counting) avoid O(m) driver
-    memory outright.  Same reason the reference's Redis counting tier
+    with ``max_driver_bytes``; only the sharded counting tier avoids
+    O(m) driver memory outright.  Same reason the reference's Redis counting tier
     pipelines sparse position->count maps instead of shipping the
     counter array (redis/CountingBloomFilterRedis.java:55-108).
 

@@ -394,7 +394,6 @@ def streaming_bloom_build(
     *,
     query_name: str = "bloomspark-stream",
     trigger: Optional[dict] = None,
-    use_fast_tier: bool = False,
 ):
     """Maintain a Bloom filter over a stream with foreachBatch.
 
@@ -402,21 +401,8 @@ def streaming_bloom_build(
     OR-merged into ``<checkpoint_dir>/bitset.bin``; the merged filter is
     always loadable via :func:`bloomspark.checkpoint.load`.  Restarts are
     safe: re-adding a batch's keys is idempotent (OR).
-
-    ``use_fast_tier=True`` builds each micro-batch with the JVM-native
-    fast build (fast.py, requires ``hash_method="XXHash64KM"``) — no
-    Python workers per micro-batch; the merged file is byte-compatible
-    either way (the two builds are bit-identical).
     """
     from .build import build_bloom
-
-    if use_fast_tier:
-        from .fast import _require_fast, build_fast_bloom as _fast_build
-
-        # validate NOW: a parity-method config would otherwise only fail
-        # inside foreachBatch on the first micro-batch, surfacing as an
-        # asynchronous streaming-query failure instead of a ValueError
-        _require_fast(config)
 
     os.makedirs(checkpoint_dir, exist_ok=True)
     bits_path = os.path.join(checkpoint_dir, "bitset.bin")
@@ -428,11 +414,7 @@ def streaming_bloom_build(
             json.dump({"config": config.to_dict()}, f)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        bf = (
-            _fast_build(batch_df, col, config)
-            if use_fast_tier
-            else build_bloom(batch_df, col, config)
-        )
+        bf = build_bloom(batch_df, col, config)
         if os.path.exists(bits_path):
             with open(bits_path, "rb") as f:
                 bf.union_inplace(BloomFilter.from_bytes(config, f.read()))
@@ -499,10 +481,8 @@ def _make_dedup_batch_processor(
     rotation/suppression semantics are unit-testable with plain batch
     DataFrames (no live stream, no timing)."""
     from .build import build_bloom
-    from .fast import FAST_HASH_METHOD
     from .probe import with_membership
 
-    fast = config.hash_method == FAST_HASH_METHOD
     os.makedirs(checkpoint_dir, exist_ok=True)
     bits_path = os.path.join(checkpoint_dir, "bitset.bin")
     prev_path = os.path.join(checkpoint_dir, "bitset_prev.bin")
@@ -534,13 +514,11 @@ def _make_dedup_batch_processor(
         # probe BEFORE the in-batch dedup: membership is a pure function
         # of the key, so filtering first is equivalent and the
         # dropDuplicates exchange then carries only the surviving rows.
-        # Both tiers probe via the broadcast-bytes Arrow UDF and build
-        # via the mapInArrow partials: at micro-batch sizes these
+        # Every hash method probes via the broadcast-bytes Arrow UDF and
+        # builds via the mapInArrow partials: at micro-batch sizes these
         # measured 2.3x / 4.3x faster than the k blocked broadcast
-        # joins / the explode+bit_or aggregate (round-7 A/B, 500k-row
-        # batches), and for XXHash64KM the numpy replica is
-        # bit-identical to the native expressions (tests/test_fast.py),
-        # so the emitted rows and the stored generations are unchanged.
+        # joins / a native explode+bit_or aggregate (round-7 A/B,
+        # 500k-row batches).
         if seen is not None:
             mcol = "__dedup_member"
             probed = with_membership(batch_df, col, seen, out_col=mcol)
@@ -566,9 +544,6 @@ def _make_dedup_batch_processor(
             bf = BloomFilter(config)
         _store(bf, bits_path)
 
-    # surface the tier selection (implicit in config.hash_method) so
-    # callers/operators can see which path their stream runs on
-    process_batch.tier = "fast" if fast else "parity"
     return process_batch
 
 
@@ -852,7 +827,6 @@ def _make_sharded_dedup_batch_processor(
         _write_state(state)
         _sweep(state)
 
-    process_batch.tier = "sharded"
     return process_batch
 
 
@@ -932,9 +906,8 @@ def streaming_dedup(
     (``dropDuplicates`` on ``col``), drop rows whose key the
     accumulated filter already contains, append the survivors to
     ``output_dir`` (parquet), then OR-merge the survivors' keys into
-    ``<checkpoint_dir>/bitset.bin``.  The probe and the build run on
-    the fast tier (zero Python) when ``config.hash_method ==
-    "XXHash64KM"``, else on the parity-tier pandas probe.
+    ``<checkpoint_dir>/bitset.bin``.  Every hash method runs the same
+    path: the broadcast-bytes Arrow probe and the mapInArrow build.
 
     Error semantics are one-sided relative to the stream's true first
     occurrences: a true duplicate of an ALREADY-MERGED key is never

@@ -4,7 +4,6 @@ repeat plus a pooled summary.
 
 Usage: python scripts/scaling_repeats.py [repeats] [small] [big] [mode]
 e.g.   python scripts/scaling_repeats.py 5 1 4 python
-       python scripts/scaling_repeats.py 3 1 4 native
 
 Each repeat is bench.py's run_scaling: both legs in fresh taskset-pinned
 JVM subprocesses, best-of-3 minima per leg.  The summary reports the

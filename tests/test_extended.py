@@ -66,39 +66,3 @@ def test_extended_driver_filter_parity():
     other.add_all(["zzz"])
     merged = bf.union(other)
     assert merged.contains("zzz") and merged.contains("a0")
-
-
-def test_extended_fast_tier_never_collected(spark):
-    """Round-4 item 4: the fast tier composes for m > 2^31 WITHOUT ever
-    collecting — fast_bloom_words (distributed build) feeds
-    with_fast_membership (blocked broadcast probe) directly.  At this
-    fill the configured FPP is astronomically small, so membership must
-    equal the exact IN: no false negatives, no false positives."""
-    from bloomspark.fast import build_fast_bloom, fast_bloom_words, with_fast_membership
-
-    cfg = FilterConfig.complete(
-        m=2**33 + 4096, k=5, extended=True, hash_method="XXHash64KM"
-    )
-    keys = spark.range(20_000).select(
-        F.concat(F.lit("key:"), F.col("id").cast("string")).alias("k")
-    ).repartition(4)
-    words = fast_bloom_words(keys, "k", cfg)
-    # positions really exceed the 32-bit cap (sanity: the config is live)
-    assert words.agg(F.max("word")).first()[0] > (2**31) // 64
-
-    probe = spark.range(40_000).select(
-        F.concat(F.lit("key:"), F.col("id").cast("string")).alias("k")
-    )
-    # the extended config selects the exploded probe (the dense blocked
-    # broadcast would be ~512x the set bits at this fill)
-    got = (
-        with_fast_membership(probe, "k", words, cfg)
-        .select("k", "member")
-        .toPandas()
-    )
-    ids = got["k"].str.slice(4).astype(int)
-    assert (got["member"] == (ids < 20_000)).all()
-
-    # the collected form stays impossible, with a pointer to this path
-    with pytest.raises(ValueError, match="extended-m"):
-        build_fast_bloom(keys, "k", cfg)

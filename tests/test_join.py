@@ -68,15 +68,16 @@ def test_duplicate_and_null_keys(spark):
 
 
 def test_distributed_filter_mode(lineitem, urgent, monkeypatch):
-    """Filters over DRIVER_FILTER_MAX_BYTES stay a distributed (word,
-    bits) table: with the limit at 0 every filter takes that path, and
-    the plan shows the native words build instead of a collected
-    bitset's local scan."""
+    """Filters over DRIVER_FILTER_MAX_BYTES go to the sharded tier: with
+    the limit at 0 every filter takes that path, and the plan shows the
+    shard cogroup probe, not a native words build."""
     monkeypatch.setattr("bloomspark.join.DRIVER_FILTER_MAX_BYTES", 0)
     pruned = bloom_prune_join(
         lineitem, urgent, ("l_orderkey", "o_orderkey"), p=0.01
     ).select("l_orderkey", "o_orderkey")
-    assert "bit_or" in pruned._jdf.queryExecution().optimizedPlan().toString()
+    executed = pruned._jdf.queryExecution().executedPlan().toString()
+    assert "FlatMapCoGroupsInArrow" in executed
+    assert "bit_or" not in pruned._jdf.queryExecution().optimizedPlan().toString()
     plain = lineitem.join(
         urgent, lineitem["l_orderkey"] == urgent["o_orderkey"]
     ).select("l_orderkey", "o_orderkey")
@@ -152,14 +153,17 @@ def test_prune_join_equality_property(spark, big_keys, small_keys):
 
 def test_prune_join_auto_extends_past_sizing_cap(spark):
     """A dimension whose optimal m exceeds 2^31 at the requested p must
-    not abort the prune — the config completes as extended-m, the filter
-    stays a distributed words table, and the probe runs the exploded
-    strategy; the result is still exactly the plain join."""
+    not abort the prune — past DRIVER_FILTER_MAX_BYTES the filter goes
+    to the sharded tier (64 shards sized for n/64 keys each); the
+    result is still exactly the plain join.  The oversized n_build is
+    deliberate: ~1.2 GB of shard bitsets, an accepted cost of the
+    sharded route (BASELINE.md "Measured decision: one collected build,
+    one never-collected tier")."""
     big = spark.range(5_000).select(
         (F.col("id") % 1_000).alias("k"), (F.col("id") % 7).alias("v")
     )
     small = spark.range(0, 1_000, 3).select(F.col("id").alias("k"))
-    # n_build forced huge -> optimal m ~ 9.6e9 > 2^31: extended path
+    # n_build forced huge -> optimal m ~ 9.6e9 > 2^31: sharded path
     joined = bloom_prune_join(big, small, "k", n_build=1_000_000_000, p=0.01)
     expected = big.join(small, "k").count()
     assert joined.count() == expected

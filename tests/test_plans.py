@@ -126,40 +126,22 @@ def test_dedup_plans_never_cartesian(spark):
         assert "BroadcastNestedLoopJoin" not in p
 
 
-def test_fast_build_plan_is_pure_jvm(lineitem):
-    """The fast-tier build plan: pruned scan -> native hash projection ->
-    explode -> partial bit_or hash aggregate -> ONE word exchange ->
-    final aggregate.  No Python node of any kind — the whole build stays
-    in whole-stage codegen (the round-2 verdict's #1 ask: keep the
-    100-TB hot path out of the Arrow hop)."""
-    from bloomspark.fast import fast_bloom_words
-
-    cfg = FilterConfig.complete(n=10_000, p=0.01, hash_method="XXHash64KM")
-    p = plan(fast_bloom_words(lineitem, "l_orderkey", cfg))
-    for forbidden in ("MapInArrow", "EvalPython", "FlatMapGroupsInPandas"):
-        assert forbidden not in p
-    assert "xxhash64" in p
-    # map-side combine: a partial bit_or before the exchange
-    assert "partial_bit_or" in p or "partial" in p
-    read_schema = [l for l in p.splitlines() if "ReadSchema" in l][0]
-    assert "l_orderkey" in read_schema and "l_comment" not in read_schema
-
-
 def test_fast_probe_plan_is_pure_jvm_broadcast(spark, lineitem):
-    """The fast-tier probe plan: k broadcast hash joins against ONE
-    shared words broadcast (ReusedExchange), no shuffle, no Python."""
-    from bloomspark.fast import build_fast_bloom, with_fast_membership
+    """The fast-tier probe plan over a build_bloom filter: exactly k
+    joins, all broadcast hash joins against ONE shared blocks broadcast
+    (ReusedExchange), no shuffle, no Python."""
+    from bloomspark import build_bloom
+    from bloomspark.fast import with_fast_membership
 
     cfg = FilterConfig.complete(n=10_000, p=0.01, hash_method="XXHash64KM")
-    bf = build_fast_bloom(lineitem, "l_orderkey", cfg)
-    probed = with_fast_membership(
-        lineitem.select("l_orderkey"), "l_orderkey", bf, cfg
-    )
+    bf = build_bloom(lineitem, "l_orderkey", cfg)
+    probed = with_fast_membership(lineitem.select("l_orderkey"), "l_orderkey", bf)
     p = plan(probed)
     for forbidden in ("MapInArrow", "EvalPython", "Exchange hashpartitioning"):
         assert forbidden not in p
-    assert p.count("BroadcastHashJoin") >= cfg.k
-    # the single words table is broadcast once and reused k-1 times
+    simple = plan(probed, "simple")
+    assert simple.count("BroadcastHashJoin") == simple.count("Join ") == cfg.k
+    # the single blocks table is broadcast once and reused k-1 times
     # (collect() finalizes THIS queryExecution's adaptive plan; count()
     # would execute a sibling plan and leave this one unfinalized)
     probed.collect()
@@ -177,74 +159,6 @@ def test_topk_uses_take_ordered(spark):
     p = plan(brute_force_topk(emb, [float(x) for x in q], k=10))
     assert "TakeOrderedAndProject" in p
     assert "Sort " not in p
-
-
-def test_exploded_probe_plan_no_python_no_nested_loop(spark, lineitem):
-    """The exploded fast probe (extended-m path) stays pure JVM: explode
-    -> ONE shuffled join on word -> hash aggregate -> rid re-join.  No
-    Python node, no nested-loop/cartesian join, and the k-join blocked
-    form's up-to-k broadcasts are gone (at most one broadcast)."""
-    from bloomspark.fast import fast_bloom_words, with_fast_membership
-
-    cfg = FilterConfig.complete(
-        m=2**33 + 64, k=5, extended=True, hash_method="XXHash64KM"
-    )
-    words = fast_bloom_words(lineitem, "l_orderkey", cfg)
-    probed = with_fast_membership(
-        lineitem.select("l_orderkey"), "l_orderkey", words, cfg
-    )
-    p = plan(probed)
-    assert "CartesianProduct" not in p and "BroadcastNestedLoopJoin" not in p
-    for py_node in ("MapInArrow", "ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsInPandas"):
-        assert py_node not in p
-    assert p.count("Generate") >= 1  # the explode
-
-
-def test_fast_probe_shape_follows_config(spark, lineitem):
-    """No argument chooses the fast probe's shape: the same call on a
-    (word, bits) table plans the k broadcast block joins for a
-    non-extended config and the exploded single join (explode of the
-    probe keys, one join on the word, one re-join) for an extended one.
-    with_fast_estimated_count always plans the exploded single join.
-    All three stay pure JVM."""
-    from bloomspark.fast import (
-        fast_bloom_words,
-        fast_counting_positions,
-        with_fast_estimated_count,
-        with_fast_membership,
-    )
-
-    probe = lineitem.select("l_orderkey")
-    cfg = FilterConfig.complete(n=10_000, p=0.01, hash_method="XXHash64KM")
-    xcfg = FilterConfig.complete(
-        m=2**33 + 64, k=5, extended=True, hash_method="XXHash64KM"
-    )
-    ccfg = FilterConfig.complete(
-        n=10_000, p=0.01, counting_bits=16, hash_method="XXHash64KM"
-    )
-    kjoin, expl, counts = (
-        plan(df, "simple")
-        for df in (
-            with_fast_membership(
-                probe, "l_orderkey", fast_bloom_words(lineitem, "l_orderkey", cfg), cfg
-            ),
-            with_fast_membership(
-                probe, "l_orderkey", fast_bloom_words(lineitem, "l_orderkey", xcfg), xcfg
-            ),
-            with_fast_estimated_count(
-                probe, "l_orderkey",
-                fast_counting_positions(lineitem, "l_orderkey", ccfg), ccfg,
-            ),
-        )
-    )
-    assert kjoin.count("BroadcastHashJoin") == kjoin.count("Join ") == cfg.k
-    assert "xxhash64(__fkv" not in kjoin
-    for p in (expl, counts):
-        assert p.count("Join ") == 2
-        assert "explode(array(pmod((pmod(xxhash64(__fkv" in p
-    for p in (kjoin, expl, counts):
-        for py_node in ("MapInArrow", "EvalPython", "FlatMapGroupsIn", "FlatMapCoGroupsIn"):
-            assert py_node not in p
 
 
 def test_sharded_counting_probe_plan_cogroups(spark, lineitem):

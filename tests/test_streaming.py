@@ -274,66 +274,36 @@ def test_ttl_map_migration_matrix(spark):
 
 def test_streaming_incremental_build(spark, tmp_path):
     """rate-source stream -> foreachBatch incremental filter; the merged
-    checkpoint must contain every streamed key."""
-    ckpt = str(tmp_path / "stream_ck")
-    cfg = FilterConfig.complete(n=10_000, p=1e-6)
-    stream = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", "500")
-        .load()
-        .select(F.col("value").cast("string").alias("key"))
-    )
-    q = streaming_bloom_build(stream, "key", cfg, ckpt)
-    try:
-        deadline = time.time() + 30
-        seen = 0
-        while time.time() < deadline:
-            time.sleep(2)
-            if os.path.exists(os.path.join(ckpt, "bitset.bin")):
-                with open(os.path.join(ckpt, "bitset.bin"), "rb") as f:
-                    bf = BloomFilter.from_bytes(cfg, f.read())
-                seen = int(bf.get_estimated_population())
-                if seen >= 100:
-                    break
-    finally:
-        q.stop()
-    assert seen >= 100, f"stream produced only ~{seen} keys"
-    with open(os.path.join(ckpt, "bitset.bin"), "rb") as f:
-        bf = BloomFilter.from_bytes(cfg, f.read())
-    # no false negatives over the streamed prefix
-    assert all(bf.contains(str(i)) for i in range(50))
-
-
-def test_streaming_fast_tier_build(spark, tmp_path):
-    """foreachBatch with use_fast_tier=True: every micro-batch builds
-    JVM-natively (no Python workers) and the merged checkpoint is an
-    ordinary loadable filter with no false negatives."""
-    ckpt = str(tmp_path / "stream_fast_ck")
-    cfg = FilterConfig.complete(n=10_000, p=1e-6, hash_method="XXHash64KM")
-    stream = (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", "500")
-        .load()
-        .select(F.col("value").cast("string").alias("key"))
-    )
-    q = streaming_bloom_build(stream, "key", cfg, ckpt, use_fast_tier=True)
-    try:
-        deadline = time.time() + 30
-        seen = 0
-        while time.time() < deadline:
-            time.sleep(2)
-            if os.path.exists(os.path.join(ckpt, "bitset.bin")):
-                with open(os.path.join(ckpt, "bitset.bin"), "rb") as f:
-                    bf = BloomFilter.from_bytes(cfg, f.read())
-                seen = int(bf.get_estimated_population())
-                if seen >= 100:
-                    break
-    finally:
-        q.stop()
-    assert seen >= 100, f"stream produced only ~{seen} keys"
-    with open(os.path.join(ckpt, "bitset.bin"), "rb") as f:
-        bf = BloomFilter.from_bytes(cfg, f.read())
-    assert all(bf.contains(str(i)) for i in range(50))
+    checkpoint must contain every streamed key, on a parity-tier and on
+    the XXHash64KM hash method alike."""
+    for method in ("Murmur3KirschMitzenmacher", "XXHash64KM"):
+        ckpt = str(tmp_path / f"stream_ck_{method}")
+        cfg = FilterConfig.complete(n=10_000, p=1e-6, hash_method=method)
+        stream = (
+            spark.readStream.format("rate")
+            .option("rowsPerSecond", "500")
+            .load()
+            .select(F.col("value").cast("string").alias("key"))
+        )
+        q = streaming_bloom_build(stream, "key", cfg, ckpt)
+        try:
+            deadline = time.time() + 30
+            seen = 0
+            while time.time() < deadline:
+                time.sleep(2)
+                if os.path.exists(os.path.join(ckpt, "bitset.bin")):
+                    with open(os.path.join(ckpt, "bitset.bin"), "rb") as f:
+                        bf = BloomFilter.from_bytes(cfg, f.read())
+                    seen = int(bf.get_estimated_population())
+                    if seen >= 100:
+                        break
+        finally:
+            q.stop()
+        assert seen >= 100, f"{method}: stream produced only ~{seen} keys"
+        with open(os.path.join(ckpt, "bitset.bin"), "rb") as f:
+            bf = BloomFilter.from_bytes(cfg, f.read())
+        # no false negatives over the streamed prefix
+        assert all(bf.contains(str(i)) for i in range(50)), method
 
 
 def test_streaming_dedup_emits_each_key_once(spark, tmp_path):
@@ -569,32 +539,6 @@ def test_snapshot_clone_isolation_and_cache_bound(spark):
     assert len(ebf._snapshots) <= ExpiringBloomFilter._CACHE_MAX
 
 
-def test_streaming_fast_tier_validates_eagerly(spark, tmp_path):
-    """ADVICE r3: use_fast_tier with a parity-only hash method must fail
-    with an immediate ValueError, not an async streaming-query error."""
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", "1").load()
-    )
-    with pytest.raises(ValueError, match="fast tier requires"):
-        streaming_bloom_build(
-            stream, "value", CFG, str(tmp_path / "ck"), use_fast_tier=True
-        )
-
-
-def test_dedup_processor_surfaces_tier(tmp_path):
-    from bloomspark.streaming import _make_dedup_batch_processor
-
-    fast_cfg = FilterConfig.complete(n=1000, p=0.01, hash_method="XXHash64KM")
-    pb = _make_dedup_batch_processor(
-        "key", fast_cfg, str(tmp_path / "a"), str(tmp_path / "b")
-    )
-    assert pb.tier == "fast"
-    pb2 = _make_dedup_batch_processor(
-        "key", CFG, str(tmp_path / "c"), str(tmp_path / "d")
-    )
-    assert pb2.tier == "parity"
-
-
 def test_streaming_dedup_sharded_matches_driver_path(spark, tmp_path):
     """Round-4 item 5: streaming dedup with never-collected SHARDED
     state — driven through the same batch sequence as the driver-filter
@@ -619,7 +563,6 @@ def test_streaming_dedup_sharded_matches_driver_path(spark, tmp_path):
         "key", shard_cfg, sh_ck, sh_out, num_shards=4,
         rotate_at_population=30,
     )
-    assert sh.tier == "sharded"
 
     def batch(keys):
         return spark.createDataFrame([(k,) for k in keys], "key string")
