@@ -61,20 +61,14 @@ def test_xxh64_matches_spark_native(spark):
 
 
 def test_position_exprs_match_numpy_replica(spark):
-    """Both the Java-int m and an extended m (64-bit positions) agree
-    with the numpy replica."""
     df = spark.createDataFrame([(s,) for s in SAMPLES], "s string")
+    cols = [c.alias(f"p{i}") for i, c in enumerate(fast_position_cols("s", CFG))]
+    got = df.select("s", *cols).collect()
     keys = Keys.from_objects(SAMPLES)
-    xcfg = FilterConfig.complete(
-        m=(1 << 33), k=3, hash_method="XXHash64KM", extended=True
-    )
-    for cfg in (CFG, xcfg):
-        cols = [c.alias(f"p{i}") for i, c in enumerate(fast_position_cols("s", cfg))]
-        got = df.select("s", *cols).collect()
-        exp = positions_xxh64km(keys, cfg.m, cfg.k)
-        by_s = {r["s"]: [r[f"p{i}"] for i in range(cfg.k)] for r in got}
-        for i, s in enumerate(SAMPLES):
-            assert by_s[s] == exp[i].tolist(), repr(s)
+    exp = positions_xxh64km(keys, CFG.m, CFG.k)
+    by_s = {r["s"]: [r[f"p{i}"] for i in range(CFG.k)] for r in got}
+    for i, s in enumerate(SAMPLES):
+        assert by_s[s] == exp[i].tolist(), repr(s)
 
 
 def test_native_probe_agrees_with_all_probe_tiers(spark, orders, customer):
@@ -126,16 +120,35 @@ def test_fast_filter_interop_union_json(spark, orders):
 
 def test_fast_requires_fast_method(spark, orders):
     """The probe reads the filter's own config: a parity-tier method is
-    refused, and so is an extended one, pointing at the sharded tier
-    (a small extended m keeps the bitset cheap here)."""
+    refused."""
     km = FilterConfig.complete(n=100, p=0.01)
     with pytest.raises(ValueError, match="XXHash64KM"):
         with_fast_membership(orders, "o_orderkey", BloomFilter(km))
+
+
+def test_fast_extended_m_words_path(spark):
+    """Extended m (beyond the Java-int cap): the position expressions
+    stay 64-bit and agree with the numpy replica, while a driver bitset
+    of an extended config has no broadcast probe and is refused,
+    pointing at the sharded tier (a small extended m keeps the bitset
+    cheap here)."""
+    xcfg = FilterConfig.complete(
+        m=(1 << 33), k=3, hash_method="XXHash64KM", extended=True
+    )
+    df = spark.createDataFrame([(s,) for s in SAMPLES], "s string")
+    cols = [c.alias(f"p{i}") for i, c in enumerate(fast_position_cols("s", xcfg))]
+    got = df.select("s", *cols).collect()
+    exp = positions_xxh64km(Keys.from_objects(SAMPLES), xcfg.m, xcfg.k)
+    by_s = {r["s"]: [r[f"p{i}"] for i in range(xcfg.k)] for r in got}
+    for i, s in enumerate(SAMPLES):
+        assert by_s[s] == exp[i].tolist(), repr(s)
+    # some position lands past the Java-int range
+    assert exp.max() >= 1 << 31
     small = FilterConfig.complete(
         m=1024, k=3, hash_method="XXHash64KM", extended=True
     )
     with pytest.raises(ValueError, match="sharded"):
-        with_fast_membership(orders, "o_orderkey", BloomFilter(small))
+        with_fast_membership(df, "s", BloomFilter(small))
 
 
 def _shard_counters(shards, cfg):

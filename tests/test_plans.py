@@ -149,6 +149,28 @@ def test_fast_probe_plan_is_pure_jvm_broadcast(spark, lineitem):
     assert executed.count("ReusedExchange") >= cfg.k - 1
 
 
+def test_fast_probe_shape_follows_config(spark, lineitem):
+    """No argument chooses the fast probe's shape: the filter's own
+    config does.  Filters of different k plan exactly that many
+    broadcast block joins, and every plan stays pure JVM."""
+    from bloomspark import build_bloom
+    from bloomspark.fast import with_fast_membership
+
+    probe = lineitem.select("l_orderkey")
+    cfgs = [
+        FilterConfig.complete(n=10_000, p=p, hash_method="XXHash64KM")
+        for p in (0.1, 1e-4)
+    ]
+    assert cfgs[0].k != cfgs[1].k
+    for cfg in cfgs:
+        bf = build_bloom(lineitem, "l_orderkey", cfg)
+        p = plan(with_fast_membership(probe, "l_orderkey", bf), "simple")
+        assert p.count("BroadcastHashJoin") == p.count("Join ") == cfg.k
+        assert "explode(" not in p
+        for py_node in ("MapInArrow", "EvalPython", "FlatMapGroupsIn", "FlatMapCoGroupsIn"):
+            assert py_node not in p
+
+
 def test_topk_uses_take_ordered(spark):
     """brute_force_topk plans TakeOrderedAndProject (a bounded heap per
     partition + merge), never a global sort."""
