@@ -29,42 +29,53 @@ Scale notes (100 TB / 1000-executor design):
 from __future__ import annotations
 
 import time
-from typing import Iterator, Optional
+from typing import Optional
 
-import numpy as np
 import pyarrow as pa
-from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .counting import CountingBloomFilter, counter_dtype
 from .filter import BloomFilter
-from .hashing import Keys
 from .params import FilterConfig
 from .partials import (
     DEFAULT_TREE_MERGE_GROUPS,
-    CounterAccumulator,
-    PositionAccumulator,
+    BloomFeed,
+    CountingFeed,
     add_counting_payload,
     bloom_kernel,
     collect_rows,
     counting_kernel,
-    hash_rows,
+    map_stage1,
     merge_bloom_payloads,
     place_build_input,
     spread_repartition,  # noqa: F401 — re-exported for callers of build
     tree_merge,
-    wrap_fingerprint,
 )
 
-PARTIAL_SCHEMA = (
-    "part_id int, rows bigint, ones bigint, fingerprint bigint, "
-    "t_ms double, kind string, bitset binary"
+PARTIAL_SCHEMA = pa.schema(
+    [
+        ("part_id", pa.int32()),
+        ("rows", pa.int64()),
+        ("ones", pa.int64()),
+        ("fingerprint", pa.int64()),
+        ("t_ms", pa.float64()),
+        ("kind", pa.string()),
+        ("bitset", pa.binary()),
+    ]
 )
 
-COUNTING_PARTIAL_SCHEMA = (
-    "part_id int, rows bigint, nonzero bigint, overflows bigint, "
-    "fingerprint bigint, t_ms double, kind string, counters binary"
+COUNTING_PARTIAL_SCHEMA = pa.schema(
+    [
+        ("part_id", pa.int32()),
+        ("rows", pa.int64()),
+        ("nonzero", pa.int64()),
+        ("overflows", pa.int64()),
+        ("fingerprint", pa.int64()),
+        ("t_ms", pa.float64()),
+        ("kind", pa.string()),
+        ("counters", pa.binary()),
+    ]
 )
 
 
@@ -108,56 +119,6 @@ def reserve_probe_cols(
         )
 
 
-_PARTIAL_PA_SCHEMA = pa.schema(
-    [
-        ("part_id", pa.int32()),
-        ("rows", pa.int64()),
-        ("ones", pa.int64()),
-        ("fingerprint", pa.int64()),
-        ("t_ms", pa.float64()),
-        ("kind", pa.string()),
-        ("bitset", pa.binary()),
-    ]
-)
-
-
-def _partition_builder(config: FilterConfig, new_acc, add, schema: pa.Schema):
-    """mapInArrow generator: ONE partial row per partition — the
-    partial-aggregate step.  Keys never leave Arrow's contiguous UTF-8
-    buffers (zero Python objects per row); each batch's positions feed
-    ``add(acc, positions)`` of one ``new_acc()`` accumulator, whose
-    ``finish()`` -> ``(kind, *stats, payload)`` picks the smaller of
-    the sparse and dense wire forms.  Row layout: ``schema`` =
-    (part_id, rows, *stats, fingerprint, t_ms, kind, payload)."""
-
-    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        t0 = time.time()
-        acc = new_acc()
-        rows = 0
-        fingerprint = np.uint64(0)
-        with np.errstate(over="ignore"):
-            for batch in batches:
-                keys = Keys.from_arrow(batch.column(0))
-                if len(keys) == 0:
-                    continue
-                pos, h1 = hash_rows(keys, config)
-                add(acc, pos)
-                rows += len(keys)
-                fingerprint += h1.sum()
-        kind, *stats, payload = acc.finish()
-        ctx = TaskContext.get()
-        values = [
-            ctx.partitionId() if ctx else -1, rows, *stats,
-            wrap_fingerprint(fingerprint), (time.time() - t0) * 1000.0,
-            kind, payload,
-        ]
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([v], f.type) for v, f in zip(values, schema)], schema=schema
-        )
-
-    return gen
-
-
 def build_partials(df: DataFrame, col: str, config: FilterConfig) -> DataFrame:
     """Per-partition partial bitsets as a DataFrame (the map-side combine).
 
@@ -165,12 +126,7 @@ def build_partials(df: DataFrame, col: str, config: FilterConfig) -> DataFrame:
     ``(part_id, rows, ones, fingerprint, t_ms, kind, bitset)``.
     """
     keyed = df.select(key_column(col).alias("__key"))
-    m, num_bytes = config.m, config.num_bytes
-    gen = _partition_builder(
-        config, lambda: PositionAccumulator(m, num_bytes), PositionAccumulator.add,
-        _PARTIAL_PA_SCHEMA,
-    )
-    return keyed.mapInArrow(gen, schema=PARTIAL_SCHEMA)
+    return map_stage1(keyed, PARTIAL_SCHEMA, BloomFeed(config))
 
 
 def merge_partial_rows(rows, config: FilterConfig) -> BloomFilter:
@@ -194,7 +150,7 @@ def _merged_bloom_partials(
     df, n_parts = place_build_input(df, col, num_partitions)
     return tree_merge(
         build_partials(df, col, config), n_parts, config.num_bytes,
-        bloom_kernel(config), _PARTIAL_PA_SCHEMA,
+        bloom_kernel(config), PARTIAL_SCHEMA,
         tree_merge_threshold, tree_merge_groups,
     )
 
@@ -263,29 +219,14 @@ def build_bloom(
 # ---------------------------------------------------------------------------
 
 
-_COUNTING_PARTIAL_PA_SCHEMA = pa.schema(
-    [
-        ("part_id", pa.int32()),
-        ("rows", pa.int64()),
-        ("nonzero", pa.int64()),
-        ("overflows", pa.int64()),
-        ("fingerprint", pa.int64()),
-        ("t_ms", pa.float64()),
-        ("kind", pa.string()),
-        ("counters", pa.binary()),
-    ]
-)
-
-
 def build_counting_partials(
     df: DataFrame, col: str, config: FilterConfig, weight: int = 1
 ) -> DataFrame:
+    """Per-partition counting partials: one
+    ``(part_id, rows, nonzero, overflows, fingerprint, t_ms, kind,
+    counters)`` row per input partition, each count times ``weight``."""
     keyed = df.select(key_column(col).alias("__key"))
-    gen = _partition_builder(
-        config, CounterAccumulator.factory(config),
-        lambda acc, pos: acc.add(pos, weight), _COUNTING_PARTIAL_PA_SCHEMA,
-    )
-    return keyed.mapInArrow(gen, schema=COUNTING_PARTIAL_SCHEMA)
+    return map_stage1(keyed, COUNTING_PARTIAL_SCHEMA, CountingFeed(config, weight))
 
 
 def _merged_counting_partials(
@@ -304,7 +245,7 @@ def _merged_counting_partials(
     return tree_merge(
         build_counting_partials(df, col, config), n_parts,
         config.m * counter_dtype(config.counting_bits).itemsize,
-        counting_kernel(config, sparse=True), _COUNTING_PARTIAL_PA_SCHEMA,
+        counting_kernel(config, sparse=True), COUNTING_PARTIAL_SCHEMA,
         tree_merge_threshold, tree_merge_groups,
     )
 

@@ -4,10 +4,11 @@ Builds one filter per group (e.g. one per ``repo``) as a DataFrame of
 ``(group, rows, ones, bitset)`` or ``(group, rows, nonzero, counters)``.
 Both builds share one two-phase plan (aggregate before you shuffle):
 
-stage 1: ``mapInArrow`` over the INPUT partitions, one generator for
-         both builds, parametrized by accumulator.  Each Arrow batch is
-         hashed once and split by group with ONE sort (O(rows log
-         rows), not O(groups x rows)); each group's share feeds its own
+stage 1: ``mapInArrow`` over the INPUT partitions with the one
+         stage-1 generator, ``partials.stage1_gen``.  Each Arrow batch
+         is hashed once and split by group (bloom: ONE sort, O(rows log
+         rows), not O(groups x rows); counting: one ``np.unique`` over
+         (group, position) cells); each group's share feeds its own
          accumulator, and the task emits one hybrid sparse/dense
          partial per (input partition, group) — keyed rows never
          shuffle, only partial payloads;
@@ -20,7 +21,7 @@ partials per group.  Inputs that plan as too few partitions
 (single-row-group parquet) are spread once on (group, key-salt)
 (``partials.spread_for_map_side``); ``salt_partitions`` bounds the
 partials per group on that path only.  Memory per task is bounded by
-``_STAGE1_FLUSH_BYTES``: past it the partials flush early and
+``partials._STAGE1_FLUSH_BYTES``: past it the partials flush early and
 accumulation restarts.
 
 The broadcast probes split each batch by group with the same one sort.
@@ -42,131 +43,36 @@ from .filter import BloomFilter, test_positions
 from .hashing import Keys, get_hash_fn
 from .params import FilterConfig
 from .partials import (
-    CounterAccumulator,
-    PositionAccumulator,
+    BloomFeed,
+    CountingFeed,
     bloom_kernel,
     counting_kernel,
-    factorize_groups,
-    group_sort_key,
+    map_stage1,
     merge_groups,
     split_groups,
     spread_for_map_side,
 )
 
 
-#: Per-task budget for live stage-1 accumulator payloads; past it the
-#: accumulated partials flush as an early record batch and accumulation
-#: restarts (stage 2 merges any number of partials per group).  Read on
-#: the driver when a stage-1 generator is built.
-_STAGE1_FLUSH_BYTES = 128 << 20
-
-
-def _split_positions(groups, pos: np.ndarray, m: int):
-    """Bloom batch split: ``(group, rows, (positions,))`` per group of one
-    batch — one stable sort of the rows by group (:func:`split_groups`)."""
-    uniq, order, bounds = split_groups(groups)
-    pos = pos[order]
-    return [
-        (g, hi - lo, (pos[lo:hi],)) for g, lo, hi in zip(uniq, bounds, bounds[1:])
-    ]
-
-
-def _split_position_counts(groups, pos: np.ndarray, m: int):
-    """Counting batch split: ``(group, rows, (positions, counts))`` per
-    group of one batch.  ONE ``np.unique`` over the batch's
-    (group code, position) cells pre-aggregates every group at once —
-    the same pairs ``CounterAccumulator.add`` derives, without its
-    per-group ``np.unique`` call."""
-    codes, uniq = factorize_groups(groups)
-    if len(uniq) * m >= 1 << 63:  # cells would overflow int64
-        return [
-            (g, n, np.unique(p, return_counts=True))
-            for g, n, (p,) in _split_positions(groups, pos, m)
-        ]
-    cells, counts = np.unique(
-        codes.astype(np.int64)[:, None] * m + pos.astype(np.int64),
-        return_counts=True,
-    )
-    bounds = np.searchsorted(cells, np.arange(len(uniq) + 1) * m).tolist()
-    rows = np.bincount(codes, minlength=len(uniq)).tolist()
-    return [
-        (g, n, ((cells[lo:hi] - gi * m).astype(pos.dtype), counts[lo:hi]))
-        for gi, (g, n, lo, hi) in enumerate(zip(uniq, rows, bounds, bounds[1:]))
-    ]
-
-
-def _grouped_stage1_gen(config: FilterConfig, new_acc, add, split, payload_col: str):
-    """mapInArrow generator over (__group, __key) batches of the RAW
-    input partitioning: hashes each batch once, splits it by group
-    (``split``) and feeds each group's share to that group's
-    ``new_acc()`` accumulator (``add(acc, *share)``); emits ONE partial
-    per (partition, group) — the map-side combine.  ``acc.finish()``
-    returns ``(kind, ..., payload)``.  No keyed row ever shuffles; peak
-    memory = one Arrow batch + the live accumulators, bounded by the
-    flush budget, which counts the bytes of every share handed to an
-    accumulator (positions at their hash dtype, plus 8-byte counts)."""
-    m, k, method = config.m, config.k, config.hash_method
-    flush_bytes = _STAGE1_FLUSH_BYTES
-    schema = pa.schema(
-        [
-            ("group", pa.string()),
-            ("rows", pa.int64()),
-            ("kind", pa.string()),
-            (payload_col, pa.binary()),
-        ]
-    )
-
-    def flush(accs):
-        cols = {"group": [], "rows": [], "kind": [], payload_col: []}
-        for g, (acc, rows) in sorted(accs.items(), key=group_sort_key):
-            finished = acc.finish()
-            cols["group"].append(g)
-            cols["rows"].append(rows)
-            cols["kind"].append(finished[0])
-            cols[payload_col].append(finished[-1])
-        return pa.RecordBatch.from_pydict(cols, schema=schema)
-
-    def gen(batches):
-        accs = {}  # group -> [accumulator, rows]
-        pending = 0
-        hash_fn = get_hash_fn(method)
-        for batch in batches:
-            keys = Keys.from_arrow(batch.column(1))
-            if len(keys) == 0:
-                continue
-            pos = hash_fn(keys, m, k)
-            for g, rows, share in split(batch.column(0), pos, m):
-                st = accs.get(g)
-                if st is None:
-                    st = accs[g] = [new_acc(), 0]
-                add(st[0], *share)
-                st[1] += rows
-                pending += sum(a.nbytes for a in share)
-            if pending > flush_bytes:
-                yield flush(accs)
-                accs, pending = {}, 0
-        if accs:
-            yield flush(accs)
-
-    return gen
-
-
 def _build_per_group(
-    df, group_col, key_col, salt_partitions, stage1, kernel, stat_col, payload_col
+    df, group_col, key_col, salt_partitions, feed, kernel, stat_col, payload_col
 ) -> DataFrame:
     """Plan both stages -> (group, rows, <stat_col>, <payload_col>)."""
     keyed = df.select(
-        F.col(group_col).cast("string").alias("__group"),
         key_column(key_col).alias("__key"),
+        F.col(group_col).cast("string").alias("__group"),
     )
     placed = spread_for_map_side(
         keyed, df, F.col("__group"),
         F.pmod(F.xxhash64(F.col("__key")), F.lit(max(salt_partitions, 1))),
     )
-    partials = placed.mapInArrow(
-        stage1,
-        schema=f"group string, rows bigint, kind string, {payload_col} binary",
-    )
+    stage1_schema = pa.schema([
+        ("group", pa.string()),
+        ("rows", pa.int64()),
+        ("kind", pa.string()),
+        (payload_col, pa.binary()),
+    ])
+    partials = map_stage1(placed, stage1_schema, feed, scoped=True, flush=True)
     schema = pa.schema([
         ("group", pa.string()),
         ("rows", pa.int64()),
@@ -189,14 +95,9 @@ def build_bloom_per_group(
     ``salt_partitions`` only matters when the input needs an explicit
     spread (see ``partials.spread_for_map_side``); pre-partitioned
     inputs build map-side with zero row shuffle."""
-    m, num_bytes = config.m, config.num_bytes
-    stage1 = _grouped_stage1_gen(
-        config, lambda: PositionAccumulator(m, num_bytes),
-        PositionAccumulator.add, _split_positions, "bitset",
-    )
     return _build_per_group(
-        df, group_col, key_col, salt_partitions, stage1, bloom_kernel(config),
-        "ones", "bitset",
+        df, group_col, key_col, salt_partitions, BloomFeed(config),
+        bloom_kernel(config), "ones", "bitset",
     )
 
 
@@ -215,13 +116,9 @@ def build_counting_per_group(
     to saturation (final counter = min(true sum, max) under ANY partial
     grouping), so the map-side partials merge to the identical counter
     arrays the row-shuffled build produced."""
-    stage1 = _grouped_stage1_gen(
-        config, CounterAccumulator.factory(config),
-        CounterAccumulator.add_pairs, _split_position_counts, "counters",
-    )
     return _build_per_group(
-        df, group_col, key_col, salt_partitions, stage1, counting_kernel(config),
-        "nonzero", "counters",
+        df, group_col, key_col, salt_partitions, CountingFeed(config),
+        counting_kernel(config), "nonzero", "counters",
     )
 
 

@@ -75,6 +75,11 @@ class Keys:
     def lengths(self) -> np.ndarray:
         return np.diff(self.offsets)
 
+    @property
+    def nbytes(self) -> int:
+        """Bytes of these keys (a sliced view shares a larger buffer)."""
+        return int(self.offsets[-1] - self.offsets[0]) + self.offsets.nbytes
+
     @classmethod
     def from_arrow(cls, arr) -> "Keys":
         """Zero-copy view over a pyarrow string/large_string/binary array."""

@@ -13,6 +13,11 @@ is the only one that knows that protocol:
   the smaller form; every merge reads every kind and refuses others;
 - the merge kernels: OR (bloom), saturating add (counting) and the
   sketch's ``merge_states``;
+- ONE stage-1 generator, :func:`stage1_gen` (applied by
+  :func:`map_stage1`): every build's map side — global, grouped and
+  checkpoint-bucket; bloom, counting and sketch — hashes or decodes each
+  Arrow batch once, splits it by scope and feeds one accumulator per
+  scope;
 - ONE executor-side merge, :func:`merge_groups`:
   ``groupBy(key).applyInArrow`` over ``pa.Table``, used by the tree
   merges, every grouped stage 2 and every shard merge;
@@ -24,18 +29,20 @@ is the only one that knows that protocol:
 
 from __future__ import annotations
 
+import time
 from typing import Optional
 
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+from pyspark import TaskContext
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from .counting import add_saturating, counter_dtype, counter_max
 from .filter import popcount
-from .hashing import get_hash_fn, km_positions_h1, murmur3_32
+from .hashing import Keys, get_hash_fn, km_positions_h1, murmur3_32
 from .params import FilterConfig
 
 # ---------------------------------------------------------------------------
@@ -161,8 +168,8 @@ def split_groups(groups):
 
 
 def group_sort_key(item):
-    # None groups sort last (None is not orderable against str)
-    return (item[0] is None, item[0] or "")
+    # None scopes sort last (None is not orderable against str or int)
+    return (item[0] is None, "" if item[0] is None else item[0])
 
 
 # ---------------------------------------------------------------------------
@@ -182,8 +189,9 @@ def hash_rows(keys, config: FilterConfig):
 
 
 def wrap_fingerprint(total) -> int:
-    """A uint64 fingerprint sum as the non-negative int64 on the wire."""
-    return int(np.uint64(total) % np.uint64(2**63))
+    """A uint64 fingerprint sum (or its exact int) as the non-negative
+    int64 on the wire: the sum mod 2^63."""
+    return int(total) % (1 << 63)
 
 
 #: Dense bool-array scatter is used up to this filter size; beyond it the
@@ -394,6 +402,19 @@ class CounterAccumulator:
         dense_limit = COUNTING_DENSE_ALLOC_LIMIT
         return lambda: cls(config, dense_limit)
 
+    @classmethod
+    def dense_factory(cls, config: FilterConfig):
+        """A no-argument constructor of accumulators that are dense from
+        the start and always finish as ``cdense`` (checkpoint buckets
+        store the counter array)."""
+
+        def new():
+            acc = cls(config)
+            acc.dense = np.zeros(acc.m, dtype=acc.dt)
+            return acc
+
+        return new
+
     def _add_dense(self, upos: np.ndarray, ucnt: np.ndarray) -> None:
         wide = self.dense[upos].astype(np.uint64) + ucnt.astype(np.uint64)
         over = int(np.count_nonzero(wide > self.mx))
@@ -530,6 +551,244 @@ def merge_sketch_payloads(sketch, payloads):
         other = sketch.deserialize(bytes(payload))
         state = other if state is None else sketch.merge_states(state, other)
     return sketch.new_state() if state is None else state
+
+
+# ---------------------------------------------------------------------------
+# Stage 1: the one map-side generator
+# ---------------------------------------------------------------------------
+
+#: Per-task budget for the shares a flushing (grouped) stage 1 hands its
+#: live accumulators; past it the accumulated partials flush as an early
+#: record batch and accumulation restarts (stage 2 merges any number of
+#: partials per scope).  Read on the driver when a generator is built.
+_STAGE1_FLUSH_BYTES = 128 << 20
+
+
+def _position_counts(codes: np.ndarray, n: int, pos: np.ndarray, m: int):
+    """Counting split: ``(positions, counts)`` per scope code of one
+    batch.  ONE ``np.unique`` over the batch's (code, position) cells
+    pre-aggregates every scope at once — the pairs
+    ``CounterAccumulator.add`` derives, without a call per scope."""
+    if n * m >= 1 << 63:  # cells would overflow int64
+        return [np.unique(pos[codes == i], return_counts=True) for i in range(n)]
+    cells, counts = np.unique(
+        codes.astype(np.int64)[:, None] * m + pos.astype(np.int64),
+        return_counts=True,
+    )
+    bounds = np.searchsorted(cells, np.arange(n + 1) * m).tolist()
+    return [
+        ((cells[lo:hi] - i * m).astype(pos.dtype), counts[lo:hi])
+        for i, (lo, hi) in enumerate(zip(bounds, bounds[1:]))
+    ]
+
+
+class BloomFeed:
+    """Stage-1 feed of a bloom build.  A batch's keys are hashed once —
+    with :func:`hash_rows` when the partial carries a fingerprint — and
+    each scope's positions go to its :class:`PositionAccumulator`."""
+
+    #: bloom shares are slices of the positions sorted by scope
+    sorts = True
+
+    def __init__(self, config: FilterConfig):
+        self.config = config
+        m, num_bytes = config.m, config.num_bytes
+        self.new = lambda: PositionAccumulator(m, num_bytes)
+
+    def split(self, values: pa.Array, scopes, fingerprint: bool):
+        """-> ``[(scope, rows, h1 sum, share)]`` of one batch."""
+        config = self.config
+        keys = Keys.from_arrow(values)
+        if fingerprint:
+            pos, h1 = hash_rows(keys, config)
+        else:
+            pos = get_hash_fn(config.hash_method)(keys, config.m, config.k)
+            h1 = None
+        if scopes is None:
+            return [(None, len(keys), 0 if h1 is None else h1.sum(),
+                     self._whole(pos))]
+        codes, uniq = factorize_groups(scopes)
+        rows = np.bincount(codes, minlength=len(uniq))
+        ends = np.cumsum(rows)
+        order = None
+        if self.sorts or h1 is not None:
+            order = np.argsort(codes, kind="stable")
+        fps = [0] * len(uniq) if h1 is None else np.add.reduceat(h1[order], ends - rows)
+        shares = self._shares(codes, len(uniq), pos, order, ends)
+        return list(zip(uniq, rows.tolist(), fps, shares))
+
+    @staticmethod
+    def _whole(pos):
+        return pos
+
+    @staticmethod
+    def _shares(codes, n, pos, order, ends):
+        return np.split(pos[order], ends[:-1])
+
+    @staticmethod
+    def add(acc, pos) -> None:
+        acc.add(pos)
+
+    @staticmethod
+    def finish(acc) -> dict:
+        kind, ones, payload = acc.finish()
+        return {"kind": kind, "ones": ones, "payload": payload}
+
+
+class CountingFeed(BloomFeed):
+    """Stage-1 feed of a counting build: each scope's (position, count)
+    pairs go to its :class:`CounterAccumulator` — one that is dense from
+    the start when ``dense`` (checkpoint buckets store the counter
+    array).  A scoped batch is split by :func:`_position_counts`, with
+    no sort unless the partial carries a fingerprint."""
+
+    sorts = False
+
+    def __init__(self, config: FilterConfig, weight: int = 1, dense: bool = False):
+        self.config, self.weight = config, weight
+        factory = CounterAccumulator.dense_factory if dense else CounterAccumulator.factory
+        self.new = factory(config)
+
+    @staticmethod
+    def _whole(pos):
+        return np.unique(pos.ravel(), return_counts=True)
+
+    def _shares(self, codes, n, pos, order, ends):
+        return _position_counts(codes, n, pos, self.config.m)
+
+    def add(self, acc, pairs) -> None:
+        upos, ucnt = pairs
+        acc.add_pairs(upos, ucnt * self.weight if self.weight != 1 else ucnt)
+
+    @staticmethod
+    def finish(acc) -> dict:
+        kind, nonzero, overflows, payload = acc.finish()
+        return {"kind": kind, "nonzero": nonzero, "overflows": overflows,
+                "payload": payload}
+
+
+def decode_values(arr: pa.Array, numeric: bool):
+    """A sketch's values of one Arrow array: float64 with NULL and NaN
+    dropped (numeric), else ``Keys`` (a NULL key reads as the empty
+    string, as on every hash path)."""
+    if not numeric:
+        return Keys.from_arrow(arr)
+    vals = np.asarray(arr.drop_null(), dtype=np.float64)
+    nan = np.isnan(vals)
+    return vals[~nan] if nan.any() else vals
+
+
+class SketchFeed:
+    """Stage-1 feed of a sketch build: a batch keeps its Arrow values;
+    each scope's share is decoded by :func:`decode_values` and updates
+    that scope's state.  ``rows`` counts the values folded, so NULL and
+    NaN numeric values are not counted."""
+
+    def __init__(self, sketch):
+        self.sketch = sketch
+        self.new = sketch.new_state
+
+    def split(self, values: pa.Array, scopes, fingerprint: bool):
+        if scopes is None:
+            parts = [(None, values)]
+        else:
+            uniq, order, bounds = split_groups(scopes)
+            values = values.take(order)
+            parts = [(g, values.slice(lo, hi - lo))
+                     for g, lo, hi in zip(uniq, bounds, bounds[1:])]
+        out = []
+        for scope, arr in parts:
+            vals = decode_values(arr, self.sketch.numeric)
+            out.append((scope, len(vals), 0, vals))
+        return out
+
+    def add(self, state, vals) -> None:
+        if len(vals):
+            self.sketch.update(state, vals)
+
+    def finish(self, state) -> dict:
+        return {"payload": self.sketch.serialize(state)}
+
+
+def _nbytes(share) -> int:
+    return sum(a.nbytes for a in share) if isinstance(share, tuple) else share.nbytes
+
+
+def stage1_gen(schema: pa.Schema, feed, *, scoped: bool = False, flush: bool = False):
+    """THE map-side generator of every build (``mapInArrow``).
+
+    Input batches carry the values in column 0 and, when ``scoped``, the
+    scope — a group or a checkpoint bucket — in column 1.  ``feed``
+    (:class:`BloomFeed`, :class:`CountingFeed`, :class:`SketchFeed`)
+    prepares each batch once, splits it by scope with one sort and hands
+    each scope's share to that scope's ``feed.new()`` accumulator.  A
+    scope-less build has one scope, its partition id, and never sorts.
+
+    Emits rows of ``schema``, filled by column name: the scope (the
+    schema's first column), ``rows``, ``fingerprint`` (the wrapped h1
+    sum; only a schema with the column pays for h1), ``t_ms`` (the
+    task's time, split evenly over the scopes of one emit) and what
+    ``feed.finish`` returns: ``kind``, the stats, and ``payload``, which
+    fills the schema's last column.  With ``flush`` (grouped builds)
+    the partials emit early whenever the shares handed to live
+    accumulators pass :data:`_STAGE1_FLUSH_BYTES`; otherwise each scope
+    gets one partial per task (a checkpoint bucket's rows all land in
+    one task)."""
+    fingerprint = "fingerprint" in schema.names
+    flush_bytes = _STAGE1_FLUSH_BYTES if flush else None
+    scope_col, payload_col = schema.names[0], schema.names[-1]
+
+    def emit(accs, t0):
+        t_ms = (time.time() - t0) * 1000.0 / len(accs)
+        cols = {name: [] for name in schema.names}
+        for scope, (acc, rows, fp) in sorted(accs.items(), key=group_sort_key):
+            row = feed.finish(acc)
+            row.update({scope_col: scope, payload_col: row.pop("payload"),
+                        "rows": rows, "fingerprint": wrap_fingerprint(fp),
+                        "t_ms": t_ms})
+            for name, col in cols.items():
+                col.append(row[name])
+        return pa.RecordBatch.from_pydict(cols, schema=schema)
+
+    def gen(batches):
+        t0 = time.time()
+        accs = {}  # scope -> [accumulator, rows, h1 sum]
+        if not scoped:
+            ctx = TaskContext.get()
+            part = ctx.partitionId() if ctx else -1
+            accs[part] = [feed.new(), 0, 0]
+        pending = 0
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            scopes = batch.column(1) if scoped else None
+            for scope, rows, fp, share in feed.split(batch.column(0), scopes, fingerprint):
+                key = scope if scoped else part
+                st = accs.get(key)
+                if st is None:
+                    st = accs[key] = [feed.new(), 0, 0]
+                feed.add(st[0], share)
+                st[1] += rows
+                st[2] += int(fp)
+                pending += _nbytes(share)
+            if flush_bytes is not None and pending > flush_bytes:
+                yield emit(accs, t0)
+                accs, pending, t0 = {}, 0, time.time()
+        if accs:
+            yield emit(accs, t0)
+
+    return gen
+
+
+def map_stage1(
+    df: DataFrame, schema: pa.Schema, feed, *, scoped: bool = False, flush: bool = False
+) -> DataFrame:
+    """``df.mapInArrow`` of :func:`stage1_gen`: the partials of a build,
+    with the columns of ``schema``."""
+    return df.mapInArrow(
+        stage1_gen(schema, feed, scoped=scoped, flush=flush),
+        schema=from_arrow_schema(schema),
+    )
 
 
 # ---------------------------------------------------------------------------

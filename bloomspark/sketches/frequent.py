@@ -46,8 +46,10 @@ from __future__ import annotations
 import struct
 
 import numpy as np
+import pyarrow as pa
 
 from ..hashing import Keys, murmur3_32
+from ..partials import merge_sketch_payloads
 
 
 class _FreqState:
@@ -258,27 +260,19 @@ def frequent_topk_per_group(
     (states never reach the driver), one row per (group, top item);
     rank is 1-based in (count desc, item asc) order, the same total
     order :meth:`FrequentItemsSketch.top_k` uses."""
-    import pandas as pd
 
-    def apply(pdf: pd.DataFrame) -> pd.DataFrame:
-        state = None
-        for payload in pdf["payload"]:
-            other = sketch.deserialize(bytes(payload))
-            state = (
-                other if state is None else sketch.merge_states(state, other)
-            )
+    def apply(tbl: pa.Table) -> pa.Table:
+        state = merge_sketch_payloads(sketch, tbl.column("payload").to_pylist())
         rows = sketch.top_k(state, n)
-        return pd.DataFrame(
-            {
-                "group": pdf["group"].iloc[0],
-                "item": [r[0] for r in rows],
-                "count_lower": [r[1] for r in rows],
-                "count_upper": [r[2] for r in rows],
-                "rank": np.arange(1, len(rows) + 1, dtype=np.int64),
-            }
-        )
+        return pa.table({
+            "group": pa.array([tbl.column("group")[0].as_py()] * len(rows), pa.string()),
+            "item": pa.array([r[0] for r in rows], pa.string()),
+            "count_lower": pa.array([r[1] for r in rows], pa.int64()),
+            "count_upper": pa.array([r[2] for r in rows], pa.int64()),
+            "rank": pa.array(np.arange(1, len(rows) + 1, dtype=np.int64)),
+        })
 
-    return grouped.groupBy("group").applyInPandas(
+    return grouped.groupBy("group").applyInArrow(
         apply,
         schema=(
             "group string, item string, count_lower bigint, "

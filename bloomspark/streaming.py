@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .build import build_counting, key_column
+from .checkpoint import write_atomic, write_or_check_meta
 from .counting import CountingBloomFilter
 from .filter import BloomFilter
 from .params import FilterConfig
@@ -386,6 +387,20 @@ class ExpiringBloomFilter:
         return self.ttls.count()
 
 
+def _open_filter_state(checkpoint_dir: str, config: FilterConfig) -> str:
+    """Create or reopen a driver-path filter state directory -> the
+    path of its ``bitset.bin``.  ``config.json`` is written on the first
+    start; a restart must bring a config of the same m, k and hash
+    method, or the stored bits would be read under other positions."""
+    os.makedirs(checkpoint_dir, exist_ok=True)
+    write_or_check_meta(
+        os.path.join(checkpoint_dir, "config.json"), {"config": config.to_dict()},
+        lambda stored: FilterConfig.from_dict(stored["config"]).is_compatible_to(config),
+        "restart with the stored config, or clear the checkpoint directory",
+    )
+    return os.path.join(checkpoint_dir, "bitset.bin")
+
+
 def streaming_bloom_build(
     stream_df: DataFrame,
     col: str,
@@ -404,24 +419,14 @@ def streaming_bloom_build(
     """
     from .build import build_bloom
 
-    os.makedirs(checkpoint_dir, exist_ok=True)
-    bits_path = os.path.join(checkpoint_dir, "bitset.bin")
-    config_path = os.path.join(checkpoint_dir, "config.json")
-    if not os.path.exists(config_path):
-        import json
-
-        with open(config_path, "w") as f:
-            json.dump({"config": config.to_dict()}, f)
+    bits_path = _open_filter_state(checkpoint_dir, config)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         bf = build_bloom(batch_df, col, config)
         if os.path.exists(bits_path):
             with open(bits_path, "rb") as f:
                 bf.union_inplace(BloomFilter.from_bytes(config, f.read()))
-        tmp = bits_path + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(bf.to_bytes())
-        os.replace(tmp, bits_path)
+        write_atomic(bits_path, bf.to_bytes())
 
     writer = (
         stream_df.writeStream.queryName(query_name)
@@ -483,27 +488,14 @@ def _make_dedup_batch_processor(
     from .build import build_bloom
     from .probe import with_membership
 
-    os.makedirs(checkpoint_dir, exist_ok=True)
-    bits_path = os.path.join(checkpoint_dir, "bitset.bin")
+    bits_path = _open_filter_state(checkpoint_dir, config)
     prev_path = os.path.join(checkpoint_dir, "bitset_prev.bin")
-    config_path = os.path.join(checkpoint_dir, "config.json")
-    if not os.path.exists(config_path):
-        import json
-
-        with open(config_path, "w") as f:
-            json.dump({"config": config.to_dict()}, f)
 
     def _load(path):
         if not os.path.exists(path):
             return None
         with open(path, "rb") as f:
             return BloomFilter.from_bytes(config, f.read())
-
-    def _store(bf, path):
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(bf.to_bytes())
-        os.replace(tmp, path)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         cur = _load(bits_path)
@@ -540,9 +532,9 @@ def _make_dedup_batch_processor(
             # current generation restarts empty.  prev is written first:
             # a crash between the two replaces leaves BOTH generations
             # holding the keys (over-suppression, never re-emission).
-            _store(bf, prev_path)
+            write_atomic(prev_path, bf.to_bytes())
             bf = BloomFilter(config)
-        _store(bf, bits_path)
+        write_atomic(bits_path, bf.to_bytes())
 
     return process_batch
 
@@ -633,10 +625,7 @@ def _make_sharded_dedup_batch_processor(
             return json.load(f)
 
     def _write_state(state: dict) -> None:
-        tmp = state_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(state, f)
-        os.replace(tmp, state_path)
+        write_atomic(state_path, json.dumps(state))
 
     def _live_dirs(state: dict) -> set:
         live = set()
@@ -976,22 +965,16 @@ def streaming_sketch_build(
     caveat as any non-idempotent at-least-once sink, documented rather
     than hidden.
     """
-    import json
-
     from .sketches import build_sketch
 
     os.makedirs(checkpoint_dir, exist_ok=True)
     state_path = os.path.join(checkpoint_dir, "state.bin")
-    meta_path = os.path.join(checkpoint_dir, "sketch.json")
-    if not os.path.exists(meta_path):
-        with open(meta_path, "w") as f:
-            json.dump({"sketch": sketch.describe()}, f)
-    else:
-        meta = json.load(open(meta_path))
-        if meta["sketch"] != sketch.describe():
-            raise ValueError(
-                f"checkpoint holds {meta['sketch']}, got {sketch.describe()}"
-            )
+    desc = sketch.describe()
+    write_or_check_meta(
+        os.path.join(checkpoint_dir, "sketch.json"), {"sketch": desc},
+        lambda stored: stored["sketch"] == desc,
+        "restart with the stored sketch, or clear the checkpoint directory",
+    )
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         handle = build_sketch(batch_df, col, sketch)
@@ -999,10 +982,7 @@ def streaming_sketch_build(
         if os.path.exists(state_path):
             with open(state_path, "rb") as f:
                 state = sketch.merge_states(state, sketch.deserialize(f.read()))
-        tmp = state_path + ".tmp"
-        with open(tmp, "wb") as f:
-            f.write(sketch.serialize(state))
-        os.replace(tmp, state_path)
+        write_atomic(state_path, sketch.serialize(state))
 
     writer = (
         stream_df.writeStream.queryName(query_name)

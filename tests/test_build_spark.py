@@ -186,9 +186,8 @@ def test_grouped_builds_identical_across_stage1_flushes(spark, monkeypatch):
     must still equal the driver-side filters byte for byte."""
     import pyarrow as pa
 
-    from bloomspark import grouped
+    from bloomspark import partials
     from bloomspark.hashing import Keys, get_hash_fn
-    from bloomspark.partials import CounterAccumulator, PositionAccumulator
 
     cfg = FilterConfig.complete(n=2_000, p=0.01, counting_bits=16)
     df = spark.range(0, 4_000, 1, 2).select(
@@ -204,23 +203,21 @@ def test_grouped_builds_identical_across_stage1_flushes(spark, monkeypatch):
     assert len(keys_by_group["hot"]) > 0.9 * 4_000
 
     budget = 1 << 10  # far below one 500-row batch of hashed positions
-    monkeypatch.setattr(grouped, "_STAGE1_FLUSH_BYTES", budget)
+    monkeypatch.setattr(partials, "_STAGE1_FLUSH_BYTES", budget)
     # the budget is read when the generator is built: every batch flushes
     batches = pa.Table.from_pydict(
-        {"__group": [g for g in keys_by_group for _ in keys_by_group[g]],
-         "__key": [k for g in keys_by_group for k in keys_by_group[g]]}
+        {"__key": [k for g in keys_by_group for k in keys_by_group[g]],
+         "__group": [g for g in keys_by_group for _ in keys_by_group[g]]}
     ).to_batches(max_chunksize=500)
+    schema = pa.schema([("group", pa.string()), ("rows", pa.int64()),
+                        ("kind", pa.string()), ("payload", pa.binary())])
+
     def stage1_flushes(cfg):
         return [
-            len(list(grouped._grouped_stage1_gen(cfg, new_acc, add, split, col)(
+            len(list(partials.stage1_gen(schema, feed, scoped=True, flush=True)(
                 iter(batches)
             )))
-            for new_acc, add, split, col in (
-                (lambda: PositionAccumulator(cfg.m, cfg.num_bytes),
-                 PositionAccumulator.add, grouped._split_positions, "bitset"),
-                (lambda: CounterAccumulator(cfg), CounterAccumulator.add_pairs,
-                 grouped._split_position_counts, "counters"),
-            )
+            for feed in (partials.BloomFeed(cfg), partials.CountingFeed(cfg))
         ]
 
     assert stage1_flushes(cfg) == [len(batches)] * 2 and len(batches) >= 8
@@ -233,9 +230,12 @@ def test_grouped_builds_identical_across_stage1_flushes(spark, monkeypatch):
     assert get_hash_fn("Murmur3")(
         Keys.from_objects(["x"]), cfg64.m, cfg64.k
     ).dtype == np.int64
-    monkeypatch.setattr(grouped, "_STAGE1_FLUSH_BYTES", 500 * cfg64.k * 6)
+    monkeypatch.setattr(partials, "_STAGE1_FLUSH_BYTES", 500 * cfg64.k * 6)
     assert stage1_flushes(cfg64) == [len(batches)] * 2
-    monkeypatch.setattr(grouped, "_STAGE1_FLUSH_BYTES", budget)
+    # without flush a scope keeps one partial per task
+    assert len(list(partials.stage1_gen(schema, partials.BloomFeed(cfg64),
+                                        scoped=True)(iter(batches)))) == 1
+    monkeypatch.setattr(partials, "_STAGE1_FLUSH_BYTES", budget)
 
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "500")
     try:

@@ -114,3 +114,73 @@ def test_counting_checkpoint_resume(spark, lineitem, tmp_path):
     exact = lineitem.groupBy("l_partkey").count().collect()
     for r in exact[:30]:
         assert loaded.get_estimated_count(str(r["l_partkey"])) == r["count"]
+
+
+def test_counting_checkpoint_resumes_buckets_without_overflows(spark, lineitem, tmp_path):
+    """Buckets written before the ``overflows`` column existed (the
+    column dropped from the stored parquet) still resume to the cold
+    counters; their missing overflow count reads as 0, so the resumed
+    count is the cold checkpoint's less those buckets' stored clamps."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from bloomspark import build_counting, build_counting_checkpointed
+
+    cfg = FilterConfig.complete(n=200, p=0.01, counting_bits=2)
+    d = str(tmp_path / "cck")
+    half = lineitem.where(
+        F.pmod(F.xxhash64(F.col("l_partkey").cast("string")), F.lit(8)) < 4
+    )
+    assert build_counting_checkpointed(
+        half, "l_partkey", cfg, d, num_buckets=8
+    ).overflow_count > 0
+    parts = os.path.join(d, "partials")
+    for name in os.listdir(parts):
+        if name.endswith(".parquet"):
+            path = os.path.join(parts, name)
+            pq.write_table(pq.read_table(path).drop_columns(["overflows"]), path)
+            # the local filesystem's checksum sidecar no longer matches
+            os.remove(os.path.join(parts, f".{name}.crc"))
+
+    resumed = build_counting_checkpointed(lineitem, "l_partkey", cfg, d, num_buckets=8)
+    assert resumed.to_bytes() == build_counting(lineitem, "l_partkey", cfg).to_bytes()
+    stored = spark.read.option("mergeSchema", "true").parquet(parts).toArrow()
+    assert {b for b, o in zip(stored["bucket"].to_pylist(),
+                              stored["overflows"].to_pylist()) if o is None} == {0, 1, 2, 3}
+
+    cold_dir = str(tmp_path / "cold")
+    cold = build_counting_checkpointed(lineitem, "l_partkey", cfg, cold_dir, num_buckets=8)
+    cold_rows = spark.read.parquet(os.path.join(cold_dir, "partials")).toArrow()
+    dropped = sum(o for b, o in zip(cold_rows["bucket"].to_pylist(),
+                                    cold_rows["overflows"].to_pylist()) if b < 4)
+    assert dropped > 0
+    assert resumed.to_bytes() == cold.to_bytes()
+    assert resumed.overflow_count == cold.overflow_count - dropped
+
+
+def test_checkpoint_files_written_atomically(spark, orders, tmp_path, monkeypatch):
+    """A write that dies before its rename leaves the previous
+    ``bitset.bin`` whole (``load`` zero-pads a short file, which would
+    read as false negatives) and no temp file behind."""
+    from pyspark.sql import functions as F
+
+    d = str(tmp_path / "ck")
+    partial_input = orders.where(
+        F.pmod(F.xxhash64(F.col("o_orderkey").cast("string")), F.lit(8)) < 3
+    )
+    before = build_bloom_checkpointed(partial_input, "o_orderkey", CFG, d, num_buckets=8)
+    bits_path = os.path.join(d, "bitset.bin")
+
+    def killed(src, dst):
+        raise OSError("killed before rename")
+
+    monkeypatch.setattr(os, "replace", killed)
+    with pytest.raises(OSError, match="killed"):
+        build_bloom_checkpointed(orders, "o_orderkey", CFG, d, num_buckets=8)
+    monkeypatch.undo()
+    with open(bits_path, "rb") as f:
+        assert f.read() == before.to_bytes()
+    assert load(d) == before
+    assert not [n for n in os.listdir(d) if n.endswith(".tmp")]
+    full = build_bloom_checkpointed(orders, "o_orderkey", CFG, d, num_buckets=8)
+    assert full == build_bloom(orders, "o_orderkey", CFG) != before

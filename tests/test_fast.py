@@ -191,23 +191,40 @@ def test_fast_estimated_count_probe(spark, lineitem):
     ).first()["est_count"] == 0
 
 
-def test_fast_counting_saturation(spark):
+def test_fast_counting_saturation(spark, tmp_path):
     """Counter width holds on every counting path of the XXHash64KM
     method: nine adds of one key into 2-bit counters read 3 from the
-    collected build, from the sharded table, and from the sharded table
-    after an empty removal."""
+    collected build, from the sharded table, from the sharded table
+    after an empty removal, and from the checkpointed build and its
+    resume.  The checkpoint keeps the clamps its buckets counted: the
+    resume reports the cold build's overflow count, and on one input
+    partition (rows cut into partials the same way) so does
+    ``build_counting``."""
+    from bloomspark.checkpoint import build_counting_checkpointed
+
     cfg = FilterConfig.complete(m=64, k=1, counting_bits=2,
                                 hash_method="XXHash64KM")
     df = spark.createDataFrame([("x",)] * 9, "s string")
     probe = spark.createDataFrame([("x",)], "s string")
     cbf = build_counting(df, "s", cfg)
     assert cbf._overflows > 0
+    ck = str(tmp_path / "ck")
+    cold = build_counting_checkpointed(df, "s", cfg, ck, num_buckets=4)
+    resumed = build_counting_checkpointed(df, "s", cfg, ck, num_buckets=4)
+    assert resumed.overflow_count == cold.overflow_count > 0
+    one = df.coalesce(1)
+    assert build_counting_checkpointed(
+        one, "s", cfg, str(tmp_path / "ck1"), num_buckets=4
+    ).overflow_count == build_counting(one, "s", cfg).overflow_count == 1
     shards = build_sharded_counting(df, "s", cfg, num_shards=1)
     removed = subtract_sharded_counting(
         shards, build_sharded_counting(df.limit(0), "s", cfg, num_shards=1), cfg
     )
     got = [
-        with_estimated_count(probe, "s", cbf).first()["est_count"],
+        *(
+            with_estimated_count(probe, "s", f).first()["est_count"]
+            for f in (cbf, cold, resumed)
+        ),
         *(
             with_sharded_estimated_count(
                 probe, "s", t, cfg, num_shards=1
@@ -215,7 +232,7 @@ def test_fast_counting_saturation(spark):
             for t in (shards, removed)
         ),
     ]
-    assert got == [3, 3, 3]
+    assert got == [3, 3, 3, 3, 3]
 
 
 def test_fast_probe_null_keys(spark):

@@ -291,13 +291,18 @@ def test_partial_merges_plan_arrow_only(spark):
     """Every executor-side partial merge goes through the one Arrow
     routine (partials.merge_groups): with the tree merge forced, the
     bloom, counting and sketch builds merge P -> G -> 1 (two
-    FlatMapGroupsInArrow), and the grouped sketch stage 2, both shard
-    merges and the population estimates of a non-canonical (unioned)
-    table plan FlatMapGroupsInArrow — none of them
-    FlatMapGroupsInPandas."""
+    FlatMapGroupsInArrow), and the grouped sketch stage 2, the
+    per-group sketch evaluations, both shard merges and the population
+    estimates of a non-canonical (unioned) table plan
+    FlatMapGroupsInArrow — none of them FlatMapGroupsInPandas."""
     from bloomspark import build, sharded
     from bloomspark.partials import bloom_kernel, counting_kernel
-    from bloomspark.sketches import build_sketch_per_group
+    from bloomspark.sketches import (
+        FrequentItemsSketch,
+        build_sketch_per_group,
+        frequent_topk_per_group,
+        sketch_values_per_group,
+    )
     from bloomspark.sketches.engine import _merged_sketch_partials
 
     df = spark.range(0, 1_000, 1, 4).select(
@@ -316,8 +321,13 @@ def test_partial_merges_plan_arrow_only(spark):
         "build_sketch": _merged_sketch_partials(
             df, "k", hll, tree_merge_threshold=1),
     }
+    grouped_hll = build_sketch_per_group(df, "g", "k", hll)
+    freq = FrequentItemsSketch(k=16)
     merges = {
-        "build_sketch_per_group": build_sketch_per_group(df, "g", "k", hll),
+        "build_sketch_per_group": grouped_hll,
+        "sketch_values_per_group": sketch_values_per_group(grouped_hll, hll),
+        "frequent_topk_per_group": frequent_topk_per_group(
+            build_sketch_per_group(df, "g", "k", freq), freq, 3),
         "merge_sharded": sharded.merge_sharded(sb, sb),
         "merge_sharded_counting": sharded.merge_sharded_counting(sc, sc, ccfg),
         "estimated_population_sharded": sharded._shard_set_counts(
@@ -334,6 +344,37 @@ def test_partial_merges_plan_arrow_only(spark):
         assert "FlatMapGroupsInArrow" in top, name
         if name in trees:
             assert p.count("FlatMapGroupsInArrow") == 2, name
+
+
+def test_checkpoint_bucket_plans_exchange_then_map(spark, tmp_path, monkeypatch):
+    """The checkpointed bloom, counting and sketch builds each plan their
+    bucket partials as Exchange(hashpartitioning(__bucket)) -> ONE
+    MapInArrow (the one stage-1 generator), with no Python eval node."""
+    from bloomspark import checkpoint
+    from bloomspark.sketches import build_sketch_checkpointed
+
+    written = []
+    stage1 = checkpoint.map_stage1
+
+    def capture(*args, **kwargs):
+        written.append(stage1(*args, **kwargs))
+        return written[-1]
+
+    monkeypatch.setattr(checkpoint, "map_stage1", capture)
+    df = spark.range(0, 1_000, 1, 4).select(F.col("id").cast("string").alias("k"))
+    ccfg = FilterConfig.complete(n=1_000, p=0.01, counting_bits=4)
+    checkpoint.build_bloom_checkpointed(df, "k", CFG, str(tmp_path / "b"), num_buckets=4)
+    checkpoint.build_counting_checkpointed(df, "k", ccfg, str(tmp_path / "c"), num_buckets=4)
+    build_sketch_checkpointed(df, "k", HyperLogLog(p=10), str(tmp_path / "s"), num_buckets=4)
+    assert len(written) == 3
+    for built in written:
+        p = plan(built, "simple")
+        assert "EvalPython" not in p and "MapInPandas" not in p, p
+        nodes = [l.strip(" +-:") for l in p.splitlines()
+                 if "MapInArrow" in l or "Exchange" in l]
+        assert len(nodes) == 2, p
+        assert nodes[0].startswith("MapInArrow"), p
+        assert nodes[1].startswith("Exchange hashpartitioning(__bucket"), p
 
 
 def test_cogroups_plan_arrow(spark):

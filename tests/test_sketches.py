@@ -326,6 +326,30 @@ def test_grouped_sketch_null_groups(spark):
     assert abs(got[None] - 30) / 30 <= 3 * hll.standard_error()
 
 
+def test_sketch_rows_count_folded_values(spark, tmp_path):
+    """``rows`` is the number of values folded into the state: on a
+    numeric column with 25 NULLs in 100 rows the global, per-group and
+    checkpointed builds all read 75, and every state equals the build
+    over the 75 non-null rows."""
+    from bloomspark.sketches import build_sketch_per_group
+
+    df = spark.range(0, 100, 1, 3).select(
+        (F.col("id") % 3).cast("string").alias("g"),
+        F.when(F.col("id") % 4 == 0, F.lit(None))
+        .otherwise(F.col("id").cast("double")).alias("v"),
+    )
+    kll = KLLSketch()
+    glob = build_sketch(df, "v", kll)
+    grouped = build_sketch_per_group(df, "g", "v", kll).collect()
+    ck = build_sketch_checkpointed(df, "v", kll, str(tmp_path / "ck"), num_buckets=4)
+    assert glob.rows == sum(r["rows"] for r in grouped) == ck.rows == 75
+    assert sum(p["rows"] for p in glob.partials) == 75
+    assert ck.quantile(0.0) == glob.quantile(0.0) == 1.0
+    assert kll.serialize(glob.state) == kll.serialize(
+        build_sketch(df.where(F.col("v").isNotNull()), "v", kll).state
+    )
+
+
 # --- Theta (KMV) sketch: set-operation cardinalities ------------------
 
 

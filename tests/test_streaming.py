@@ -737,6 +737,33 @@ def test_sharded_dedup_rejects_mismatched_restart(spark, tmp_path):
         bad_cfg(df, 1)
 
 
+def test_driver_state_rejects_mismatched_restart(spark, tmp_path):
+    """Restarting the driver-path stream build or dedup over a state
+    directory saved under another hash method at the same m must raise
+    (the stored bits would be read under other positions), while a
+    restart with the stored config reopens the state."""
+    from bloomspark.streaming import _make_dedup_batch_processor
+
+    cfg = FilterConfig.complete(m=1 << 14, k=5)
+    md5 = FilterConfig.complete(m=1 << 14, k=5, hash_method="MD5")
+    ck, out = str(tmp_path / "ck"), str(tmp_path / "out")
+    df = spark.createDataFrame([(f"k{i}",) for i in range(50)], "key string")
+    _make_dedup_batch_processor("key", cfg, ck, out)(df, 0)
+    with pytest.raises(ValueError, match="config.json"):
+        _make_dedup_batch_processor("key", md5, ck, out)
+    _make_dedup_batch_processor("key", cfg, ck, out)(df, 1)
+    assert spark.read.parquet(out).count() == 50
+
+    stream = (
+        spark.readStream.format("rate").option("rowsPerSecond", "10").load()
+        .select(F.col("value").cast("string").alias("key"))
+    )
+    bloom_ck = str(tmp_path / "bloom_ck")
+    streaming_bloom_build(stream, "key", cfg, bloom_ck).stop()
+    with pytest.raises(ValueError, match="config.json"):
+        streaming_bloom_build(stream, "key", md5, bloom_ck)
+
+
 def test_sharded_dedup_rejects_uri_checkpoint_dir(tmp_path):
     """ADVICE r4: URI-schemed checkpoint_dir fails fast with a clear
     message instead of dying inside os.path manipulation."""
